@@ -22,6 +22,19 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def driver_memory(host_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` when set,
+    else 3/8 of host RAM (at least 1 GiB) — the share the former fixed
+    48g default was of the 128 GiB host it was sized on; a fixed 48g
+    exceeds the RAM of smaller hosts."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    if host_bytes is None:
+        host_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, host_bytes // 2**20 * 3 // 8)}m"
+
+
 def get_spark(
     app_name: str = "golden-horse-spark",
     master: str | None = None,
@@ -57,7 +70,7 @@ def get_spark(
         )
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")

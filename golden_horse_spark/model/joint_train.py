@@ -53,22 +53,6 @@ def bies_labels(words: Sequence[str]) -> List[str]:
     return out
 
 
-def read_cws_corpus(path, max_len: int = 80) -> List[Sentence]:
-    """Space-segmented lines → (chars, BIES labels), len-capped (the
-    reference's icwb maxlen filter role)."""
-    out: List[Sentence] = []
-    with open(path, encoding="utf-8", errors="surrogatepass") as f:
-        for line in f:
-            words = line.split()
-            if not words:
-                continue
-            chars = [c for w in words for c in w]
-            if not (2 <= len(chars) <= max_len):
-                continue
-            out.append((chars, bies_labels(words)))
-    return out
-
-
 # ---------------------------------------------------------------- gradients
 
 

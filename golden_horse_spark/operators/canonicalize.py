@@ -53,7 +53,9 @@ def _driver_union_find(spark, e2: DataFrame, dtype) -> DataFrame | None:
     each set (union links the larger root under the smaller, so every
     root is its set's minimum — the exact label the distributed
     hash-to-min rounds converge to). Returns None when the edge list
-    contains NULL endpoints (fall back to distributed semantics)."""
+    contains NULL endpoints (fall back to distributed semantics) — only
+    reachable with a caller's ``num_edges`` hint, since the probe in
+    ``connected_components`` rules NULLs out before collecting."""
     import pandas as pd
 
     pdf = e2.toPandas()  # Arrow-accelerated collect
@@ -112,8 +114,10 @@ def connected_components(
     500k; 0 disables) the edge list is collected and solved with
     union-find on the driver — identical labels (property-tested), no
     per-round job waves. Pass ``num_edges`` when the caller already
-    knows the count (skips the probe); otherwise a bounded
-    ``limit(n+1).count()`` probe decides. Dup-pair / alias graphs are
+    knows the count (skips the probe); otherwise one bounded
+    ``limit(n+1)`` aggregate decides, returning the edge count and
+    whether any endpoint is NULL — a NULL-endpoint graph takes the
+    distributed rounds without collecting. Dup-pair / alias graphs are
     tiny islands even at corpus scale, so production runs mostly take
     the fast path too; graph-scale inputs exceed the cap and run the
     distributed hash-to-min rounds below.
@@ -123,10 +127,16 @@ def connected_components(
     s_type = edges.schema[src].dataType
     d_type = edges.schema[dst].dataType
     if lim > 0 and s_type == d_type and s_type.simpleString() in _LOCAL_CC_TYPES:
-        n = num_edges
+        n, has_null = num_edges, False
         if n is None:
-            n = edges.select(src, dst).limit(lim + 1).count()
-        if n <= lim:
+            # one action; when n <= lim the limit keeps every edge, so
+            # the NULL flag is exact exactly when it matters
+            probe = edges.select(src, dst).limit(lim + 1).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max(F.col(src).isNull() | F.col(dst).isNull()).alias("null"),
+            ).first()
+            n, has_null = probe["n"], bool(probe["null"])
+        if n <= lim and not has_null:
             out = _driver_union_find(spark, edges.select(src, dst), s_type)
             if out is not None:
                 return out

@@ -333,25 +333,6 @@ def simhash(
     return g.select("doc_id", sh.cast("long").alias("simhash"))
 
 
-def simhash_dup_pairs(
-    docs: DataFrame, text_col: str = "text", bits: int = 64,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """Exact-simhash collision pairs (hamming distance 0); for
-    hamming > 0 use :func:`simhash_near_pairs`."""
-    s = simhash(docs, text_col, bits, hash_fn)
-    l, r = s.alias("l"), s.alias("r")
-    return (
-        l.join(r, F.col("l.simhash") == F.col("r.simhash"))
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.col("l.simhash").alias("simhash"),
-        )
-    )
-
-
 def simhash_near_pairs(
     docs: DataFrame,
     text_col: str = "text",

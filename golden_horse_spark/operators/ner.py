@@ -258,7 +258,14 @@ def extract_mentions_global_dedup(
     every duplicate. The join key is ``xxhash64(text)`` so the shuffle
     carries 8-byte keys instead of full strings (collision-safe enough at
     64 bits for dedup-of-compute; outputs still carry the real text).
-    Output is identical to ``extract_mentions`` (tested)."""
+    Output is identical to ``extract_mentions`` (tested).
+
+    The distinct texts are hash-repartitioned on ``text_key`` to
+    ``spark.sql.shuffle.partitions`` before the kernel. The kernel's
+    cost is per sentence, not per byte, while AQE sizes the distinct's
+    shuffle by bytes and would coalesce a corpus of short sentences into
+    a single kernel task; AQE never coalesces a repartition with an
+    explicit partition count, so every core runs the kernel."""
     from ..model.evaluation import bio_spans
 
     per_text_schema = StructType(
@@ -280,7 +287,10 @@ def extract_mentions_global_dedup(
     # string buffer and therefore planned as Sort+SortAggregate twice
     # over every sentence text; a no-aggregate distinct is a plain
     # HashAggregate — no sorts
-    distinct = keyed.select("text_key", "text").distinct()
+    n = int(sentences.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    distinct = (
+        keyed.select("text_key", "text").distinct().repartition(n, "text_key")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w = _load_weights(weights_path)

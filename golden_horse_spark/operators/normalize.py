@@ -105,8 +105,3 @@ def rewrite_urls(text: str) -> str:
 
 def rewrite_urls_col(col: Column) -> Column:
     return F.regexp_replace(col, URL_PATTERN, "URL")
-
-
-def escape_colon_col(col: Column) -> Column:
-    """Feature-name escape (weiboNER_features.py:111-120) as a column op."""
-    return F.replace(col, F.lit(":"), F.lit("__COLON__"))

@@ -1,5 +1,5 @@
 """Text-analysis operators for large-scale training-data pipelines:
-language-ID, quality scoring, token counting, document fingerprinting.
+quality scoring, token counting, document fingerprinting.
 
 All are pure Column expressions (JVM-side, whole-stage codegen) — no
 Python UDFs in the hot path. Each has an ANSI-SQL oracle twin in
@@ -13,12 +13,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# Tiny multilingual stopword sets for the n-gram/lexicon language heuristic.
-STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it", "that")
-STOPWORDS_ES = ("el", "la", "de", "que", "y", "en", "un", "una", "es")
-STOPWORDS_DE = ("der", "die", "das", "und", "ist", "ein", "eine", "zu", "den")
-STOPWORDS_FR = ("le", "la", "de", "et", "un", "une", "est", "que", "dans")
 
 
 def tokens_col(text: Column) -> Column:
@@ -48,13 +42,6 @@ def hanzi_ratio(text: Column) -> Column:
     )
 
 
-def stopword_ratio(text: Column, stopwords=STOPWORDS_EN) -> Column:
-    toks = tokens_col(F.lower(text))
-    n = F.size(toks)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return F.when(n == 0, 0.0).otherwise(hits / n)
-
-
 def punct_ratio(text: Column) -> Column:
     p = F.length(F.regexp_replace(text, "[^.,;:!?，。；：！？]", ""))
     return F.when(F.length(text) == 0, 0.0).otherwise(p / F.length(text))
@@ -73,43 +60,10 @@ def quality_score(text: Column) -> Column:
     return F.round(length_ok + punct_ok + wl_ok, 2)
 
 
-def lang_id(text: Column) -> Column:
-    """Lexicon/char-class language heuristic: hanzi ratio → zh, else the
-    stopword set with the highest hit ratio (en/es/de/fr), else 'unk'."""
-    scores = {
-        "en": stopword_ratio(text, STOPWORDS_EN),
-        "es": stopword_ratio(text, STOPWORDS_ES),
-        "de": stopword_ratio(text, STOPWORDS_DE),
-        "fr": stopword_ratio(text, STOPWORDS_FR),
-    }
-    best = None
-    for lang, s in scores.items():
-        cand = F.struct(s.alias("s"), F.lit(lang).alias("l"))
-        best = cand if best is None else F.when(cand["s"] > best["s"], cand).otherwise(best)
-    return (
-        F.when(hanzi_ratio(text) > 0.3, "zh")
-        .when(best["s"] > 0.0, best["l"])
-        .otherwise("unk")
-    )
-
-
 def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: md5 of the whitespace-collapsed
     lowercased text (portable across engines)."""
     return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
-
-
-def analyze_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return docs.select(
-        "doc_id",
-        token_count(t).alias("n_tokens"),
-        F.round(hanzi_ratio(t), 4).alias("hanzi_ratio"),
-        F.round(punct_ratio(t), 4).alias("punct_ratio"),
-        quality_score(t).alias("quality"),
-        lang_id(t).alias("pred_lang"),
-        fingerprint(t).alias("fp"),
-    )
 
 
 def tfidf_top_terms(

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
 TRIPLE_COLS = ["subj", "pred", "obj", "doc_id", "part"]
 
 

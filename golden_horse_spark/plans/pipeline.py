@@ -23,9 +23,12 @@ completion record and are filter-pruned away on restart, so a SIGKILL
 mid-write costs only the unfinished partitions (see ``StageWriter``).
 
 ``metrics`` is itself a table: one row per (stage, partition) with row
-counts — the per-partition lineage the rule requires, computed with
-``spark_partition_id()`` for unpartitioned stages and with the
-partition-column value for the partitioned triples table.
+counts — the per-partition lineage the rule requires. For unpartitioned
+stages the partition is the WRITE TASK and its count is read on the
+driver from the footer of the ``part-NNNNN-*`` file that task wrote, so
+each such stage commit costs exactly one Spark job (the write); for the
+partitioned triples table it is the partition-column value, counted by
+a partition-pruned query after the write.
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable, Dict, Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -102,6 +106,25 @@ class PipelineConfig:
     profile: bool = False
 
 
+_PART_FILE = re.compile(r"part-(\d+)-")
+
+
+def _footer_rows(data_path: Path) -> Dict[str, int]:
+    """Row counts per write task of an unpartitioned parquet directory,
+    read on the driver from the footers of its ``part-NNNNN-*`` files
+    (``NNNNN`` is the index of the task that wrote the file, i.e. the
+    stage's physical partitioning as written). Footers already carry the
+    counts, so lineage costs no Spark job — as an Iceberg commit records
+    ``record_count`` per data file from the write itself."""
+    import pyarrow.parquet as pq
+
+    rows: Dict[str, int] = {}
+    for f in sorted(data_path.glob("part-[0-9]*.parquet")):
+        task = str(int(_PART_FILE.match(f.name).group(1)))
+        rows[task] = rows.get(task, 0) + pq.read_metadata(f).num_rows
+    return rows
+
+
 def _atomic_write_json(path: Path, obj: dict) -> None:
     """Crash-atomic JSON write: tmp file in the same directory +
     ``os.replace`` (atomic on POSIX), so a reader never observes a torn
@@ -131,7 +154,11 @@ class StageWriter:
 
     * unpartitioned stages — stage-granular: a crash before the
       (atomic) manifest lands means the whole stage recomputes; the
-      half-written data directory is overwritten.
+      half-written data directory is overwritten. The commit is one
+      Spark job, the write: the re-read takes the written DataFrame's
+      schema instead of inferring it, and the manifest's per-partition
+      counters are per write task, from the part files' parquet footers
+      (local filesystem, like the manifests and the empty guard).
     * ``partition_by`` stages (the triples graph table) —
       PARTITION-granular: every completed partition value gets its own
       atomic completion record under ``<stage>.parts/``; on restart the
@@ -176,16 +203,10 @@ class StageWriter:
         df = compute()
         df.write.mode("overwrite").parquet(str(data_path))
         self._empty_guard(data_path, df.schema)
-        out = self.spark.read.parquet(str(data_path))
-        per_part = (
-            out.groupBy(F.spark_partition_id().alias("partition"))
-            .count()
-            .collect()
-        )
-        self._finish_manifest(
-            stage, fingerprint,
-            {str(r["partition"]): r["count"] for r in per_part},
-        )
+        # the write is the commit's only Spark job: no schema-inference
+        # job on the re-read, no count re-scan for the counters
+        out = self.spark.read.schema(df.schema).parquet(str(data_path))
+        self._finish_manifest(stage, fingerprint, _footer_rows(data_path))
         return out
 
     # -- partition-granular path (triples stage) ----------------------
@@ -316,12 +337,13 @@ class StageWriter:
 METRICS_SCHEMA = (
     "stage string, partition string, rows bigint, input_snapshot string"
 )
+_METRICS_COLS = ["stage", "partition", "rows", "input_snapshot"]
 
 
 def _metrics_rows(store: "StageWriter", stages) -> list:
     """Lineage rows from stage manifests. Manifest partition keys are
     the CANONICAL-JSON partition value (``json.dumps``) for partitioned
-    stages and ``str(int)`` physical ids for unpartitioned ones; parse
+    stages and ``str(int)`` write-task indices for unpartitioned ones; parse
     rather than ``int()`` so a string/bool/NULL-partitioned stage
     cannot crash the lineage table (round-6 VERDICT fix), and keep the
     column as the canonical-JSON string — injective for every
@@ -459,10 +481,15 @@ def run_pipeline(
               "links", "entities", "triples")
     if cfg.dedup_docs:
         stages = ("docs_dedup",) + stages
+    # a pandas frame plans as one LocalTableScan with Arrow on (no
+    # Python-RDD tasks); written by one task as one file
     metrics = spark.createDataFrame(
-        _metrics_rows(store, stages), METRICS_SCHEMA
+        pd.DataFrame(_metrics_rows(store, stages), columns=_METRICS_COLS),
+        METRICS_SCHEMA,
     )
-    metrics.write.mode("overwrite").parquet(str(Path(cfg.output_dir) / "metrics"))
+    metrics.coalesce(1).write.mode("overwrite").parquet(
+        str(Path(cfg.output_dir) / "metrics")
+    )
 
     out = {
         "documents": docs,

@@ -53,11 +53,6 @@ def parquet_layout(path: str) -> tuple[int, int] | None:
         return None
 
 
-def parquet_row_groups(path: str) -> int | None:
-    lay = parquet_layout(path)
-    return lay[0] if lay else None
-
-
 # below this compressed size the whole single-task pass is sub-second
 # and the repartition's exchange costs more than it saves (measured at
 # sf0.1: +0.5–1 s per query); above it, serialized row-group-bound

@@ -67,11 +67,11 @@ def main() -> None:
         spark, cfg_json.pop("n_docs"), seed=cfg_json.pop("seed"),
         partitions=cfg_json.pop("partitions"),
     )
-    cfg = P.PipelineConfig(
-        extra_alias_surfaces=tuple(cfg_json.pop("extra_alias_surfaces")),
-        **cfg_json,
+    # the parent test's explicit alias table, so no names.txt is needed
+    aliases = spark.createDataFrame(
+        [tuple(r) for r in cfg_json.pop("aliases")], cfg_json.pop("alias_ddl")
     )
-    P.run_pipeline(spark, docs, cfg)
+    P.run_pipeline(spark, docs, P.PipelineConfig(**cfg_json), aliases=aliases)
     # reaching here means the kill did not fire — fail loudly
     sys.stderr.write("crash_driver: pipeline completed WITHOUT crashing\n")
     sys.exit(17)

@@ -1347,6 +1347,38 @@ def test_cc_num_edges_hint_and_limit_fallback(spark):
     assert over_cap == want
 
 
+def test_cc_null_endpoints_skip_driver_collect(spark, monkeypatch):
+    """The fast-path probe flags NULL endpoints in the same action as
+    the edge count, so a NULL-endpoint graph under the edge cap goes
+    straight to the distributed rounds: the edge list is never
+    collected, and the labels equal the distributed path's."""
+    from golden_horse_spark.operators import canonicalize
+
+    # one NULL endpoint with a single neighbour: a NULL node between two
+    # components never converges in the distributed rounds (NULL keys
+    # never join), which the fast path cannot change
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), (None, "d"), ("f", "g")],
+        "src string, dst string",
+    )
+    want = {
+        (r["node"], r["component"])
+        for r in canonicalize.connected_components(
+            edges, local_edge_limit=0
+        ).collect()
+    }
+
+    def no_collect(*a, **k):
+        raise AssertionError("driver union-find collected a NULL graph")
+
+    monkeypatch.setattr(canonicalize, "_driver_union_find", no_collect)
+    got = {
+        (r["node"], r["component"])
+        for r in canonicalize.connected_components(edges).collect()
+    }
+    assert got == want
+
+
 def test_bcubed_pin_exact_for_multimillion_item_cell(spark):
     """The p_pin/r_pin longs must stay EXACT for contingency cells
     beyond ~3M items (round-5 review fix: the direct 10^6*n*n product

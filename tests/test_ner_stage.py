@@ -57,6 +57,59 @@ def test_global_dedup_variant_identical(spark, weights_path, dev_corpus):
 
 
 @pytest.mark.spark
+def test_global_dedup_equals_per_row_and_spreads_kernel(
+    spark, weights_path, tmp_path
+):
+    """Corpus-free: on synthetic document sentences the dedup variant
+    equals ``extract_mentions`` row for row (as a multiset), and its
+    kernel stage runs ``spark.sql.shuffle.partitions`` tasks — AQE must
+    not coalesce the few hundred KB of distinct text into one task."""
+    from collections import Counter
+
+    from golden_horse_spark.operators.ner import extract_mentions_global_dedup
+    from golden_horse_spark.operators.sentence_seg import documents_to_sentences
+    from golden_horse_spark.sources.documents import synthesize_documents
+
+    # stored first, as the pipeline's sentences stage is, so the only
+    # MapInPandas in the measured jobs is the NER kernel
+    documents_to_sentences(
+        synthesize_documents(spark, 100, seed=21, partitions=5)
+    ).write.parquet(str(tmp_path / "sentences"))
+    sentences = spark.read.parquet(str(tmp_path / "sentences"))
+    base = Counter(
+        tuple(r) for r in extract_mentions(sentences, weights_path).collect()
+    )
+
+    sc = spark.sparkContext
+    group = "ner-global-dedup-kernel"
+    sc.setJobGroup(group, group, False)
+    try:
+        dedup = Counter(
+            tuple(r)
+            for r in extract_mentions_global_dedup(
+                sentences, weights_path
+            ).collect()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert dedup == base and len(base) > 0
+
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    kernel_tasks = []
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(sid)
+            ran = info is not None and info.numCompletedTasks > 0
+            if ran and "MapInPandas" in dot(store.operationGraphForStage(sid)):
+                kernel_tasks.append(info.numTasks)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert kernel_tasks == [n]
+
+
+@pytest.mark.spark
 def test_spark_mentions_match_local_port(spark, weights_path, model, dev_corpus):
     """End-to-end agreement metric (BASELINE.md target P/R ≥ 0.95): the
     Spark pipeline must reproduce the local port's spans EXACTLY (=1.0),

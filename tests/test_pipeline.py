@@ -11,20 +11,30 @@ from golden_horse_spark.sources.documents import synthesize_documents
 
 pytestmark = pytest.mark.spark
 
+_ALIAS_SURFACES = ("张三", "李四", "北京", "上海", "刘德华",
+                   "清华大学", "中国", "国家博物馆", "王小明")
+ALIAS_DDL = "surface_form string, entity_id string, prior double"
+
+
+def alias_rows(surfaces=_ALIAS_SURFACES):
+    """The ``(surface_form, entity_id, prior)`` rows ``load_alias_table``
+    builds from ``extra_surfaces`` alone: one entity per surface, prior
+    1.0. Passed explicitly so the pipeline needs no names.txt."""
+    return [(s, f"e{i}", 1.0) for i, s in enumerate(surfaces)]
+
+
+def alias_table(spark, surfaces=_ALIAS_SURFACES):
+    return spark.createDataFrame(alias_rows(surfaces), ALIAS_DDL)
+
 
 @pytest.fixture(scope="module")
 def pipeline_out(spark, weights_path, tmp_path_factory):
     out = tmp_path_factory.mktemp("kg")
     docs = synthesize_documents(spark, 120, seed=5, partitions=4)
     cfg = PipelineConfig(
-        output_dir=str(out),
-        weights_path=weights_path,
-        alias_limit=2000,
-        extra_alias_surfaces=("张三", "李四", "北京", "上海", "刘德华",
-                              "清华大学", "中国", "国家博物馆", "王小明"),
-        triple_parts=8,
+        output_dir=str(out), weights_path=weights_path, triple_parts=8,
     )
-    stages = run_pipeline(spark, docs, cfg)
+    stages = run_pipeline(spark, docs, cfg, aliases=alias_table(spark))
     return out, cfg, stages, docs
 
 
@@ -63,6 +73,8 @@ def test_metrics_have_per_partition_rows(pipeline_out):
     assert {"mentions", "links", "triples"} <= stages_seen
     men_total = sum(r["rows"] for r in metrics if r["stage"] == "mentions")
     assert men_total == stages["mentions"].count()
+    # the lineage table is written by one task, as one file
+    assert len(list((Path(out) / "metrics").glob("part-*.parquet"))) == 1
 
 
 def test_resume_skips_recompute_and_is_identical(pipeline_out, spark, weights_path):
@@ -73,7 +85,7 @@ def test_resume_skips_recompute_and_is_identical(pipeline_out, spark, weights_pa
     man = json.loads((Path(out) / "links.manifest.json").read_text())
     man["status"] = "incomplete"
     (Path(out) / "links.manifest.json").write_text(json.dumps(man))
-    stages2 = run_pipeline(spark, docs, cfg)
+    stages2 = run_pipeline(spark, docs, cfg, aliases=alias_table(spark))
     after = {tuple(r) for r in stages2["triples"].drop("part").collect()}
     assert before == after
 
@@ -126,6 +138,7 @@ def test_empty_corpus_pipeline_completes(spark, weights_path, tmp_path_factory):
         spark,
         docs,
         PipelineConfig(output_dir=str(out), weights_path=weights_path),
+        aliases=alias_table(spark),
     )
     for name in ("sentences", "mentions", "candidates", "links", "entities",
                  "triples"):
@@ -135,12 +148,9 @@ def test_empty_corpus_pipeline_completes(spark, weights_path, tmp_path_factory):
         spark,
         docs,
         PipelineConfig(output_dir=str(out), weights_path=weights_path),
+        aliases=alias_table(spark),
     )
     assert stages2["triples"].count() == 0
-
-
-_ALIAS_SURFACES = ("张三", "李四", "北京", "上海", "刘德华",
-                   "清华大学", "中国", "国家博物馆", "王小明")
 
 
 def _crash_run(out, weights_path, kill_after):
@@ -153,8 +163,7 @@ def _crash_run(out, weights_path, kill_after):
     cfg = {
         "n_docs": 120, "seed": 5, "partitions": 4,
         "output_dir": str(out), "weights_path": weights_path,
-        "alias_limit": 2000,
-        "extra_alias_surfaces": list(_ALIAS_SURFACES),
+        "aliases": alias_rows(), "alias_ddl": ALIAS_DDL,
         "triple_parts": 8,
     }
     repo_root = str(Path(__file__).resolve().parent.parent)
@@ -177,10 +186,9 @@ def _restart_and_check(spark, weights_path, out, reference_rows):
     matching per-partition counters, and no torn artifacts."""
     docs = synthesize_documents(spark, 120, seed=5, partitions=4)
     cfg = PipelineConfig(
-        output_dir=str(out), weights_path=weights_path, alias_limit=2000,
-        extra_alias_surfaces=_ALIAS_SURFACES, triple_parts=8,
+        output_dir=str(out), weights_path=weights_path, triple_parts=8,
     )
-    stages = run_pipeline(spark, docs, cfg)
+    stages = run_pipeline(spark, docs, cfg, aliases=alias_table(spark))
     got = {tuple(r) for r in stages["triples"].collect()}
     assert got == reference_rows
     # per-partition completion records agree with the actual table and
@@ -287,12 +295,11 @@ def test_dedup_docs_stage(spark, weights_path, tmp_path_factory):
     cfg = PipelineConfig(
         output_dir=str(out),
         weights_path=weights_path,
-        alias_limit=500,
-        extra_alias_surfaces=("张三", "北京", "上海"),
         triple_parts=4,
         dedup_docs=True,
     )
-    stages = run_pipeline(spark, docs, cfg)
+    aliases = alias_table(spark, ("张三", "北京", "上海"))
+    stages = run_pipeline(spark, docs, cfg, aliases=aliases)
 
     kept = [r["doc_id"] for r in stages["sentences"].select("doc_id").distinct().collect()]
     assert kept and all(not d.startswith("dup_") for d in kept)
@@ -309,7 +316,7 @@ def test_dedup_docs_stage(spark, weights_path, tmp_path_factory):
     # resume: identical triples, stage not recomputed (manifest mtime fixed)
     mtime = (out / "docs_dedup.manifest.json").stat().st_mtime
     t1 = {tuple(r) for r in stages["triples"].collect()}
-    stages2 = run_pipeline(spark, docs, cfg)
+    stages2 = run_pipeline(spark, docs, cfg, aliases=aliases)
     t2 = {tuple(r) for r in stages2["triples"].collect()}
     assert t1 == t2
     assert (out / "docs_dedup.manifest.json").stat().st_mtime == mtime
@@ -325,21 +332,23 @@ def test_dedup_docs_knobs_invalidate_resume(spark, weights_path, tmp_path_factor
     kw = dict(
         output_dir=str(out),
         weights_path=weights_path,
-        alias_limit=500,
         triple_parts=2,
         dedup_docs=True,
     )
-    run_pipeline(spark, docs, PipelineConfig(**kw))
+    aliases = alias_table(spark)
+    run_pipeline(spark, docs, PipelineConfig(**kw), aliases=aliases)
     man_path = out / "docs_dedup.manifest.json"
     fp1 = json.loads(man_path.read_text())["fingerprint"]
     mtime1 = man_path.stat().st_mtime
 
     # same knobs → resume (fingerprint + mtime unchanged)
-    run_pipeline(spark, docs, PipelineConfig(**kw))
+    run_pipeline(spark, docs, PipelineConfig(**kw), aliases=aliases)
     assert man_path.stat().st_mtime == mtime1
 
     # changed knob → new fingerprint, stage recomputed
-    run_pipeline(spark, docs, PipelineConfig(**kw, dedup_docs_num_hashes=12))
+    run_pipeline(
+        spark, docs, PipelineConfig(**kw, dedup_docs_num_hashes=12), aliases=aliases
+    )
     man2 = json.loads(man_path.read_text())
     assert man2["fingerprint"] != fp1
     assert man_path.stat().st_mtime > mtime1
@@ -347,7 +356,7 @@ def test_dedup_docs_knobs_invalidate_resume(spark, weights_path, tmp_path_factor
     # dedup_docs=False over the same dir: stale manifest stays on disk
     # but is NOT part of this run's reported lineage
     kw_off = dict(kw, dedup_docs=False)
-    run_pipeline(spark, docs, PipelineConfig(**kw_off))
+    run_pipeline(spark, docs, PipelineConfig(**kw_off), aliases=aliases)
     assert man_path.exists()
     m = spark.read.parquet(str(out / "metrics"))
     assert m.where(F.col("stage") == "docs_dedup").count() == 0
@@ -355,13 +364,17 @@ def test_dedup_docs_knobs_invalidate_resume(spark, weights_path, tmp_path_factor
     # threshold-driven auto-banding is fingerprinted by the RESOLVED
     # band count (r4 judge ask #2): t=0.9 resolves to 2 bands, a
     # different banding than the manifest's -> recompute
-    run_pipeline(spark, docs, PipelineConfig(**kw, dedup_docs_threshold=0.9))
+    run_pipeline(
+        spark, docs, PipelineConfig(**kw, dedup_docs_threshold=0.9), aliases=aliases
+    )
     man3 = json.loads(man_path.read_text())
     assert man3["fingerprint"] != man2["fingerprint"]
     mtime3 = man_path.stat().st_mtime
     # explicit bands=2 resolves to the SAME banding (override wins over
     # the default threshold) -> same fingerprint, stage resumes
-    run_pipeline(spark, docs, PipelineConfig(**kw, dedup_docs_bands=2))
+    run_pipeline(
+        spark, docs, PipelineConfig(**kw, dedup_docs_bands=2), aliases=aliases
+    )
     assert json.loads(man_path.read_text())["fingerprint"] == man3["fingerprint"]
     assert man_path.stat().st_mtime == mtime3
 
@@ -433,13 +446,10 @@ def test_pipeline_profile_stage(spark, weights_path, tmp_path):
     cfg = PipelineConfig(
         output_dir=str(tmp_path / "kgp"),
         weights_path=weights_path,
-        alias_limit=500,
-        extra_alias_surfaces=("张三", "李四", "北京", "上海", "刘德华",
-                              "清华大学", "中国", "国家博物馆", "王小明"),
         triple_parts=2,
         profile=True,
     )
-    stages = run_pipeline(spark, docs, cfg)
+    stages = run_pipeline(spark, docs, cfg, aliases=alias_table(spark))
     assert "kg_profile" in stages
     prof = {
         (r["stat"], r["k"]): r["v"] for r in stages["kg_profile"].collect()
@@ -524,8 +534,7 @@ def test_crash_mid_unpartitioned_stage_recomputes_cleanly(
     cfg = {
         "n_docs": 120, "seed": 5, "partitions": 4,
         "output_dir": str(out), "weights_path": weights_path,
-        "alias_limit": 2000,
-        "extra_alias_surfaces": list(_ALIAS_SURFACES),
+        "aliases": alias_rows(), "alias_ddl": ALIAS_DDL,
         "triple_parts": 8,
     }
     repo_root = str(Path(__file__).resolve().parent.parent)
@@ -581,3 +590,66 @@ def test_partitioned_stage_boolean_partition_column(spark, tmp_path):
         "st", fp, compute, partition_by="part"
     )
     assert {(r["part"], r["v"]) for r in out2.collect()} == expect
+
+
+def _group_jobs(sc, group, fn):
+    """Run ``fn`` under Spark job group ``group``; return (result, job ids)."""
+    sc.setJobGroup(group, group, False)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return res, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_unpartitioned_commit_is_one_job_with_footer_counters(spark, tmp_path):
+    """An unpartitioned stage commit runs exactly one Spark job — the
+    write. The re-read reuses the written schema (no inference job) and
+    the manifest's per-write-task counters come from the part files'
+    parquet footers (no count re-scan): each counter equals its file's
+    footer row count, and they sum to the table's row count."""
+    import pyarrow.parquet as pq
+
+    from golden_horse_spark.plans.pipeline import StageWriter
+
+    w = StageWriter(spark, str(tmp_path / "store"))
+    fp = w.fingerprint("st", "u1")
+    out, jobs = _group_jobs(
+        spark.sparkContext, "stagewriter-one-job",
+        lambda: w.load_or_compute(
+            "st", fp,
+            lambda: spark.range(0, 1000, numPartitions=4)
+            .selectExpr("id", "cast(id % 7 as string) as s"),
+        ),
+    )
+    assert len(jobs) == 1, jobs
+    man = w.manifest("st")
+    assert man["status"] == "complete"
+    files = sorted((tmp_path / "store" / "st").glob("part-*.parquet"))
+    footers = {
+        str(int(f.name.split("-")[1])): pq.read_metadata(f).num_rows
+        for f in files
+    }
+    assert len(footers) == len(files) == 4
+    assert man["partitions"] == footers
+    assert man["rows"] == sum(footers.values()) == out.count() == 1000
+    assert out.schema == spark.read.parquet(str(tmp_path / "store" / "st")).schema
+
+
+def test_empty_unpartitioned_stage_gets_manifest(spark, tmp_path):
+    """A stage whose output is empty still lands a readable table and a
+    complete manifest with zero rows."""
+    from golden_horse_spark.plans.pipeline import StageWriter
+
+    w = StageWriter(spark, str(tmp_path / "store"))
+    fp = w.fingerprint("st", "u1")
+    out = w.load_or_compute(
+        "st", fp,
+        lambda: spark.range(0, 10, numPartitions=2).where("id < 0")
+        .selectExpr("id", "cast(id as string) as s"),
+    )
+    assert out.count() == 0 and out.columns == ["id", "s"]
+    man = w.manifest("st")
+    assert man["status"] == "complete" and man["rows"] == 0
+    assert man["fingerprint"] == fp

@@ -274,7 +274,6 @@ def test_streaming_linking_matches_batch(
 
     from golden_horse_spark.operators.linking import exact_candidates
     from golden_horse_spark.operators.ner import mentions_with_ids
-    from golden_horse_spark.sources.gazetteer import load_alias_table
     from golden_horse_spark.streaming.stream import (
         run_to_sink,
         stream_candidates,
@@ -282,7 +281,15 @@ def test_streaming_linking_matches_batch(
         stream_mentions,
     )
 
-    aliases = load_alias_table(spark, limit=2000)
+    # explicit table of surfaces the synthetic documents mention (the
+    # default load_alias_table reads names.txt from the reference corpus)
+    aliases = spark.createDataFrame(
+        [(s, f"e{i}", 1.0) for i, s in enumerate(
+            ["张三", "李四", "北京", "上海", "刘德华", "清华大学", "中国",
+             "国家博物馆", "王小明"]
+        )],
+        "surface_form string, entity_id string, prior double",
+    )
     out = tmp_path_factory.mktemp("link_out")
     stream = stream_mentions(
         stream_documents(spark, str(doc_dir / "docs")), weights_path
