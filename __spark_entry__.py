@@ -87,47 +87,24 @@ def _synth_docs(spark: SparkSession, n: int = 200):
 
 
 def _kg_stages(spark: SparkSession, n_docs: int = 200) -> dict:
-    """Run the KG chain in-memory (no checkpoint dir) on synthesized docs."""
-    from golden_horse_spark.operators.canonicalize import canonical_entities
-    from golden_horse_spark.operators.linking import (
-        generate_candidates,
-        score_links,
-    )
-    from golden_horse_spark.operators.ner import (
-        extract_mentions,
-        mentions_with_ids,
-    )
-    from golden_horse_spark.operators.sentence_seg import documents_to_sentences
-    from golden_horse_spark.operators.triples import materialize_triples
+    """``run_pipeline`` on synthesized docs with the ``_ALIASES`` table.
+    The stage store lives in a temp dir removed at interpreter exit, not
+    on return: the returned DataFrames read it lazily."""
+    import atexit
+    import shutil
+    import tempfile
+
+    from golden_horse_spark.plans.pipeline import PipelineConfig, run_pipeline
 
     _ship(spark)
-    docs = _synth_docs(spark, n_docs)
-    sentences = documents_to_sentences(docs)
-    # cache: the coherence-scoring join makes the NER subtree appear in
-    # several plan branches; without the cache the pandas-UDF stage would
-    # re-run per branch (the checkpointed pipeline gets this from parquet)
-    mentions = mentions_with_ids(extract_mentions(sentences, WEIGHTS)).cache()
+    out = tempfile.mkdtemp(prefix="kg_stages_")
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
     aliases = spark.createDataFrame(
         [{"surface_form": s, "entity_id": f"e{i}", "prior": 1.0}
          for i, s in enumerate(_ALIASES)]
     )
-    mentions.count()  # pin the cache BEFORE the iterative CC below —
-    # canonical_entities runs its own jobs, and a still-lazy cache lets
-    # them race to populate it, re-running the NER stage (same race the
-    # pipeline bench had; see bench.py run_once)
-    candidates = generate_candidates(mentions, aliases)
-    links = score_links(candidates, mentions=mentions)
-    entities = canonical_entities(links)
-    triples = materialize_triples(mentions, links, entities, n_parts=16)
-    return {
-        "documents": docs,
-        "sentences": sentences,
-        "mentions": mentions,
-        "candidates": candidates,
-        "links": links,
-        "entities": entities,
-        "triples": triples,
-    }
+    cfg = PipelineConfig(output_dir=out, weights_path=WEIGHTS, triple_parts=16)
+    return run_pipeline(spark, _synth_docs(spark, n_docs), cfg, aliases)
 
 
 def entry(spark: SparkSession) -> DataFrame:

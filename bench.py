@@ -52,141 +52,107 @@ N_PIPELINE_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "20000"))
 N_SCALING_DOCS = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "100000"))
 
 
-def run_pipeline_bench(spark) -> dict:
-    """Full KG chain on a synthesized interleaved corpus; returns
-    throughput counters. Sentence pool comes from the reference corpus
-    when mounted (realistic Chinese text), else the embedded pool."""
+def bench_corpus(spark, n_docs: int, partitions: int):
+    """The KG bench corpus: ``n_docs`` synthesized interleaved docs
+    (cached and counted), an alias table of the surfaces NER finds in a
+    deterministic 1/40 doc sample, and the name of the sentence pool —
+    the weiboNER train split when mounted (realistic Chinese text), else
+    the embedded ``__spark_entry__._POOL``."""
+    from pyspark.sql import functions as F
+
     import __spark_entry__ as e
-    from golden_horse_spark.operators.canonicalize import canonical_entities
-    from golden_horse_spark.operators.linking import generate_candidates, score_links
-    from golden_horse_spark.operators.ner import extract_mentions, mentions_with_ids
+    from golden_horse_spark.model.segment import REF_DATA
+    from golden_horse_spark.operators.ner import extract_mentions
     from golden_horse_spark.operators.sentence_seg import documents_to_sentences
-    from golden_horse_spark.operators.triples import materialize_triples
     from golden_horse_spark.sources.documents import synthesize_documents
 
-    pool = list(e._POOL)
-    ref = Path("/root/reference/data/weiboNER.conll.train")
+    ref = REF_DATA / "weiboNER.conll.train"
     if ref.exists():
         from golden_horse_spark.sources.conll import read_conll, sentences_text
 
         pool = sentences_text(read_conll(ref), arrow_safe=True)[:800]
-
-    n_cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        pool_name = str(ref)
+    else:
+        pool, pool_name = list(e._POOL), "__spark_entry__._POOL"
     docs = synthesize_documents(
-        spark, N_PIPELINE_DOCS, seed=42, sentence_pool=pool,
-        partitions=max(2 * n_cores, 8), mutate_fraction=0.8,
+        spark, n_docs, seed=42, sentence_pool=pool, partitions=partitions,
+        mutate_fraction=0.8,
     ).cache()
-    n_docs = docs.count()  # materialize input outside the timed region
-    # steady-state: pre-fork python workers + prime model caches (a real
-    # cluster amortizes this once per executor lifetime)
-    from golden_horse_spark.operators.ner import warm_workers
-
-    warm_workers(spark, e.WEIGHTS)
-
-    # alias dictionary is an INPUT to the pipeline (entity-linking dicts
-    # are curated offline) — built here from a small doc sample + the
-    # reference gazetteer, outside the timed region
-    # deterministic sample (hash predicate, not limit(): limit's row choice
-    # depends on partitioning and would change aliases across runs)
-    from pyspark.sql import functions as F
-
-    sample_mentions = extract_mentions(
+    docs.count()
+    # hash predicate, not limit(): limit's row choice depends on
+    # partitioning and would change the aliases across runs
+    sample = extract_mentions(
         documents_to_sentences(docs.where(F.pmod(F.hash("doc_id"), F.lit(40)) == 0)),
         e.WEIGHTS,
     )
     surfaces = sorted(
-        {r["surface"] for r in sample_mentions.select("surface").distinct().collect()}
+        {r["surface"] for r in sample.select("surface").distinct().collect()}
     )
     aliases = spark.createDataFrame(
         [{"surface_form": s, "entity_id": f"e{i}", "prior": 1.0}
          for i, s in enumerate(surfaces)]
     ).cache()
     aliases.count()
+    return docs, aliases, pool_name
 
-    from golden_horse_spark.operators.ner import extract_mentions_global_dedup
 
-    def run_once():
+def run_pipeline_bench(spark) -> dict:
+    """``run_pipeline`` (parquet stage store included) on the bench
+    corpus; returns throughput counters. Each iteration writes a fresh
+    output dir under one temp root, so none resumes another."""
+    import gc
+    import shutil
+    import tempfile
+
+    import __spark_entry__ as e
+    from golden_horse_spark.operators.ner import warm_workers
+    from golden_horse_spark.plans.pipeline import PipelineConfig, run_pipeline
+
+    n_cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    docs, aliases, pool_name = bench_corpus(
+        spark, N_PIPELINE_DOCS, max(2 * n_cores, 8)
+    )
+    # steady-state: pre-fork python workers + prime model caches (a real
+    # cluster amortizes this once per executor lifetime)
+    warm_workers(spark, e.WEIGHTS)
+    root = tempfile.mkdtemp(prefix="kg_bench_")
+
+    def run_once(i: int):
+        cfg = PipelineConfig(output_dir=f"{root}/run{i}", weights_path=e.WEIGHTS)
         t0 = time.time()
-        # exchange between the two python stages: chaining seg UDF -> NER
-        # UDF inside one task doubles concurrent python workers per core
-        # (fresh forks, oversubscription); the rebalance also evens out
-        # zipf-skewed doc lengths before the compute-heavy stage
-        # materialize the segmented sentences BEFORE the NER job instead
-        # of chaining the segmenter's lambda-heavy codegen into it (the
-        # real pipeline's StageWriter materializes this stage to parquet
-        # too). Chained, the combined stage intermittently ran ~110 s
-        # slower (probes: 10/10 iterations fast materialized vs ~half
-        # slow chained, same plan shapes, same counts)
-        sentences = (
-            documents_to_sentences(docs)
-            .repartition(max(2 * n_cores, 8))
-            .transform(_pin)
-        )
-        # global dedup-of-compute: the synthetic corpus (like any web
-        # corpus) repeats most sentence texts, so the NER kernel runs once
-        # per DISTINCT sentence and fans back out via an 8-byte-key join
-        # (output proven identical to the per-row path in test_ner_stage)
-        mentions = mentions_with_ids(
-            extract_mentions_global_dedup(sentences, e.WEIGHTS)
-        ).cache()
-        # materialize each cached stage BEFORE building on it — exactly
-        # what StageWriter does in the real pipeline. Left lazy, the
-        # connected-components rounds inside canonical_entities race to
-        # populate these caches and can re-execute the NER subtree:
-        # measured 21.8-48.1 s run-to-run lazy vs 20.0-20.8 s
-        # materialized, same plan, same output (this was the entire
-        # "±40% host noise" envelope documented in rounds 1-2)
-        n_mentions = mentions.count()
-        t_ner = time.time()
-        links = score_links(
-            generate_candidates(mentions, aliases), mentions=mentions
-        ).cache()
-        n_links = links.count()
-        t_link = time.time()
-        entities = canonical_entities(links)
-        t_canon = time.time()
-        triples = materialize_triples(mentions, links, entities, n_parts=64)
-        n_triples = triples.count()
+        stages = run_pipeline(spark, docs, cfg, aliases)
         dt = time.time() - t0
-        print(
-            f"# stages: seg+ner {t_ner-t0:.1f}s link {t_link-t_ner:.1f}s "
-            f"canon {t_canon-t_link:.1f}s triples {time.time()-t_canon:.1f}s",
-            file=sys.stderr,
-        )
-        mentions.unpersist()
-        links.unpersist()
+        counts = [stages[s].count() for s in ("mentions", "links", "triples")]
         # release py4j refs so ContextCleaner reclaims the CC rounds'
-        # localCheckpoint blocks inside canonical_entities before the
-        # next iteration: without this, seg+ner degraded monotonically
-        # 25.5 s → 47.6 s → 68.4 s across iterations (same work), the
-        # round-1/2 "intermittent stall" signature. See BENCH.md --dedup
-        # section for the mechanism.
-        import gc
-
-        entities = triples = sentences = None
+        # localCheckpoint blocks before the next iteration: without
+        # this, later iterations degraded monotonically (BENCH.md
+        # --dedup section has the mechanism)
+        stages = None
         gc.collect()
         time.sleep(2)
-        return dt, n_mentions, n_links, n_triples
+        return (dt, *counts)
 
     # steady-state measurement: iteration 1 warms JIT/codegen + the python
     # worker pool (a long-lived cluster pays this once per executor
-    # lifetime, not per job); iteration 2 is the reported number. The
-    # cold time is surfaced alongside, not hidden.
-    cold_dt, *_ = run_once()
-    # SPARK_GRAFT_BENCH_WARM_RUNS=k (default 2): run k warm iterations
-    # and report the FASTEST. On this VM a high-parallelism process
-    # takes at most one random ~50-60 s stage stall per run (documented
-    # in BENCH.md); min-of-k skips past it, so the reported number is
-    # the code's cost, not stall luck. All iterations are surfaced in
-    # pipeline_sec_warm_all.
-    warm_runs = int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "3"))
-    warm = [run_once() for _ in range(warm_runs)]
+    # lifetime, not per job). The cold time is surfaced alongside.
+    # SPARK_GRAFT_BENCH_WARM_RUNS=k (default 3) warm iterations, the
+    # FASTEST reported: interference on a shared VM is strictly
+    # additive, so min-of-k is the code's cost, not stall luck. All
+    # iterations are surfaced in pipeline_sec_warm_all.
+    try:
+        cold_dt, *_ = run_once(0)
+        warm_runs = int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "3"))
+        warm = [run_once(i) for i in range(1, warm_runs + 1)]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
     dt, n_mentions, n_links, n_triples = min(warm, key=lambda r: r[0])
+    n_docs = docs.count()
     docs.unpersist()
     return {
         "pipeline_sec_warm_all": [round(w[0], 2) for w in warm],
         "pipeline_sec": round(dt, 2),
         "pipeline_sec_cold": round(cold_dt, 2),
+        "sentence_pool": pool_name,
         "n_docs": n_docs,
         "n_mentions": n_mentions,
         "n_links": n_links,
@@ -1076,9 +1042,6 @@ def run_scaling() -> None:
             )
             line = [l for l in p.stdout.strip().splitlines()
                     if l.startswith("{")][-1]
-            for sl in p.stderr.splitlines():
-                if sl.startswith("# stages"):
-                    print(f"#   local[{cores}] {sl[2:]}", file=sys.stderr)
             legs[cores].append(json.loads(line))
             print(f"# local[{cores}]: {legs[cores][-1]['pipeline_sec']}s, "
                   f"{legs[cores][-1]['triples_per_sec']} triples/s",

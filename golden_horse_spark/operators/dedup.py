@@ -919,9 +919,9 @@ def resolve_bands(
     bands: int | None = None,
     threshold: float | None = None,
 ) -> int:
-    """Banding resolution shared by :func:`fuzzy_dedup` and the
-    pipeline's docs_dedup stage: an explicit ``bands`` always wins;
-    otherwise a ``threshold`` picks the planner's banding
+    """Banding resolution of :func:`fuzzy_dedup`: an explicit
+    ``bands`` always wins; otherwise a ``threshold`` picks the
+    planner's banding
     (:func:`lsh_plan` — the divisor whose s-curve inflection sits
     closest to the target similarity); with neither, the legacy
     default of 4 bands — validated for divisibility exactly like an

@@ -9,6 +9,13 @@ Stage graph::
                                    └──────────────┬──────────────────┘
                                                   └→ triples  (+ metrics)
 
+``run_pipeline`` is the only place the chain is wired: the CLI
+(``tools/run_pipeline.py``), the driver contract's KG queries
+(``__spark_entry__``), ``bench.py`` and ``perfbench`` all call it, so
+every caller runs — and every timing measures — the same stage store.
+The alias table is a required input; nothing here reads a default
+gazetteer path.
+
 Each stage materializes to ``<out>/<stage>`` (parquet here; the writer is
 a seam where an Iceberg catalog drops in — ``writeTo(...).append()`` —
 when the runtime ships Iceberg jars; this sandbox has none, so the same
@@ -47,11 +54,7 @@ from pyspark.sql import functions as F
 
 from ..operators.canonicalize import canonical_entities
 from ..operators.linking import generate_candidates, score_links
-from ..operators.ner import (
-    extract_mentions,
-    extract_mentions_global_dedup,
-    mentions_with_ids,
-)
+from ..operators.ner import extract_mentions_global_dedup, mentions_with_ids
 from ..operators.sentence_seg import documents_to_sentences
 from ..operators.triples import materialize_triples
 
@@ -60,46 +63,16 @@ from ..operators.triples import materialize_triples
 class PipelineConfig:
     output_dir: str
     weights_path: str
-    alias_limit: Optional[int] = 50000
     fuzzy_linking: bool = False
     triple_parts: int = 64
-    extra_alias_surfaces: tuple = ()
     resume: bool = True
-    # dedup-of-compute: run the NER kernel once per DISTINCT sentence
-    # text (8-byte xxhash64 join keys). Output identical to per-row
-    # (test_ner_stage); at web scale most sentence mass is duplicated
-    # boilerplate, so this is the default. Disable for corpora known to
-    # be near-duplicate-free where the distinct+join overhead isn't paid
-    # back.
-    dedup_ner: bool = True
-    # document-level fuzzy dedup (MinHash-LSH → CC → keep one per
-    # duplicate cluster) as a resumable stage BEFORE extraction — the
-    # standard curation step of web-corpus pipelines. Off by default:
-    # unlike dedup_ner it CHANGES the output (duplicate docs emit no
-    # triples), so it's an explicit corpus-curation decision.
+    # document-level fuzzy dedup (exact, then MinHash-LSH → CC → keep
+    # one per duplicate cluster, ``fuzzy_dedup`` defaults) as a
+    # resumable stage BEFORE extraction — the standard curation step of
+    # web-corpus pipelines. Off by default: it CHANGES the output
+    # (duplicate docs emit no triples), so it's an explicit
+    # corpus-curation decision.
     dedup_docs: bool = False
-    # MinHash knobs for the dedup_docs stage (same names as
-    # operators.dedup.fuzzy_dedup). They are part of the stage
-    # FINGERPRINT: changing any of them invalidates a previous
-    # docs_dedup checkpoint and forces recompute on resume.
-    # Banding: dedup_docs_threshold (target Jaccard) drives the
-    # lsh_plan auto-banding by default; dedup_docs_bands, when set,
-    # overrides the planner (see operators.dedup.resolve_bands). The
-    # fingerprint records the RESOLVED band count, so switching between
-    # a threshold and the explicit bands it resolves to does NOT
-    # invalidate, while any change that alters the banding does.
-    # default 0.5 with the default num_hashes=8 ⇒ the planner picks
-    # b=4, r=2 (inflection exactly 0.5) — the same split the legacy
-    # hardcoded default used, so the DEFAULT config's results are
-    # unchanged. A non-default num_hashes now gets planner banding
-    # instead of the old hardcoded 4 — a deliberate behavior change
-    # (the resolved band count is in the stage fingerprint, so such a
-    # config invalidates its old checkpoint and recomputes honestly);
-    # set dedup_docs_bands=4 explicitly to reproduce the legacy split.
-    dedup_docs_num_hashes: int = 8
-    dedup_docs_bands: Optional[int] = None
-    dedup_docs_k: int = 3
-    dedup_docs_threshold: Optional[float] = 0.5
     # write a kg_profile health report (triples.kg_profile: counts,
     # predicate histogram, out-degree Gini) beside the metrics table.
     # Off by default: it is a read-only QA artifact, not lineage.
@@ -371,18 +344,20 @@ def run_pipeline(
     spark: SparkSession,
     documents: DataFrame,
     cfg: PipelineConfig,
-    aliases: Optional[DataFrame] = None,
+    aliases: DataFrame,
 ) -> Dict[str, DataFrame]:
-    """Run (or resume) the full pipeline; returns stage DataFrames."""
-    from ..sources.gazetteer import load_alias_table
+    """Run (or resume) the full pipeline; returns stage DataFrames.
 
+    ``aliases`` is the entity-linking dictionary,
+    ``(surface_form, entity_id, prior)`` — e.g. ``load_alias_table`` over
+    a names file, curated offline like any linking dictionary."""
     store = StageWriter(spark, cfg.output_dir, cfg.resume)
     fp0 = store.fingerprint("documents", cfg.weights_path)
 
     docs = store.load_or_compute("documents", fp0, lambda: documents)
 
     if cfg.dedup_docs:
-        from ..operators.dedup import dedup_exact, fuzzy_dedup, resolve_bands
+        from ..operators.dedup import dedup_exact, fuzzy_dedup
 
         def _dedup() -> DataFrame:
             if "text" in docs.columns:
@@ -403,25 +378,12 @@ def run_pipeline(
             # zero-shingle short docs fuzzy banding deliberately skips),
             # then MinHash fuzzy on the survivors
             flat = dedup_exact(flat)
-            keep = fuzzy_dedup(
-                flat,
-                num_hashes=cfg.dedup_docs_num_hashes,
-                bands=resolved_bands,
-                k=cfg.dedup_docs_k,
-            ).where(F.col("keep")).select("doc_id")
+            keep = fuzzy_dedup(flat).where(F.col("keep")).select("doc_id")
             return docs.join(keep, "doc_id", "left_semi")
 
-        resolved_bands = resolve_bands(
-            cfg.dedup_docs_num_hashes,
-            cfg.dedup_docs_bands,
-            cfg.dedup_docs_threshold,
-        )
-        fp0 = store.fingerprint(
-            "docs_dedup",
-            fp0 + ":exact+fuzzy"
-            f":nh={cfg.dedup_docs_num_hashes}"
-            f",b={resolved_bands},k={cfg.dedup_docs_k}",
-        )
+        # the suffix names fuzzy_dedup's default MinHash setup; it stays
+        # byte-identical so existing output dirs resume
+        fp0 = store.fingerprint("docs_dedup", fp0 + ":exact+fuzzy:nh=8,b=4,k=3")
         docs = store.load_or_compute("docs_dedup", fp0, _dedup)
 
     fp_sent = store.fingerprint("sentences", fp0)
@@ -429,22 +391,19 @@ def run_pipeline(
         "sentences", fp_sent, lambda: documents_to_sentences(docs)
     )
 
-    ner = extract_mentions_global_dedup if cfg.dedup_ner else extract_mentions
+    # ":dedup=True" names the dedup-of-compute NER path (output equal to
+    # the per-row kernel, test_ner_stage); kept so existing dirs resume
     fp_men = store.fingerprint(
-        "mentions", fp_sent + cfg.weights_path + f":dedup={cfg.dedup_ner}"
+        "mentions", fp_sent + cfg.weights_path + ":dedup=True"
     )
     mentions = store.load_or_compute(
         "mentions",
         fp_men,
-        lambda: mentions_with_ids(ner(sentences, cfg.weights_path)),
+        lambda: mentions_with_ids(
+            extract_mentions_global_dedup(sentences, cfg.weights_path)
+        ),
     )
 
-    if aliases is None:
-        aliases = load_alias_table(
-            spark,
-            limit=cfg.alias_limit,
-            extra_surfaces=list(cfg.extra_alias_surfaces),
-        )
     fp_cand = store.fingerprint("candidates", fp_men + str(cfg.fuzzy_linking))
     candidates = store.load_or_compute(
         "candidates",

@@ -6,8 +6,9 @@ shortest-match InName features. At web scale the same asset becomes the
 entity-linking alias dictionary: ``(surface_form, entity_id, prior)``,
 broadcast-joined against mention surfaces.
 
-``load_alias_table`` synthesizes deterministic entity ids (``e<row>``)
-and priors ∝ freq; ``gazetteer_features`` reproduces the reference's
+``load_alias_table`` reads a names file given by its caller (there is no
+default path) and synthesizes deterministic entity ids (``e<row>``) and
+priors ∝ freq; ``gazetteer_features`` reproduces the reference's
 shortest-match-with-early-break semantics (icwb.py:208-236) for the CWS
 feature path.
 """
@@ -20,16 +21,12 @@ from typing import List, Set, Tuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-NAMES_TXT = "/root/reference/resources/names.txt"
 
-
-def read_names(path: str | Path = NAMES_TXT, limit: int | None = None):
+def read_names(path: str | Path):
     """names.txt rows → [(surface, freq)]. Driver-side, 230k rows ≈ 3 MB."""
     rows: List[Tuple[str, int]] = []
     with open(path, encoding="utf-8", errors="surrogatepass") as f:
-        for i, line in enumerate(f):
-            if limit is not None and i >= limit:
-                break
+        for line in f:
             cols = line.split()
             if not cols:
                 continue
@@ -38,22 +35,13 @@ def read_names(path: str | Path = NAMES_TXT, limit: int | None = None):
     return rows
 
 
-def load_alias_table(
-    spark: SparkSession,
-    path: str | Path = NAMES_TXT,
-    limit: int | None = None,
-    extra_surfaces: List[str] | None = None,
-) -> DataFrame:
-    """(surface_form, entity_id, prior). ``extra_surfaces`` lets tests and
-    the flagship pipeline guarantee alias coverage of known mentions."""
-    rows = read_names(path, limit)
-    for j, s in enumerate(extra_surfaces or []):
-        rows.append((s, 1000 + j))
-    data = [
-        {"surface_form": s, "entity_id": f"e{i}", "prior": float(fr)}
-        for i, (s, fr) in enumerate(rows)
-    ]
-    df = spark.createDataFrame(data)
+def load_alias_table(spark: SparkSession, path: str | Path) -> DataFrame:
+    """names file → (surface_form, entity_id, prior), the alias table
+    ``run_pipeline`` links mentions against."""
+    data = [(s, f"e{i}", float(fr)) for i, (s, fr) in enumerate(read_names(path))]
+    df = spark.createDataFrame(
+        data, "surface_form string, entity_id string, prior double"
+    )
     total = F.sum("prior").over(Window.partitionBy("surface_form"))
     return df.select(
         "surface_form", "entity_id", (F.col("prior") / total).alias("prior")

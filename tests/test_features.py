@@ -1,6 +1,8 @@
 """Featurizer (F2/F3/F5, P5) golden tests against the reference's shipped
 crfsuite dumps (data/crfsuite.weiboNER.charpos.conll.{dev,test})."""
 
+from pathlib import Path
+
 import pytest
 
 from golden_horse_spark.model.features import (
@@ -31,6 +33,10 @@ def golden_dev():
     return read_charpos_golden(GOLDEN_DEV)
 
 
+@pytest.mark.skipif(
+    not Path(GOLDEN_DEV).exists(),
+    reason=f"needs the reference corpus file {GOLDEN_DEV}",
+)
 def test_features_match_golden_dump_token_for_token(golden_dev):
     for rows in golden_dev:
         chars = _chars_from_golden(rows)

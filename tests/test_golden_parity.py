@@ -14,15 +14,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from golden_horse_spark.model.evaluation import bio_spans, span_eval
+from golden_horse_spark.model.segment import REF_DATA
 from golden_horse_spark.model.weights import NerWeights
 from golden_horse_spark.sources.conll import read_conll, sanitize_for_arrow
 
 pytestmark = pytest.mark.spark
 
 SPLITS = {
-    "dev": "/root/reference/data/weiboNER.conll.dev",
-    "test": "/root/reference/data/weiboNER.conll.test",
+    "dev": REF_DATA / "weiboNER.conll.dev",
+    "test": REF_DATA / "weiboNER.conll.test",
 }
+TEST_2ND = REF_DATA / "weiboNER_2nd_conll.test"
+
+
+def needs(path):
+    return pytest.mark.skipif(
+        not path.exists(), reason=f"needs the reference corpus file {path}"
+    )
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +38,9 @@ def model(weights_path):
     return NerWeights.load(weights_path)
 
 
-@pytest.mark.parametrize("split", ["dev", "test"])
+@pytest.mark.parametrize(
+    "split", [pytest.param(s, marks=needs(p)) for s, p in SPLITS.items()]
+)
 def test_spark_vs_port_span_parity(spark, weights_path, model, split):
     from golden_horse_spark.operators.ner import extract_mentions, tag_sentences
     from golden_horse_spark.operators.sentence_seg import documents_to_sentences
@@ -73,6 +83,7 @@ def test_spark_vs_port_span_parity(spark, weights_path, model, split):
     assert got == want
 
 
+@needs(SPLITS["dev"])
 def test_gold_f1_floor_on_dev(model):
     """Span-F1 vs GOLD labels (quality floor, not parity): the fixture is
     a feature CRF + random-init fine-tuned embeddings; the paper's best
@@ -84,6 +95,7 @@ def test_gold_f1_floor_on_dev(model):
     assert res["f1"] >= 0.40, res
 
 
+@needs(SPLITS["dev"])
 def test_documents_media_interleave_preserved(spark, weights_path):
     """Span-sequence equality invariant on the golden corpus wrapped WITH
     media spans interleaved (input_hint)."""
@@ -104,6 +116,7 @@ def test_documents_media_interleave_preserved(spark, weights_path):
     assert norm(collected) == norm(rt)
 
 
+@needs(TEST_2ND)
 def test_2nd_revision_fixture_matches_published_f1():
     """fixtures/ner_weights_2nd.npz on the REVISED test split (the split
     the paper reports): overall micro-F1 must stay at/above the published
@@ -117,11 +130,12 @@ def test_2nd_revision_fixture_matches_published_f1():
     from golden_horse_spark.sources.conll import read_conll
 
     m = NerWeights.load(Path(__file__).resolve().parents[1] / "fixtures/ner_weights_2nd.npz")
-    test = read_conll("/root/reference/data/weiboNER_2nd_conll.test")
+    test = read_conll(TEST_2ND)
     r = span_eval([m.classify(c) for c, _ in test], [l for _, l in test])
     assert r["f1"] >= 0.56, r
 
 
+@needs(TEST_2ND)
 def test_joint_fixture_beats_emnlp15_published_f1():
     """fixtures/joint_weights.npz (R7 joint CWS+NER training,
     tools/train_joint_fixture.py) on the REVISED test split: overall
@@ -138,6 +152,6 @@ def test_joint_fixture_beats_emnlp15_published_f1():
 
     path = Path(__file__).resolve().parents[1] / "fixtures/joint_weights.npz"
     m = JointWeights.load(path)
-    test = read_conll("/root/reference/data/weiboNER_2nd_conll.test")
+    test = read_conll(TEST_2ND)
     r = span_eval([m.classify_ner(c) for c, _ in test], [l for _, l in test])
     assert r["f1"] >= 0.568, r

@@ -17,9 +17,8 @@ ALIAS_DDL = "surface_form string, entity_id string, prior double"
 
 
 def alias_rows(surfaces=_ALIAS_SURFACES):
-    """The ``(surface_form, entity_id, prior)`` rows ``load_alias_table``
-    builds from ``extra_surfaces`` alone: one entity per surface, prior
-    1.0. Passed explicitly so the pipeline needs no names.txt."""
+    """``(surface_form, entity_id, prior)`` rows: one entity per surface,
+    prior 1.0 — the alias table every ``run_pipeline`` call here passes."""
     return [(s, f"e{i}", 1.0) for i, s in enumerate(surfaces)]
 
 
@@ -322,12 +321,21 @@ def test_dedup_docs_stage(spark, weights_path, tmp_path_factory):
     assert (out / "docs_dedup.manifest.json").stat().st_mtime == mtime
 
 
-def test_dedup_docs_knobs_invalidate_resume(spark, weights_path, tmp_path_factory):
-    """The MinHash knobs are part of the docs_dedup fingerprint: a rerun
-    with a changed knob must RECOMPUTE the stage (not serve the stale
-    checkpoint), and a dedup_docs=False rerun over the same output_dir
-    must not report the leftover docs_dedup manifest in its metrics."""
-    out = tmp_path_factory.mktemp("kg_dedup_knobs")
+def test_dedup_docs_resume_and_lineage(spark, weights_path, tmp_path_factory):
+    """A same-config rerun resumes the docs_dedup stage, and a
+    dedup_docs=False rerun over the same output_dir must not report the
+    leftover docs_dedup manifest in its metrics."""
+    import inspect
+
+    from golden_horse_spark.operators.dedup import fuzzy_dedup, resolve_bands
+
+    # the stage fingerprint spells out fuzzy_dedup's defaults
+    # (":nh=8,b=4,k=3"); a change to them must change it too
+    d = inspect.signature(fuzzy_dedup).parameters
+    assert (d["num_hashes"].default, d["k"].default) == (8, 3)
+    assert resolve_bands(8, d["bands"].default, d["threshold"].default) == 4
+
+    out = tmp_path_factory.mktemp("kg_dedup_resume")
     docs = synthesize_documents(spark, 25, seed=11, partitions=2)
     kw = dict(
         output_dir=str(out),
@@ -338,20 +346,11 @@ def test_dedup_docs_knobs_invalidate_resume(spark, weights_path, tmp_path_factor
     aliases = alias_table(spark)
     run_pipeline(spark, docs, PipelineConfig(**kw), aliases=aliases)
     man_path = out / "docs_dedup.manifest.json"
-    fp1 = json.loads(man_path.read_text())["fingerprint"]
     mtime1 = man_path.stat().st_mtime
 
-    # same knobs → resume (fingerprint + mtime unchanged)
+    # same config → resume (manifest mtime unchanged)
     run_pipeline(spark, docs, PipelineConfig(**kw), aliases=aliases)
     assert man_path.stat().st_mtime == mtime1
-
-    # changed knob → new fingerprint, stage recomputed
-    run_pipeline(
-        spark, docs, PipelineConfig(**kw, dedup_docs_num_hashes=12), aliases=aliases
-    )
-    man2 = json.loads(man_path.read_text())
-    assert man2["fingerprint"] != fp1
-    assert man_path.stat().st_mtime > mtime1
 
     # dedup_docs=False over the same dir: stale manifest stays on disk
     # but is NOT part of this run's reported lineage
@@ -361,22 +360,30 @@ def test_dedup_docs_knobs_invalidate_resume(spark, weights_path, tmp_path_factor
     m = spark.read.parquet(str(out / "metrics"))
     assert m.where(F.col("stage") == "docs_dedup").count() == 0
 
-    # threshold-driven auto-banding is fingerprinted by the RESOLVED
-    # band count (r4 judge ask #2): t=0.9 resolves to 2 bands, a
-    # different banding than the manifest's -> recompute
-    run_pipeline(
-        spark, docs, PipelineConfig(**kw, dedup_docs_threshold=0.9), aliases=aliases
+
+def test_cli_runs_with_aliases_file(spark, tmp_path):
+    """tools/run_pipeline.py end to end in its own process: the alias
+    table comes from the required --aliases names file."""
+    import os
+    import subprocess
+    import sys
+
+    names = tmp_path / "names.txt"
+    names.write_text(
+        "".join(f"{s} 10 nr\n" for s in _ALIAS_SURFACES), encoding="utf-8"
     )
-    man3 = json.loads(man_path.read_text())
-    assert man3["fingerprint"] != man2["fingerprint"]
-    mtime3 = man_path.stat().st_mtime
-    # explicit bands=2 resolves to the SAME banding (override wins over
-    # the default threshold) -> same fingerprint, stage resumes
-    run_pipeline(
-        spark, docs, PipelineConfig(**kw, dedup_docs_bands=2), aliases=aliases
+    out = tmp_path / "kg"
+    repo_root = Path(__file__).resolve().parent.parent
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "2g"}
+    proc = subprocess.run(
+        [sys.executable, str(repo_root / "tools" / "run_pipeline.py"),
+         "--synthesize", "20", "--aliases", str(names), "--output", str(out)],
+        env=env, capture_output=True, timeout=900, text=True,
     )
-    assert json.loads(man_path.read_text())["fingerprint"] == man3["fingerprint"]
-    assert man_path.stat().st_mtime == mtime3
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    metrics = spark.read.parquet(str(out / "metrics")).collect()
+    assert {"mentions", "links", "triples"} <= {r["stage"] for r in metrics}
+    assert sum(r["rows"] for r in metrics if r["stage"] == "links") > 0
 
 
 def test_to_ntriples_escaping_and_shape(spark):

@@ -3,10 +3,13 @@ including the span-sequence order invariant."""
 
 import pytest
 
+from golden_horse_spark.model.segment import REF_DATA
 from golden_horse_spark.operators.sentence_seg import (
     documents_to_sentences,
     segment_sentences,
 )
+
+DEV = REF_DATA / "weiboNER.conll.dev"
 
 
 def test_basic_split_and_ender_absorb():
@@ -40,6 +43,9 @@ def test_roundtrip_concat_covers_all_non_dropped_chars():
     assert "".join(s for s, _ in sents) == text
 
 
+@pytest.mark.skipif(
+    not DEV.exists(), reason=f"needs the reference corpus file {DEV}"
+)
 @pytest.mark.spark
 def test_sql_segmenter_matches_python_fuzz(spark):
     """The JVM-side aggregate fold must agree with segment_sentences on
@@ -57,7 +63,7 @@ def test_sql_segmenter_matches_python_fuzz(spark):
     for _ in range(600):
         n = rng.randint(1, 14)
         cases.append("".join(rng.choice(alphabet) for _ in range(n)))
-    corpus = read_conll("/root/reference/data/weiboNER.conll.dev")
+    corpus = read_conll(DEV)
     cases += [sanitize_for_arrow("".join(c)) for c, _ in corpus[:270]]
 
     df = spark.createDataFrame([(c,) for c in cases], "t string")

@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 
 from golden_horse_spark.model.dicts import build_dicts
+from golden_horse_spark.model.segment import REF_DATA
 from golden_horse_spark.model.spark_train import (
     batch_gradient,
     ipm_order,
@@ -24,6 +25,12 @@ from golden_horse_spark.model.train import (
     sentence_grad,
     sgd_pass,
     train_ner,
+)
+
+WEIBO = (REF_DATA / "weiboNER.conll.train", REF_DATA / "weiboNER.conll.dev")
+needs_weibo = pytest.mark.skipif(
+    not all(p.exists() for p in WEIBO),
+    reason=f"needs the reference corpus files {[str(p) for p in WEIBO]}",
 )
 
 TOY = [
@@ -147,16 +154,14 @@ def test_ipm_single_partition_equals_local_sgd_pass(spark):
     np.testing.assert_allclose(avg[2], w_emb, rtol=1e-10, atol=1e-12)
 
 
+@needs_weibo
 def test_distributed_training_learns_weibo(spark):
     """A few IPM epochs on real reference data must reach a dev F1 in the
     same ballpark as the local trainer at equal epochs."""
-    from pathlib import Path
-
     from golden_horse_spark.sources.conll import read_conll
 
-    data = Path("/root/reference/data")
-    train = read_conll(data / "weiboNER.conll.train")[:300]
-    dev = read_conll(data / "weiboNER.conll.dev")[:80]
+    train = read_conll(WEIBO[0])[:300]
+    dev = read_conll(WEIBO[1])[:80]
 
     local = train_ner(
         train, dev, epochs=3, use_emb=False, verbose=False
@@ -177,16 +182,14 @@ def test_distributed_training_learns_weibo(spark):
     assert f1_dist >= f1_local - 0.05  # converges to sequential-SGD quality
 
 
+@needs_weibo
 def test_batch_gd_adagrad_learns(spark):
     """Exact full-batch gradients + AdaGrad must reach SGD-ballpark F1."""
-    from pathlib import Path
-
     from golden_horse_spark.model.evaluation import span_eval
     from golden_horse_spark.sources.conll import read_conll
 
-    data = Path("/root/reference/data")
-    train = read_conll(data / "weiboNER.conll.train")[:300]
-    dev = read_conll(data / "weiboNER.conll.dev")[:80]
+    train = read_conll(WEIBO[0])[:300]
+    dev = read_conll(WEIBO[1])[:80]
     model = train_ner_spark(
         spark, train, dev, strategy="batch_gd", parts=4, epochs=10,
         lr=0.5, use_emb=False, verbose=False,

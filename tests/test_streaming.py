@@ -281,8 +281,7 @@ def test_streaming_linking_matches_batch(
         stream_mentions,
     )
 
-    # explicit table of surfaces the synthetic documents mention (the
-    # default load_alias_table reads names.txt from the reference corpus)
+    # explicit table of surfaces the synthetic documents mention
     aliases = spark.createDataFrame(
         [(s, f"e{i}", 1.0) for i, s in enumerate(
             ["张三", "李四", "北京", "上海", "刘德华", "清华大学", "中国",

@@ -6,6 +6,9 @@ the round-6 way (plain localCheckpoint → AQE replans at runtime with
 the actual shuffle sizes). Writes plans/r06/kg_linked_join_before.txt
 (AQE-off physical plan) and ..._after.txt (AQE final executed plan).
 
+The stages come from ``run_pipeline`` over ``bench.bench_corpus``, and
+each dump's header names the sentence pool used.
+
 Not part of the bench contract; uses a reduced doc count purely to keep
 the capture fast — join shapes are scale-independent here because the
 decision under test is stats-driven, which is exactly the point.
@@ -24,64 +27,31 @@ N_DOCS = int(os.environ.get("CAPTURE_DOCS", "4000"))
 
 
 def main() -> None:
+    import tempfile
+
     from golden_horse_spark.config import get_spark
 
     spark = get_spark("capture-linked-plan")
     import __spark_entry__ as e
+    from bench import bench_corpus
+    from golden_horse_spark.plans.pipeline import PipelineConfig, run_pipeline
+
+    docs, aliases, pool_name = bench_corpus(spark, N_DOCS, 64)
+    with tempfile.TemporaryDirectory(prefix="capture_kg_") as tmp:
+        stages = run_pipeline(
+            spark, docs, PipelineConfig(output_dir=tmp, weights_path=e.WEIGHTS),
+            aliases,
+        )
+        capture(spark, stages, pool_name)
+    spark.stop()
+
+
+def capture(spark, stages, pool_name: str) -> None:
     from pyspark.sql import functions as F
-    from golden_horse_spark.operators.canonicalize import canonical_entities
-    from golden_horse_spark.operators.linking import (
-        generate_candidates,
-        score_links,
+
+    mentions, links, entities = (
+        stages["mentions"], stages["links"], stages["entities"]
     )
-    from golden_horse_spark.operators.ner import (
-        extract_mentions,
-        extract_mentions_global_dedup,
-        mentions_with_ids,
-    )
-    from golden_horse_spark.operators.sentence_seg import documents_to_sentences
-    from golden_horse_spark.sources.documents import synthesize_documents
-
-    pool = list(e._POOL)
-    ref = Path("/root/reference/data/weiboNER.conll.train")
-    if ref.exists():
-        from golden_horse_spark.sources.conll import read_conll, sentences_text
-
-        pool = sentences_text(read_conll(ref), arrow_safe=True)[:800]
-
-    docs = synthesize_documents(
-        spark, N_DOCS, seed=42, sentence_pool=pool, partitions=64,
-        mutate_fraction=0.8,
-    ).cache()
-    docs.count()
-    sample = extract_mentions(
-        documents_to_sentences(
-            docs.where(F.pmod(F.hash("doc_id"), F.lit(40)) == 0)
-        ),
-        e.WEIGHTS,
-    )
-    surfaces = sorted(
-        {r["surface"] for r in sample.select("surface").distinct().collect()}
-    )
-    aliases = spark.createDataFrame(
-        [
-            {"surface_form": s, "entity_id": f"e{i}", "prior": 1.0}
-            for i, s in enumerate(surfaces)
-        ]
-    ).cache()
-    aliases.count()
-
-    sentences = documents_to_sentences(docs).repartition(64)
-    mentions = mentions_with_ids(
-        extract_mentions_global_dedup(sentences, e.WEIGHTS)
-    ).cache()
-    mentions.count()
-    links = score_links(
-        generate_candidates(mentions, aliases), mentions=mentions
-    ).cache()
-    links.count()
-    entities = canonical_entities(links)
-
     # the exact `linked` expression from materialize_triples, pre-checkpoint
     linked = (
         mentions.join(links, "mention_id")
@@ -100,7 +70,8 @@ def main() -> None:
     before = linked._jdf.queryExecution().executedPlan().toString()
     (out / "kg_linked_join_before.txt").write_text(
         "# `linked` (mentions ⋈ links ⋈ entities) planned with AQE OFF —\n"
-        "# the plan pin() froze at every round-5 localCheckpoint:\n\n"
+        "# the plan pin() froze at every round-5 localCheckpoint:\n"
+        f"# sentence_pool: {pool_name}\n\n"
         + before
     )
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -122,13 +93,13 @@ def main() -> None:
     after = qe.executedPlan().toString()
     (out / "kg_linked_join_after.txt").write_text(
         "# same subtree executed with AQE ON (round-6 plain\n"
-        "# localCheckpoint in materialize_triples) — final adaptive plan:\n\n"
+        "# localCheckpoint in materialize_triples) — final adaptive plan:\n"
+        f"# sentence_pool: {pool_name}\n\n"
         + after
     )
     print("before SMJ count:", before.count("SortMergeJoin"))
     print("after  SMJ count:", after.count("SortMergeJoin"))
     print("after  BHJ count:", after.count("BroadcastHashJoin"))
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -4,6 +4,7 @@ The north-rule deployment shape::
 
     spark-submit --py-files golden_horse_spark.zip tools/run_pipeline.py \
         --input /data/documents_parquet --output /data/kg \
+        --aliases /data/names.txt \
         --weights fixtures/ner_weights.npz [--resume] [--fuzzy]
 
 (locally, ``python tools/run_pipeline.py --synthesize 5000 ...`` works the
@@ -29,6 +30,9 @@ def main() -> None:
     ap.add_argument("--synthesize", type=int, default=0,
                     help="generate N synthetic docs instead of --input")
     ap.add_argument("--output", required=True)
+    ap.add_argument("--aliases", required=True,
+                    help="names file (surface [freq [pos]] per line) used "
+                         "as the entity-linking alias table")
     ap.add_argument("--weights", default=str(
         Path(__file__).resolve().parents[1] / "fixtures/ner_weights.npz"))
     ap.add_argument("--resume", action="store_true", default=True)
@@ -40,13 +44,13 @@ def main() -> None:
     ap.add_argument("--dedup-docs", action="store_true",
                     help="fuzzy-dedup documents (keep one per duplicate "
                          "cluster) before extraction")
-    ap.add_argument("--alias-limit", type=int, default=50000)
     ap.add_argument("--triple-parts", type=int, default=64)
     args = ap.parse_args()
 
     from golden_horse_spark.config import get_spark
     from golden_horse_spark.plans.pipeline import PipelineConfig, run_pipeline
     from golden_horse_spark.sources.documents import synthesize_documents
+    from golden_horse_spark.sources.gazetteer import load_alias_table
 
     spark = get_spark("kg-pipeline")
     spark.sparkContext.setLogLevel("WARN")
@@ -61,7 +65,6 @@ def main() -> None:
     cfg = PipelineConfig(
         output_dir=args.output,
         weights_path=args.weights,
-        alias_limit=args.alias_limit,
         fuzzy_linking=args.fuzzy,
         triple_parts=args.triple_parts,
         resume=args.resume,
@@ -69,7 +72,7 @@ def main() -> None:
         profile=args.profile,
     )
     t0 = time.time()
-    stages = run_pipeline(spark, docs, cfg)
+    stages = run_pipeline(spark, docs, cfg, load_alias_table(spark, args.aliases))
     dt = time.time() - t0
     counts = {name: stages[name].count()
               for name in ("sentences", "mentions", "links", "entities", "triples")}
