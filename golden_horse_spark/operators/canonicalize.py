@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+from ..plans.fixpoint import fixpoint
 from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
 
 # column types the driver-side union-find fast path handles (total order
@@ -48,20 +49,16 @@ def _local_cc_limit() -> int:
     return int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "500000"))
 
 
-def _driver_union_find(spark, e2: DataFrame, dtype) -> DataFrame | None:
+def _driver_union_find(spark, e2: DataFrame, dtype) -> DataFrame:
     """Union-find over a collected edge list; component = min node of
     each set (union links the larger root under the smaller, so every
     root is its set's minimum — the exact label the distributed
-    hash-to-min rounds converge to). Returns None when the edge list
-    contains NULL endpoints (fall back to distributed semantics) — only
-    reachable with a caller's ``num_edges`` hint, since the probe in
-    ``connected_components`` rules NULLs out before collecting."""
+    hash-to-min rounds converge to). The edge list has no NULL
+    endpoint (``connected_components`` rewrites them first)."""
     import pandas as pd
 
     pdf = e2.toPandas()  # Arrow-accelerated collect
     a_name, b_name = pdf.columns[0], pdf.columns[1]
-    if pdf[a_name].isna().any() or pdf[b_name].isna().any():
-        return None
     parent: dict = {}
 
     def find(x):
@@ -106,6 +103,10 @@ def connected_components(
     """edges(src, dst) undirected → (node, component) with component =
     min node id (lexicographic) in the component.
 
+    NULL is not a node: an edge with one NULL endpoint keeps its other
+    endpoint as a node (it becomes a self-loop), an edge with two NULL
+    endpoints is dropped. Both paths below see the same rewritten edges.
+
     ``num_partitions`` pins the co-partitioning width (default:
     ``spark.sql.shuffle.partitions``).
 
@@ -115,38 +116,33 @@ def connected_components(
     union-find on the driver — identical labels (property-tested), no
     per-round job waves. Pass ``num_edges`` when the caller already
     knows the count (skips the probe); otherwise one bounded
-    ``limit(n+1)`` aggregate decides, returning the edge count and
-    whether any endpoint is NULL — a NULL-endpoint graph takes the
-    distributed rounds without collecting. Dup-pair / alias graphs are
-    tiny islands even at corpus scale, so production runs mostly take
-    the fast path too; graph-scale inputs exceed the cap and run the
-    distributed hash-to-min rounds below.
+    ``limit(n+1)`` count decides. Dup-pair / alias graphs are tiny
+    islands even at corpus scale, so production runs mostly take the
+    fast path too; graph-scale inputs exceed the cap and run the
+    distributed hash-to-min rounds below, driven to their fixpoint by
+    ``plans.fixpoint``.
     """
     spark = edges.sparkSession
     lim = _local_cc_limit() if local_edge_limit is None else local_edge_limit
     s_type = edges.schema[src].dataType
     d_type = edges.schema[dst].dataType
+    e = edges.select(
+        F.coalesce(F.col(src), F.col(dst)).alias("a"),
+        F.coalesce(F.col(dst), F.col(src)).alias("b"),
+    ).where(F.col("a").isNotNull())
     if lim > 0 and s_type == d_type and s_type.simpleString() in _LOCAL_CC_TYPES:
-        n, has_null = num_edges, False
+        n = num_edges
         if n is None:
-            # one action; when n <= lim the limit keeps every edge, so
-            # the NULL flag is exact exactly when it matters
-            probe = edges.select(src, dst).limit(lim + 1).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.col(src).isNull() | F.col(dst).isNull()).alias("null"),
-            ).first()
-            n, has_null = probe["n"], bool(probe["null"])
-        if n <= lim and not has_null:
-            out = _driver_union_find(spark, edges.select(src, dst), s_type)
-            if out is not None:
-                return out
+            n = e.limit(lim + 1).count()
+        if n <= lim:
+            return _driver_union_find(spark, e, s_type)
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # symmetrize once; hash-partition on the PROBE key b so each round's
-    # join reuses this exchange (localCheckpoint pins the partitioning)
+    # join reuses this exchange (localCheckpoint pins the partitioning).
+    # Self-loops stay: they keep nodes whose only edge is one.
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
         .repartition(p, "b")
         .transform(_pin)
@@ -161,7 +157,7 @@ def connected_components(
         .transform(_pin)
     )
 
-    for _ in range(max_iter):
+    def hop(labels):
         # propagate min label through edges; track per-node change inline so
         # convergence needs no extra join-job per round
         neighbor_label = (
@@ -177,20 +173,12 @@ def connected_components(
             .transform(_pin)
         )
         changed = new_labels.where("changed").limit(1).count()
-        labels = new_labels.select("node", "comp")
-        if changed == 0:
-            break
-    else:
-        # one-hop min-label propagation converges in O(component
-        # diameter) rounds; exiting silently with changed labels would
-        # return SPLIT components as if correct (round-5 review fix) —
-        # a >max_iter-diameter chain (long near-dup/sameAs paths) must
-        # fail loudly, not corrupt every downstream merge invariant
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "rounds — component diameter exceeds max_iter; raise "
-            "max_iter for long-chain graphs"
-        )
+        return new_labels.select("node", "comp"), changed == 0
+
+    # one-hop min-label propagation converges in O(component diameter)
+    # rounds; stopping with labels still changing would return SPLIT
+    # components, so ``fixpoint`` raises instead
+    labels = fixpoint(labels, hop, max_iter, "connected_components")
     return labels.select("node", F.col("comp").alias("component"))
 
 

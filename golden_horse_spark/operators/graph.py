@@ -23,6 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.fixpoint import fixpoint
+from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
+
 # Test seam for the per-round shuffle-budget claims: set to a list (in
 # tests) and the iterative operators append ``(tag, n_exchanges)`` for
 # every ROUND PLAN as scheduled — the audited df is the round body
@@ -44,21 +47,23 @@ def _audit_plan(tag: str, df: DataFrame) -> None:
         _plan_audit.append((tag, n_exchanges(df.select("*"))))
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    """Partitioning-preserving eager localCheckpoint (plans/pin.py):
-    under AQE, a bare localCheckpoint drops hashpartitioning metadata
-    and every co-partitioned round join/agg in this module pays
-    redundant Exchanges (measured: 4 shuffles per pagerank round
-    instead of 1)."""
-    from ..plans.pin import pin_checkpoint
-
-    return pin_checkpoint(df, eager=True)
-
-
-def _pin_lazy(df: DataFrame) -> DataFrame:
-    from ..plans.pin import pin_checkpoint
-
-    return pin_checkpoint(df, eager=False)
+def _arcs(edges, src, dst, p, key="a", directed=False):
+    """The pinned arc table ``(a, b)`` most operators here start from:
+    ``src → dst`` arcs, plus the reversed arcs when the graph is
+    undirected, without self-loops or duplicates, hash-partitioned on
+    ``key`` (the probe side of the operator's round join) and
+    checkpointed so every round reuses that exchange."""
+    arcs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    if not directed:
+        arcs = arcs.union(
+            arcs.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
+    return (
+        arcs.where(F.col("a") != F.col("b"))
+        .distinct()
+        .repartition(p, key)
+        .transform(_pin)
+    )
 
 
 def pagerank(
@@ -673,17 +678,7 @@ def k_core(
     """
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-            .where(F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .repartition(p, "a")
-        .transform(_pin)
-    )
+    sym = _arcs(edges, src, dst, p)
     deg = (
         sym.groupBy("a")
         .agg(F.count("*").alias("deg"))
@@ -691,12 +686,13 @@ def k_core(
         .repartition(p, "node")
         .transform(_pin)
     )
-    for _ in range(max_iter):
+
+    def peel(deg):
         peeled = deg.where(F.col("deg") < k).select("node")
         # the ONE action per round: materializes this round's deg
         # checkpoint and decides convergence
         if peeled.count() == 0:
-            break
+            return deg, True
         # decrements: only edges whose a-side peeled this round move
         # (sym pinned on a, peeled hashed on the same key — the semi-join
         # is co-partitioned); targets that peeled in the same round drop
@@ -717,24 +713,11 @@ def k_core(
             )
         )
         _audit_plan("k_core_round", new_deg)
-        deg = new_deg.transform(_pin_lazy)
-    else:
-        # exhaustion is only an error when peeling is still ACTIVE: a
-        # cascade that completes in exactly max_iter rounds leaves the
-        # convergence probe (peeled.count()==0) to a round that never
-        # runs — probe once more before raising (round-6 ADVICE fix,
-        # mirroring strongly_connected_components' exhaustion check)
-        if deg.where(F.col("deg") < k).limit(1).count() == 0:
-            return deg.select("node")
-        # peel cascades run one layer per round; exhausting the cap
-        # with peeling still active would return a SUPERSET of the
-        # true k-core as if correct (round-5 review fix — long chains
-        # peel ~2 nodes/round; fail loudly like connected_components)
-        raise RuntimeError(
-            f"k_core did not converge in {max_iter} rounds — peel "
-            "depth exceeds max_iter; raise max_iter for long chains"
-        )
-    return deg.select("node")
+        return new_deg.transform(_pin_lazy), False
+
+    # stopping with peeling still active would return a SUPERSET of the
+    # true k-core (long chains peel ~2 nodes a round)
+    return fixpoint(deg, peel, max_iter, "k_core").select("node")
 
 
 def core_numbers(
@@ -768,17 +751,7 @@ def core_numbers(
     """
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-            .where(F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .repartition(p, "b")  # probe side: joined on the NEIGHBOR key
-        .transform(_pin)
-    )
+    sym = _arcs(edges, src, dst, p, key="b")  # probe: the NEIGHBOR key
     from pyspark.sql import Window
 
     cores = (
@@ -789,7 +762,8 @@ def core_numbers(
         .transform(_pin)
     )
     w = Window.partitionBy("a").orderBy(F.col("nc").desc(), "b")
-    for _ in range(max_iter):
+
+    def descend(cores):
         nbr = sym.join(
             cores.select(F.col("node").alias("b"), F.col("core").alias("nc")),
             "b",
@@ -815,18 +789,11 @@ def core_numbers(
             .where(F.col("core") < F.col("old"))
             .count()
         )
-        cores = new_cores
-        if changed == 0:
-            break
-    else:
-        # H-index estimates drop as little as one node per round on
-        # chain graphs; exhausting the cap mid-descent would return
-        # OVERESTIMATED core numbers silently (round-5 review fix)
-        raise RuntimeError(
-            f"core_numbers did not converge in {max_iter} rounds — "
-            "raise max_iter for long-chain graphs"
-        )
-    return cores
+        return new_cores, changed == 0
+
+    # H-index estimates drop as little as one node per round on chain
+    # graphs; stopping mid-descent would return OVERESTIMATED cores
+    return fixpoint(cores, descend, max_iter, "core_numbers")
 
 
 def bfs_distances(
@@ -852,17 +819,7 @@ def bfs_distances(
     """
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-            .where(F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .repartition(p, "a")
-        .transform(_pin)
-    )
+    sym = _arcs(edges, src, dst, p)
     # seed schema derives from the edge table (as pagerank does for
     # sources) — a hardcoded 'node long' coerced string/int node ids and
     # broke the frontier join for non-long graphs
@@ -937,16 +894,7 @@ def common_neighbor_pairs(
     """
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-            .where(F.col("a") != F.col("b"))
-        )
-        .distinct()
-    )
-    sym = sym.repartition(p, "a").transform(_pin)
+    sym = _arcs(edges, src, dst, p)
     # the cap limits WEDGE CENTERS only; adjacency for the anti-join
     # must stay uncapped, else hub-incident edges would resurface as
     # "predicted" links
@@ -1682,8 +1630,8 @@ def _kmv_est(col, k):
 def _ball_init(sym, p, sketch, lg_k, k):
     """(node, sk) initial state: each node's sketch holds {node}."""
     nodes = (
-        sym.select(F.col("s").alias("node"))
-        .union(sym.select(F.col("d").alias("node")))
+        sym.select(F.col("a").alias("node"))
+        .union(sym.select(F.col("b").alias("node")))
         .distinct()
     )
     if sketch == "kmv":
@@ -1722,19 +1670,6 @@ def _check_sketch_args(sketch, lg_k, k):
         raise ValueError(f"lg_k={lg_k} outside the HLL range [4, 21]")
     if sketch == "kmv" and k < 8:
         raise ValueError(f"k={k} — bottom-k needs k ≥ 8 to estimate")
-
-
-def _sym_arcs(edges, src, dst, directed, p):
-    arcs = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).where(
-        F.col("s") != F.col("d")
-    )
-    if not directed:
-        arcs = arcs.union(
-            arcs.select(F.col("d").alias("s"), F.col("s").alias("d"))
-        )
-    # counter(v) gathers along REVERSED arcs (v pulls from w over (v,w)),
-    # so partition the arc table by the probe side d once and pin it
-    return arcs.distinct().repartition(p, "d").transform(_pin)
 
 
 def neighborhood_function(
@@ -1786,14 +1721,16 @@ def neighborhood_function(
     _check_sketch_args(sketch, lg_k, k)
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = _sym_arcs(edges, src, dst, directed, p)
+    # counter(v) gathers along REVERSED arcs (v pulls from w over (v,w)),
+    # so the arc table is partitioned by the probe side b
+    sym = _arcs(edges, src, dst, p, key="b", directed=directed)
     counters = _ball_init(sym, p, sketch, lg_k, k)
     totals = [counters.count()]  # N(0) = n nodes
     est = _ball_est(sketch, k)
     for _ in range(max_hops):
         gathered = sym.join(
-            counters.withColumnRenamed("node", "d"), "d"
-        ).select(F.col("s").alias("node"), "sk")
+            counters.withColumnRenamed("node", "b"), "b"
+        ).select(F.col("a").alias("node"), "sk")
         counters = (
             gathered.union(counters.select("node", "sk"))
             .groupBy("node")
@@ -1915,7 +1852,7 @@ def hyperball_profile(
     _check_sketch_args(sketch, lg_k, k)
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = _sym_arcs(edges, src, dst, directed, p)
+    sym = _arcs(edges, src, dst, p, key="b", directed=directed)
     est = _ball_est(sketch, k)
     state = (
         _ball_init(sym, p, sketch, lg_k, k)
@@ -1929,9 +1866,9 @@ def hyperball_profile(
     totals = [state.count()]  # N(0) = n nodes
     for t in range(1, max_hops + 1):
         gathered = sym.join(
-            state.select(F.col("node").alias("d"), "sk"), "d"
+            state.select(F.col("node").alias("b"), "sk"), "b"
         ).select(
-            F.col("s").alias("node"), "sk",
+            F.col("a").alias("node"), "sk",
             F.lit(None).cast("long").alias("ball"),
             F.lit(None).cast("double").alias("hc"),
         )
@@ -2019,12 +1956,6 @@ def strongly_connected_components(
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    arcs0 = (
-        raw.where(F.col("a") != F.col("b"))
-        .distinct()
-        .repartition(p, "a")
-        .transform(_pin)
-    )
     # node universe from the RAW edges: a node incident only to
     # self-loops has no arc after the a != b cut but is still its own
     # singleton SCC (every node belongs to exactly one) — trim emits it
@@ -2036,10 +1967,11 @@ def strongly_connected_components(
         .transform(_pin)
     )
     done = []  # per-round (node, component) deltas, each checkpointed
-    arcs = arcs0
-    for _ in range(max_rounds):
+
+    def settle(state):
+        active, arcs = state
         if active.count() == 0:
-            break
+            return state, True
         # restrict arcs to the active subgraph (both endpoints)
         arcs = (
             arcs.join(
@@ -2087,7 +2019,7 @@ def strongly_connected_components(
                 .transform(_pin)
             )
         if active.count() == 0:
-            break
+            return (active, arcs), True
         # 2. COLOR: forward min-id propagation to fixpoint
         colors = (
             active.select("node", F.col("node").alias("color"))
@@ -2174,17 +2106,16 @@ def strongly_connected_components(
             .repartition(p, "node")
             .transform(_pin)
         )
-    else:
-        # the emptiness check runs at the TOP of each round — if the
-        # max_rounds-th round's gather settled the last active nodes,
-        # the work is complete and exhaustion is not an error (round-5
-        # review fix of a spurious raise at depth exactly max_rounds)
-        if active.count() != 0:
-            raise RuntimeError(
-                f"strongly_connected_components: no fixpoint in "
-                f"{max_rounds} rounds — condensation too deep; raise "
-                "max_rounds"
-            )
+        return (active, arcs), False
+
+    # the emptiness check runs at the TOP of each round, so a run whose
+    # last allowed round settles everything converges on the re-probe
+    active, _ = fixpoint(
+        (active, _arcs(edges, src, dst, p, directed=True)),
+        settle,
+        max_rounds,
+        "strongly_connected_components",
+    )
     if not done:  # edgeless input (only self-loops / empty)
         return active.select(
             "node", F.col("node").alias("component")
@@ -2376,17 +2307,7 @@ def random_walks(
         raise ValueError("random_walks: walk_length ≥ 0, num_walks ≥ 1")
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    base = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not directed:
-        base = base.union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-    arcs = (
-        base.where(F.col("a") != F.col("b"))
-        .distinct()
-        .repartition(p, "a")
-        .transform(_pin)
-    )
+    arcs = _arcs(edges, src, dst, p, directed=directed)
     from pyspark.sql import Window
 
     adj = (
@@ -2601,17 +2522,7 @@ def node2vec_walks(
     w_out = max(1, round(3600.0 / q))
     spark = edges.sparkSession
     pn = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    base = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not directed:
-        base = base.union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-    arcs = (
-        base.where(F.col("a") != F.col("b"))
-        .distinct()
-        .repartition(pn, "a")
-        .transform(_pin)
-    )
+    arcs = _arcs(edges, src, dst, pn, directed=directed)
     # 32-bit-draw ceiling (round-5 review): the md5 draw addresses at
     # most 2^32 of cumulative weight — a hub whose Σ(quantized weight)
     # exceeds that would NEVER choose its highest-ranked neighbors
@@ -2776,17 +2687,7 @@ def betweenness_centrality(
     """
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    arcs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not directed:
-        arcs = arcs.union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-    arcs = (
-        arcs.where(F.col("a") != F.col("b"))
-        .distinct()
-        .repartition(p, "a")
-        .transform(_pin)
-    )
+    arcs = _arcs(edges, src, dst, p, directed=directed)
     roots = _roots(arcs, sources, "betweenness_centrality")
     # ---- forward: per-level (root, node, sigma) ----
     lvl0 = (
@@ -2923,17 +2824,7 @@ def reachability(
     """
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    arcs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not directed:
-        arcs = arcs.union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-    arcs = (
-        arcs.where(F.col("a") != F.col("b"))
-        .distinct()
-        .repartition(p, "a")
-        .transform(_pin)
-    )
+    arcs = _arcs(edges, src, dst, p, directed=directed)
     roots = _roots(arcs, sources, "reachability")
     first = (
         roots.select(

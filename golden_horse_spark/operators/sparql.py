@@ -55,6 +55,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..plans.fixpoint import fixpoint
 from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
 
 
@@ -1156,23 +1157,18 @@ def rdfs_closure(
         # planning cost grows multiplicatively across passes — the
         # checkpoint makes every pass plan against a materialized scan,
         # and its count() doubles as the fixpoint probe's input
-        out = out.transform(_pin)
-        prev = out.count()
-        for _ in range(8):
-            out = rdfs_closure(
-                out, subj=subj, pred=pred, obj=obj, sco=sco, spo=spo,
+        def rerun(state):
+            prev_out, prev = state
+            nxt = rdfs_closure(
+                prev_out, subj=subj, pred=pred, obj=obj, sco=sco, spo=spo,
                 dom=dom, rng=rng, type_pred=type_pred, max_hops=max_hops,
                 collect_threshold=collect_threshold, _in_meta_pass=True,
             ).transform(_pin)
-            n = out.count()
-            if n == prev:
-                break
-            prev = n
-        else:
-            raise RuntimeError(
-                "rdfs_closure: meta-schema entailment did not reach a "
-                "fixpoint in 8 passes — normalize the ontology"
-            )
+            n = nxt.count()
+            return (nxt, n), n == prev
+
+        out = out.transform(_pin)
+        out, _ = fixpoint((out, out.count()), rerun, 8, "rdfs_closure")
     return out
 
 

@@ -3157,6 +3157,46 @@ def test_scc_completes_at_exactly_max_rounds(spark):
     }
 
 
+def test_core_numbers_completes_at_exactly_max_iter(spark):
+    """A 10-node path: the ends' core 1 spreads inward one node a
+    round and reaches the center in round 4; the round-5 probe only
+    confirms it. max_iter=4 must return, not raise."""
+    from golden_horse_spark.operators.graph import core_numbers
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "src int, dst int"
+    )
+    out = core_numbers(path, max_iter=4)
+    assert {(r["node"], r["core"]) for r in out.collect()} == {
+        (i, 1) for i in range(10)
+    }
+
+
+def test_scc_raises_on_nonconvergence(spark):
+    """Chain of five 2-cycles with ids increasing along it: nothing
+    trims, one color covers the chain, and each outer round settles
+    only the minimum root's SCC — five rounds. A cap of 2 must fail
+    loudly; the default cap must match Tarjan."""
+    from golden_horse_spark.operators.graph import (
+        strongly_connected_components,
+    )
+
+    edges = []
+    for i in range(5):
+        a, b = 2 * i + 1, 2 * i + 2
+        edges += [(a, b), (b, a)]
+        if i < 4:
+            edges.append((b, b + 1))
+    df = spark.createDataFrame(edges, "src int, dst int")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        strongly_connected_components(df, max_rounds=2)
+    got = {
+        r["node"]: r["component"]
+        for r in strongly_connected_components(df).collect()
+    }
+    assert got == _py_scc(edges)
+
+
 def test_transe_rank_eval_dedups_test_triples(spark):
     """A duplicated test triple must rank identically to the unique one
     — not 2*n_better+1 from the doubled score stream (round-5 review

@@ -1347,36 +1347,40 @@ def test_cc_num_edges_hint_and_limit_fallback(spark):
     assert over_cap == want
 
 
-def test_cc_null_endpoints_skip_driver_collect(spark, monkeypatch):
-    """The fast-path probe flags NULL endpoints in the same action as
-    the edge count, so a NULL-endpoint graph under the edge cap goes
-    straight to the distributed rounds: the edge list is never
-    collected, and the labels equal the distributed path's."""
-    from golden_horse_spark.operators import canonicalize
+def test_cc_null_endpoints_are_not_nodes_on_both_paths(spark):
+    """NULL is not a node: an edge with one NULL endpoint keeps its
+    other endpoint (as a self-loop), an edge with two is dropped. The
+    driver union-find and the distributed rounds agree, and a NULL
+    between two components no longer stalls the distributed rounds."""
+    from golden_horse_spark.operators.canonicalize import connected_components
 
-    # one NULL endpoint with a single neighbour: a NULL node between two
-    # components never converges in the distributed rounds (NULL keys
-    # never join), which the fast path cannot change
     edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), (None, "d"), ("f", "g")],
+        [("a", None), (None, "c"), ("d", "e"), (None, None)],
         "src string, dst string",
     )
-    want = {
-        (r["node"], r["component"])
-        for r in canonicalize.connected_components(
-            edges, local_edge_limit=0
-        ).collect()
-    }
+    want = {("a", "a"), ("c", "c"), ("d", "d"), ("e", "d")}
+    for lim in (None, 0):  # driver union-find, then distributed rounds
+        got = {
+            (r["node"], r["component"])
+            for r in connected_components(
+                edges, max_iter=3, local_edge_limit=lim
+            ).collect()
+        }
+        assert got == want, lim
 
-    def no_collect(*a, **k):
-        raise AssertionError("driver union-find collected a NULL graph")
 
-    monkeypatch.setattr(canonicalize, "_driver_union_find", no_collect)
-    got = {
-        (r["node"], r["component"])
-        for r in canonicalize.connected_components(edges).collect()
+def test_cc_converges_on_last_allowed_round(spark):
+    """A 10-node path settles in exactly 8 distributed rounds; the 9th
+    probe only confirms it. max_iter=8 must return, not raise."""
+    from golden_horse_spark.operators.canonicalize import connected_components
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "src int, dst int"
+    )
+    out = connected_components(path, max_iter=8, local_edge_limit=0)
+    assert {(r["node"], r["component"]) for r in out.collect()} == {
+        (i, 0) for i in range(10)
     }
-    assert got == want
 
 
 def test_bcubed_pin_exact_for_multimillion_item_cell(spark):
