@@ -17,11 +17,19 @@ def spark():
     from golden_horse_spark.config import get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    # The fixtures are tiny, so the suite's wall time is Spark's fixed
+    # cost per stage and per query: one shuffle partition per core (every
+    # shuffle still spans several partitions), and the one-line plan
+    # description Spark posts for each query and each adaptive re-plan
+    # instead of the formatted one. Neither changes any result.
     s = get_spark(
         "golden-horse-tests",
         master="local[4]",
-        shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "8g"},
+        shuffle_partitions=4,
+        extra_conf={
+            "spark.driver.memory": "8g",
+            "spark.sql.ui.explainMode": "simple",
+        },
     )
     yield s
 
