@@ -1707,14 +1707,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["q_link_coherence"] = q_link_coherence
 
-    # ---------------- fuzzy candidate generation (LSH blocking path)
+    # ---------------- fuzzy candidate generation (prefix-filter join)
     def q_fuzzy_candidates(spark, sf):
         """generate_candidates(fuzzy=True) over deterministic synthetic
         mentions/aliases from the documents table: aliases are words with
         the last char dropped, so most matches are fuzzy (char-bigram
-        Jaccard ≤ 0.5 via MinHash-LSH blocking) with a few exact hits.
-        The oracle computes the same bigram-set Jaccard exhaustively —
-        green iff the LSH blocking has full recall on this data.
+        Jaccard distance < 0.5, found by the prefix-filter join) with a
+        few exact hits. The oracle computes the same bigram-set Jaccard
+        exhaustively; the prefix-filter theorem makes the blocking
+        complete, so equality is expected on any data.
 
         Tagged third part (block_id prefix ``edit:``): FastSS
         deletion-neighborhood blocking + exact levenshtein ≤ 1 verify
@@ -1757,8 +1758,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
         cands = generate_candidates(
-            mentions, aliases, fuzzy=True, jaccard_max_distance=0.5,
-            num_hash_tables=16,
+            mentions, aliases, fuzzy=True, jaccard_max_distance=0.5
         )
         edit = edit_distance_candidates(mentions, aliases, max_distance=1)
         # round-4 late tagged parts — the classical ER pruning + verify
@@ -4110,7 +4110,7 @@ def oracle_sql() -> dict[str, str]:
                                / len(list_distinct(m.g || a.g)))) * 0.8 AS d_score,
                        'lsh:' || a.surface_form AS block_id
                 FROM mg m, ag a
-                -- strict <: Spark's approxSimilarityJoin filters dist < threshold
+                -- strict <: fuzzy_candidates keeps dist < threshold
                 WHERE 1.0 - len(list_intersect(m.g, a.g)) * 1.0
                       / len(list_distinct(m.g || a.g)) < 0.5
             ),

@@ -473,51 +473,44 @@ def ngram_jaccard_pairs(
     return out
 
 
-def prefix_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = 3,
-    min_jaccard: float = 0.8,
+def prefix_jaccard_join(
+    left: DataFrame, right: DataFrame | None, t_ppm: int
 ) -> DataFrame:
-    """EXACT word-k-gram Jaccard similarity join via prefix filtering
-    (Chaudhuri et al. ICDE 2006; Bayardo et al. WWW 2007 All-Pairs /
-    PPJoin family) — the lossless alternative to
-    :func:`ngram_jaccard_pairs`'s ``df_cap``: the cap bounds hot-shingle
-    fan-out by DROPPING stop-shingles from the universe (changes the
-    measure); the prefix filter keeps the measure exact and still never
-    joins on hot tokens, because the canonical rarest-first ordering
-    puts them LAST and the prefix keeps only each set's first
-    ``|x| − ⌈t·|x|⌉ + 1`` tokens. Theorem (prefix filtering): if
-    J(x, y) ≥ t, the two prefixes share ≥1 token — so the equi-join on
-    prefix tokens is a complete candidate generator, and the exact
-    verify loses nothing.
+    """EXACT set-similarity join by prefix filtering (Chaudhuri et al.
+    ICDE 2006; Bayardo et al. WWW 2007 All-Pairs / PPJoin family): every
+    pair of sets with Jaccard ≥ t = ``t_ppm``/10⁶, never an all-pairs join.
 
-    Scale shape: shingle df + a VOCABULARY-sized rank sort (rarest
-    first, shingle tiebreak — same bounded-sort class as the alias
-    dictionary builders), one co-keyed rank join back, per-doc sorted
-    rank arrays, prefix explode (≈ (1−t)·|x| + 1 rows per doc) →
-    equi-join on the rank with the length filter ``t·|x| ≤ |y| ≤
-    |x|/t`` applied IN the join, distinct, then one verify join
-    against the per-doc arrays (``array_intersect`` on sorted ranks).
-    Threshold arithmetic is integer ppm (``T = round(t·10⁶)``,
-    ``⌈t·n⌉ = (T·n + 10⁶ − 1) div 10⁶``) — float ``ceil(0.8·5)`` is 5
-    in IEEE doubles and would silently SHORTEN the prefix (recall
-    loss); the oracle mirrors the same integer forms.
+    ``left``/``right`` are ``(id, tokens)`` frames: any id column, then
+    an array of DISTINCT tokens, one row per id. The id columns stay
+    apart (their types may differ); only the tokens are unioned, to
+    rank them. ``right=None`` is the self-join, pairs ``id_l < id_r``.
 
-    Output: ``(doc_a, doc_b, jaccard)`` with jaccard ≥ t, round(…, 6),
-    identical pair set and values to ``ngram_jaccard_pairs(df_cap=
-    None)``."""
-    if not (0 < min_jaccard <= 1):
-        raise ValueError("prefix_jaccard_pairs: min_jaccard must be in (0, 1]")
-    T = int(round(min_jaccard * 1_000_000))
-    sh = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.expr(shingles_expr(text_col, k)))
-        ).alias("s"),
-    )
+    Tokens are ranked rarest first (df, token tiebreak), so hot tokens
+    sort LAST and each set keeps its first ``n − ⌈t·n⌉ + 1`` ranks as
+    its prefix. Theorem (prefix filtering): if J(x, y) ≥ t the two
+    prefixes share a token, so the equi-join on prefix ranks (with the
+    length filter ``t·|x| ≤ |y| ≤ |x|/t`` IN the join) is a complete
+    candidate generator, verified by ``array_intersect`` on the sorted
+    rank arrays. The rank sort is vocabulary-sized (the alias-dictionary
+    class). Threshold arithmetic is integer ppm (``⌈t·n⌉ = (t_ppm·n + 10⁶
+    − 1) div 10⁶``): float ``ceil(0.8·5)`` is 5 in IEEE doubles and would
+    silently SHORTEN the prefix; the oracles mirror the integer forms.
+
+    Output: ``(id_l, id_r, n_l, n_r, common)`` — set sizes and
+    intersection size of every pair with
+    ``common·10⁶ ≥ (n_l + n_r − common)·t_ppm``."""
+
+    def explode(side: DataFrame) -> DataFrame:
+        return side.select(
+            F.col(side.columns[0]).alias("_id"),
+            F.explode(side.columns[1]).alias("s"),
+        )
+
+    sh_l = explode(left)
+    sh_r = sh_l if right is None else explode(right)
+    grams = sh_l if right is None else sh_l.select("s").unionByName(sh_r.select("s"))
     rank = (
-        sh.groupBy("s")
+        grams.groupBy("s")
         .agg(F.count("*").alias("_df"))
         .select(
             "s",
@@ -526,69 +519,95 @@ def prefix_jaccard_pairs(
             .alias("_rk"),
         )
     )
-    toks = (
-        sh.join(rank, "s")
-        .groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list("_rk")).alias("_toks"),
-            F.count("*").alias("n"),
+
+    def ranked(sh: DataFrame) -> DataFrame:
+        return (
+            sh.join(rank, "s")
+            .groupBy("_id")
+            .agg(
+                F.sort_array(F.collect_list("_rk")).alias("_toks"),
+                F.count("*").alias("n"),
+            )
         )
-        .transform(_pin_lazy)
-    )
+
+    toks_l = ranked(sh_l)
+    toks_r = toks_l if right is None else ranked(sh_r)
     # prefix length p = n − ⌈t·n⌉ + 1 in exact ppm integer arithmetic
     plen = (
         F.col("n")
-        - F.expr(f"(n * {T}L + 999999) div 1000000")
+        - F.expr(f"(n * {t_ppm}L + 999999) div 1000000")
         + F.lit(1)
     ).cast("int")
-    pref = toks.select(
-        "doc_id",
-        "n",
-        F.explode(F.slice("_toks", F.lit(1), plen)).alias("_rk"),
+
+    def prefix(toks: DataFrame) -> DataFrame:
+        return toks.select(
+            "_id", "n", F.explode(F.slice("_toks", F.lit(1), plen)).alias("_rk")
+        )
+
+    a, b = prefix(toks_l).alias("a"), prefix(toks_r).alias("b")
+    on = (
+        (F.col("a._rk") == F.col("b._rk"))
+        & (F.col("b.n") * 1_000_000 >= F.col("a.n") * t_ppm)
+        & (F.col("a.n") * 1_000_000 >= F.col("b.n") * t_ppm)
     )
-    a, b = pref.alias("a"), pref.alias("b")
+    if right is None:
+        on = on & (F.col("a._id") < F.col("b._id"))
     cand = (
-        a.join(
-            b,
-            (F.col("a._rk") == F.col("b._rk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("b.n") * 1_000_000 >= F.col("a.n") * T)
-            & (F.col("a.n") * 1_000_000 >= F.col("b.n") * T),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
+        a.join(b, on)
+        .select(F.col("a._id").alias("id_l"), F.col("b._id").alias("id_r"))
         .distinct()
     )
-    ta = toks.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("_toks").alias("_tka"),
-        F.col("n").alias("na"),
-    )
-    tb = toks.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("_toks").alias("_tkb"),
-        F.col("n").alias("nb"),
-    )
-    common = F.size(F.array_intersect("_tka", "_tkb"))
+
+    def side(toks: DataFrame, tag: str) -> DataFrame:
+        return toks.select(
+            F.col("_id").alias(f"id_{tag}"),
+            F.col("_toks").alias(f"_t{tag}"),
+            F.col("n").alias(f"n_{tag}"),
+        )
+
+    common = F.size(F.array_intersect("_tl", "_tr"))
     return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .withColumn("_common", common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("_common")
-                / (F.col("na") + F.col("nb") - F.col("_common")),
-                6,
-            ),
-        )
+        cand.join(side(toks_l, "l"), "id_l")
+        .join(side(toks_r, "r"), "id_r")
+        .withColumn("common", common)
         .where(
-            (F.col("_common") * 1_000_000)
-            >= (F.col("na") + F.col("nb") - F.col("_common")) * T
+            F.col("common") * 1_000_000
+            >= (F.col("n_l") + F.col("n_r") - F.col("common")) * t_ppm
         )
-        .select("doc_a", "doc_b", "jaccard")
+        .select("id_l", "id_r", "n_l", "n_r", "common")
+    )
+
+
+def prefix_jaccard_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    k: int = 3,
+    min_jaccard: float = 0.8,
+) -> DataFrame:
+    """EXACT word-k-gram Jaccard similarity join — the lossless
+    alternative to :func:`ngram_jaccard_pairs`'s ``df_cap``: the cap
+    bounds hot-shingle fan-out by DROPPING stop-shingles from the
+    universe (changes the measure); the prefix filter of
+    :func:`prefix_jaccard_join` keeps the measure exact and still never
+    joins on hot tokens, because the rarest-first ordering puts them
+    last, outside every prefix. ``t = round(min_jaccard·10⁶)`` ppm.
+
+    Output: ``(doc_a, doc_b, jaccard)`` with jaccard ≥ t, round(…, 6),
+    identical pair set and values to ``ngram_jaccard_pairs(df_cap=
+    None)``."""
+    if not (0 < min_jaccard <= 1):
+        raise ValueError("prefix_jaccard_pairs: min_jaccard must be in (0, 1]")
+    sets = docs.select(
+        "doc_id",
+        F.array_distinct(F.expr(shingles_expr(text_col, k))).alias("s"),
+    )
+    union = F.col("n_l") + F.col("n_r") - F.col("common")
+    return prefix_jaccard_join(
+        sets, None, int(round(min_jaccard * 1_000_000))
+    ).select(
+        F.col("id_l").alias("doc_a"),
+        F.col("id_r").alias("doc_b"),
+        F.round(F.col("common") / union, 6).alias("jaccard"),
     )
 
 

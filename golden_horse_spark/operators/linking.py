@@ -9,23 +9,30 @@ Scale design (SURVEY.md §4.2):
   dicts up to the autoBroadcastJoinThreshold ride the broadcast; larger
   dicts degrade gracefully to a shuffled hash join that AQE may convert
   per-partition.
-* Fuzzy candidates: MinHash-LSH blocking over character-bigram vectors
-  (pyspark.ml.feature.MinHashLSH.approxSimilarityJoin) — only pairs that
-  collide in a band bucket are scored, so the cross product never
-  materializes. This is the blocking stage; the pairwise scorer then
-  ranks candidates.
-* Skew: hot surface forms ("张三" in 10% of docs) concentrate in one
-  bucket; the exact join is broadcast (no shuffle ⇒ no skew), and the
-  per-surface candidate counts use the salted aggregation helper
-  (operators/salting.py). AQE skew-join splitting covers the LSH join.
+* Fuzzy candidates: an EXACT character-bigram Jaccard join by prefix
+  filtering (dedup.prefix_jaccard_join) — only pairs whose rarest-first
+  bigram prefixes share a rank are verified, so the cross product never
+  materializes, and the prefix-filtering theorem makes the blocking
+  complete (every pair under the distance threshold is found, the same
+  rows on every run). This is the blocking stage; the pairwise scorer
+  then ranks candidates.
+* Skew: hot surface forms ("张三" in 10% of docs) concentrate on a few
+  keys; the exact join is broadcast (no shuffle ⇒ no skew); the fuzzy
+  join ranks bigrams rarest first, so a hot surface's bigrams sort to
+  the end of each set and drop out of its join-key prefix whenever the
+  set is longer than the prefix; the per-surface candidate counts use
+  the salted aggregation helper (operators/salting.py).
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
+from .dedup import prefix_jaccard_join
 
 CANDIDATE_COLS = ["mention_id", "entity_id", "score", "block_id"]
 
@@ -102,100 +109,49 @@ def alias_priors(
     )
 
 
+def _bigrams(col: str):
+    """Distinct char bigrams of ``col``; a 1-char string is its own
+    single gram."""
+    return F.array_distinct(
+        F.expr(
+            f"case when length({col}) >= 2 then "
+            f"transform(sequence(1, length({col}) - 1), i -> substring({col}, i, 2)) "
+            f"else array({col}) end"
+        )
+    ).alias("_g")
+
+
 def fuzzy_candidates(
     mentions: DataFrame,
     aliases: DataFrame,
     jaccard_max_distance: float = 0.5,
-    num_hash_tables: int = 3,
-    seed: int = 42,
-    vocab_literal_max: int = 50_000,
 ) -> DataFrame:
-    """MinHash-LSH blocking on char bigrams; returns candidates whose
-    bigram-set Jaccard distance is STRICTLY below the threshold
-    (approxSimilarityJoin filters dist < threshold). Score =
-    (1−dist)·prior.
-
-    The fitted CountVectorizer vocabulary is needed row-side to drop
-    grams the vectorizer would zero out. Up to ``vocab_literal_max``
-    entries it ships as a literal array in the plan (cheapest; bounded
-    by the alias dictionary's bigram inventory); beyond that the
-    restriction switches to an explode → broadcast-join → re-group shape
-    so a huge dictionary can never bloat the query plan itself
-    (round-3 guard; both paths equality-tested)."""
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH
-
-    def with_grams(df: DataFrame, col: str) -> DataFrame:
-        return df.withColumn(
-            "grams",
-            F.expr(
-                f"case when length({col}) >= 2 then "
-                f"transform(sequence(1, length({col}) - 1), i -> substring({col}, i, 2)) "
-                f"else array({col}) end"
-            ),
-        )
-
-    m = with_grams(mentions.select("mention_id", "surface").distinct(), "surface")
-    a = with_grams(aliases, "surface_form")
-    if m.isEmpty() or a.isEmpty():
-        return mentions.sparkSession.createDataFrame(
-            [], "mention_id string, entity_id string, score double, block_id string"
-        )
-    cv = CountVectorizer(
-        inputCol="vgrams", outputCol="vec", binary=True, minDF=1.0
-    ).fit(
-        a.select(F.col("grams").alias("vgrams"))
-        .union(m.select(F.col("grams").alias("vgrams")))
-    )
-    # MinHashLSH rejects all-zero vectors. The vocabulary is fit on the
-    # union of both sides, so a zero vector only appears when vocabSize
-    # truncates a row's every gram; guard JVM-side by intersecting grams
-    # with the fitted vocabulary instead of a per-row Python UDF over
-    # the vector.
-    if len(cv.vocabulary) <= vocab_literal_max:
-        vocab = F.array(*[F.lit(v) for v in cv.vocabulary])
-
-        def restrict(df: DataFrame, key_cols: list[str]) -> DataFrame:
-            return df.withColumn(
-                "vgrams", F.array_intersect("grams", vocab)
-            ).where(F.size("vgrams") > 0)
-
-    else:
-        spark = mentions.sparkSession
-        vocab_df = spark.createDataFrame(
-            [(v,) for v in cv.vocabulary], "_g string"
-        )
-
-        def restrict(df: DataFrame, key_cols: list[str]) -> DataFrame:
-            # explode → broadcast semi-join → regroup; rows whose every
-            # gram fell outside the vocabulary drop via the inner join
-            # (CountVectorizer is binary, so dedup/order don't matter)
-            kept = (
-                df.select(*key_cols, F.explode("grams").alias("_g"))
-                .join(F.broadcast(vocab_df), "_g")
-                .groupBy(*key_cols)
-                .agg(F.array_distinct(F.collect_list("_g")).alias("vgrams"))
-            )
-            return df.join(kept, key_cols)
-
-    mv = cv.transform(restrict(m, ["mention_id"]))
-    av = cv.transform(restrict(a, ["surface_form"]))
-    lsh = MinHashLSH(
-        inputCol="vec", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    ).fit(av)
-    # lineage break: mv/av share the docs scan + CV udf lineage; joined
-    # directly, the analyzer's relation dedup re-binds one side's hash
-    # UDF input past its own vgrams filter (observed as "Must have at
-    # least 1 non zero entry" on rows both sides individually never
-    # produce). Both sides are bounded (distinct surfaces ∪ alias dict),
-    # so materializing them is also the cheaper plan (CV udf runs once).
-    mv = mv.transform(_pin_lazy)
-    av = av.transform(_pin_lazy)
-    joined = lsh.approxSimilarityJoin(mv, av, jaccard_max_distance, "jaccard")
-    return joined.select(
-        F.col("datasetA.mention_id").alias("mention_id"),
-        F.col("datasetB.entity_id").alias("entity_id"),
-        ((1.0 - F.col("jaccard")) * F.col("datasetB.prior")).alias("score"),
-        F.concat(F.lit("lsh:"), F.col("datasetB.surface_form")).alias("block_id"),
+    """Every (mention, alias) pair whose char-bigram-set Jaccard
+    distance is STRICTLY below ``t`` — exactly, via the prefix-filter
+    join :func:`~.dedup.prefix_jaccard_join` over distinct
+    (mention_id, surface) rows × distinct alias rows, so no output row
+    repeats. Distance is ``1.0 − |x∩y| / |x∪y|`` in doubles (MLlib's
+    MinHash key distance, the DuckDB oracle's form); score =
+    (1 − dist)·prior; block_id ``lsh:<surface_form>`` (the blocking-stage
+    tag). The prefix threshold is the ppm floor of ``1 − t``, so every
+    pair with dist < t passes it; the strict double compare verifies."""
+    t = jaccard_max_distance
+    if not (0 < t <= 1):
+        raise ValueError("fuzzy_candidates: jaccard_max_distance must be in (0, 1]")
+    m = mentions.select(
+        F.struct("mention_id", "surface").alias("m"), _bigrams("surface")
+    ).distinct()
+    a = aliases.select(
+        F.struct("surface_form", "entity_id", "prior").alias("a"),
+        _bigrams("surface_form"),
+    ).distinct()
+    pairs = prefix_jaccard_join(m, a, math.floor((1.0 - t) * 1_000_000))
+    dist = 1.0 - F.col("common") / (F.col("n_l") + F.col("n_r") - F.col("common"))
+    return pairs.withColumn("_dist", dist).where(F.col("_dist") < t).select(
+        F.col("id_l.mention_id").alias("mention_id"),
+        F.col("id_r.entity_id").alias("entity_id"),
+        ((1.0 - F.col("_dist")) * F.col("id_r.prior")).alias("score"),
+        F.concat(F.lit("lsh:"), F.col("id_r.surface_form")).alias("block_id"),
     )
 
 
@@ -249,10 +205,11 @@ def edit_distance_candidates(
     (Spark levenshtein semantics).
 
     Score = prior · (1 − dist / max(len(surface), len(alias))), so an
-    exact hit scores the full prior. Complements fuzzy_candidates: LSH
-    recalls long near-duplicate surfaces cheaply; deletion blocking is
-    exact-recall for short surfaces under small d (typos, dropped
-    chars), which LSH's bigram Jaccard under-recalls.
+    exact hit scores the full prior. Complements fuzzy_candidates:
+    bigram Jaccard recalls long near-duplicate surfaces; deletion
+    blocking recalls short surfaces under small d (typos, dropped
+    chars), whose bigram sets share too little to pass a Jaccard
+    threshold.
     """
     if max_distance not in (1, 2):
         raise ValueError("max_distance must be 1 or 2 (variant blowup is O(len^d))")
@@ -309,12 +266,11 @@ def generate_candidates(
     aliases: DataFrame,
     fuzzy: bool = False,
     jaccard_max_distance: float = 0.5,
-    num_hash_tables: int = 3,
     edit_distance: int | None = None,
 ) -> DataFrame:
     """Candidate generation with stacked blocking strategies: exact
-    broadcast lookup always; optional MinHash-LSH bigram blocking
-    (``fuzzy=True``) and/or FastSS deletion-neighborhood blocking
+    broadcast lookup always; optional exact bigram-Jaccard prefix-filter
+    blocking (``fuzzy=True``) and/or FastSS deletion-neighborhood blocking
     (``edit_distance=1|2``) — each recall pass runs only over mentions
     the EARLIER passes left uncovered (anti-join), so a mention's
     candidates come from the cheapest strategy that reached it."""
@@ -327,9 +283,7 @@ def generate_candidates(
 
     if fuzzy:
         cands = cands.unionByName(
-            fuzzy_candidates(
-                uncovered(), aliases, jaccard_max_distance, num_hash_tables
-            )
+            fuzzy_candidates(uncovered(), aliases, jaccard_max_distance)
         )
     if edit_distance is not None:
         cands = cands.unionByName(

@@ -1026,6 +1026,12 @@ def rdfs_closure(
     t = triples.select(
         F.col(subj).alias("s"), F.col(pred).alias("p"), F.col(obj).alias("o")
     )
+    if not _in_meta_pass:
+        # the pass below references its input ~11 times; pinned once,
+        # each reference scans the checkpoint instead of re-planning
+        # (and re-running) an unmaterialized input's whole lineage. Meta
+        # passes receive the previous pass's pinned output.
+        t = t.transform(_pin)
     schema_preds = (sco, spo, dom, rng)
 
     spark = triples.sparkSession

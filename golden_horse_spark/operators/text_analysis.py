@@ -33,15 +33,6 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(F.filter(toks, lambda t: F.trim(t) != ""))
 
 
-def hanzi_ratio(text: Column) -> Column:
-    """Share of CJK (U+4E00-9FA5) chars — the is_chinese predicate
-    (icwb.py:451-455) lifted to a ratio."""
-    han = F.length(F.regexp_replace(text, "[^一-龥]", ""))
-    return F.when(F.length(text) == 0, 0.0).otherwise(
-        han / F.length(text)
-    )
-
-
 def punct_ratio(text: Column) -> Column:
     p = F.length(F.regexp_replace(text, "[^.,;:!?，。；：！？]", ""))
     return F.when(F.length(text) == 0, 0.0).otherwise(p / F.length(text))

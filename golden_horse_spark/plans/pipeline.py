@@ -404,7 +404,12 @@ def run_pipeline(
         ),
     )
 
-    fp_cand = store.fingerprint("candidates", fp_men + str(cfg.fuzzy_linking))
+    # exact-only keeps its old suffix so existing dirs resume; the fuzzy
+    # suffix names the exact prefix-filter join, so a dir written by
+    # the earlier MinHash-LSH candidates recomputes
+    fp_cand = store.fingerprint(
+        "candidates", fp_men + ("True:prefix" if cfg.fuzzy_linking else "False")
+    )
     candidates = store.load_or_compute(
         "candidates",
         fp_cand,

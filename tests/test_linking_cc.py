@@ -91,13 +91,91 @@ def test_score_links_doc_coherence_flips_prior(spark):
 
 
 def test_fuzzy_candidates_cover_near_misses(spark, aliases, mentions):
-    cands = generate_candidates(mentions, aliases, fuzzy=True,
+    near = mentions.unionByName(
+        spark.createDataFrame([("m6", "清华大")], "mention_id string, surface string")
+    )
+    cands = generate_candidates(near, aliases, fuzzy=True,
                                 jaccard_max_distance=0.8)
-    fuzzy_only = cands.where(F.col("block_id").startswith("lsh:"))
-    # "清华大学" variants share bigrams; at minimum the exact ones persist
     got = {r["mention_id"] for r in cands.select("mention_id").distinct().collect()}
-    assert {"m1", "m2", "m3", "m4"} <= got
-    assert fuzzy_only.count() >= 0  # runs without error
+    assert {"m1", "m2", "m3", "m4", "m6"} <= got
+    # only the uncovered mentions reach the fuzzy pass: 清华大 shares 2 of
+    # 清华大学's 3 bigrams (J = 2/3); 没有的词 shares none with any alias
+    fuzzy_only = [
+        (r["mention_id"], r["entity_id"], r["score"], r["block_id"])
+        for r in cands.where(F.col("block_id").startswith("lsh:")).collect()
+    ]
+    assert fuzzy_only == [("m6", "e4", pytest.approx(2 / 3, abs=1e-9), "lsh:清华大学")]
+
+
+def _brute_fuzzy(mentions, aliases, t):
+    """All-pairs char-bigram Jaccard, the rows fuzzy_candidates promises:
+    one per distinct (mention_id, surface) × distinct alias row with
+    distance 1 − |x∩y|/|x∪y| < t."""
+    def grams(s):
+        return {s[i:i + 2] for i in range(len(s) - 1)} if len(s) >= 2 else {s}
+
+    rows = []
+    for mid, surface in set(mentions):
+        for sf, eid, prior in set(aliases):
+            g, h = grams(surface), grams(sf)
+            dist = 1.0 - len(g & h) / len(g | h)
+            if dist < t:
+                rows.append((mid, eid, (1.0 - dist) * prior, "lsh:" + sf))
+    return rows
+
+
+def test_fuzzy_candidates_equal_brute_force_jaccard(spark):
+    """The prefix-filter join is exact: on seeded random CJK mention and
+    alias sets its rows equal all-pairs bigram Jaccard (same multiset,
+    scores to 1e-9) at every threshold, and a repeated call returns the
+    same rows. Inputs cover 1-char surfaces, a surface with two
+    entities, an exact-duplicate alias row and bigint mention ids."""
+    import random
+    from collections import Counter
+
+    from golden_horse_spark.operators.linking import fuzzy_candidates
+
+    rnd = random.Random(7)
+    chars = "张伟明李华北京大学清中国"
+
+    def word(lo, hi):
+        return "".join(rnd.choice(chars) for _ in range(rnd.randint(lo, hi)))
+
+    surfaces = sorted({word(1, 5) for _ in range(40)} | {"张", "北京"})
+    alias_rows = [(s, f"e_{s}", round(rnd.uniform(0.1, 1.0), 3)) for s in surfaces]
+    alias_rows += [("北京", "e_bj2", 0.25), alias_rows[0]]
+    mention_rows = [(10**10 + i, word(1, 6)) for i in range(120)]
+    mention_rows += [(10**10 + 200, "张"), (10**10 + 201, "北京"),
+                     (10**10 + 201, "北京")]
+    aliases = spark.createDataFrame(
+        alias_rows, "surface_form string, entity_id string, prior double"
+    )
+    mentions = spark.createDataFrame(mention_rows, "mention_id bigint, surface string")
+
+    def rows(t):
+        return [tuple(r) for r in fuzzy_candidates(mentions, aliases, t).collect()]
+
+    def key(r):
+        return (r[0], r[1], r[3])
+
+    got = {}
+    for t in (0.3, 0.5, 0.8):
+        got[t], want = rows(t), _brute_fuzzy(mention_rows, alias_rows, t)
+        assert want, t  # the comparison actually checks pairs
+        assert Counter(map(key, got[t])) == Counter(map(key, want)), t
+        score = {key(r): r[2] for r in want}
+        for r in got[t]:
+            assert abs(r[2] - score[key(r)]) <= 1e-9, (t, r)
+    # deterministic: a repeated call returns the same rows
+    assert sorted(rows(0.8)) == sorted(got[0.8])
+
+
+def test_fuzzy_candidates_rejects_threshold_outside_unit_interval(spark, aliases, mentions):
+    from golden_horse_spark.operators.linking import fuzzy_candidates
+
+    for t in (0.0, 1.5):
+        with pytest.raises(ValueError):
+            fuzzy_candidates(mentions, aliases, t)
 
 
 def test_salted_agg_matches_plain(spark):
@@ -195,27 +273,6 @@ def test_cc_randomized_vs_union_find(spark):
         want = uf(edges, nodes)
         # union-find roots are min ids by construction of the merge rule
         assert got == want, (trial, edges, got, want)
-
-
-def test_fuzzy_vocab_join_fallback_equals_literal(spark, aliases, mentions):
-    """vocab_literal_max guard: forcing the explode→broadcast-join
-    vocabulary restriction (threshold 1) must produce exactly the same
-    candidate set as the literal-array path — the plan-size guard is a
-    pure implementation switch."""
-    from golden_horse_spark.operators.linking import fuzzy_candidates
-
-    def rows(df):
-        return {
-            (r["mention_id"], r["entity_id"], round(r["score"], 6))
-            for r in df.collect()
-        }
-
-    lit_path = fuzzy_candidates(mentions, aliases, jaccard_max_distance=0.8)
-    join_path = fuzzy_candidates(
-        mentions, aliases, jaccard_max_distance=0.8, vocab_literal_max=1
-    )
-    assert rows(lit_path) == rows(join_path)
-    assert rows(lit_path)  # non-empty: the comparison actually checks pairs
 
 
 def test_salted_join_matches_plain(spark):

@@ -1,6 +1,9 @@
 """Full KG pipeline: stage outputs, invariants, checkpoint/resume."""
 
+import dataclasses
+import hashlib
 import json
+import shutil
 from pathlib import Path
 
 import pytest
@@ -76,7 +79,9 @@ def test_metrics_have_per_partition_rows(pipeline_out):
     assert len(list((Path(out) / "metrics").glob("part-*.parquet"))) == 1
 
 
-def test_resume_skips_recompute_and_is_identical(pipeline_out, spark, weights_path):
+def test_resume_skips_recompute_and_is_identical(
+    pipeline_out, spark, weights_path, tmp_path
+):
     out, cfg, stages, docs = pipeline_out
     before = {tuple(r) for r in stages["triples"].drop("part").collect()}
     # tamper a manifest downstream of mentions: links must recompute,
@@ -87,6 +92,33 @@ def test_resume_skips_recompute_and_is_identical(pipeline_out, spark, weights_pa
     stages2 = run_pipeline(spark, docs, cfg, aliases=alias_table(spark))
     after = {tuple(r) for r in stages2["triples"].drop("part").collect()}
     assert before == after
+
+    # candidates fingerprint: an exact-only dir keeps its suffix (and
+    # resumes); a dir whose fuzzy candidates came from the earlier
+    # MinHash-LSH pass (suffix "True") recomputes them
+    def manifest(d, stage):
+        return json.loads((Path(d) / f"{stage}.manifest.json").read_text())
+
+    def cand_fp(suffix):
+        up = f"candidates|{manifest(out, 'mentions')['fingerprint']}{suffix}"
+        return hashlib.sha256(up.encode()).hexdigest()[:16]
+
+    assert manifest(out, "candidates")["fingerprint"] == cand_fp("False")
+    lsh_dir = tmp_path / "lsh"
+    shutil.copytree(out, lsh_dir)
+    man = manifest(lsh_dir, "candidates")
+    man["fingerprint"] = cand_fp("True")
+    (lsh_dir / "candidates.manifest.json").write_text(json.dumps(man))
+    mentions_mtime = (lsh_dir / "mentions.manifest.json").stat().st_mtime
+    run_pipeline(
+        spark, docs,
+        dataclasses.replace(cfg, output_dir=str(lsh_dir), fuzzy_linking=True),
+        aliases=alias_table(spark),
+    )
+    assert manifest(lsh_dir, "candidates")["fingerprint"] not in (
+        cand_fp("True"), cand_fp("False")
+    )
+    assert (lsh_dir / "mentions.manifest.json").stat().st_mtime == mentions_mtime
 
 
 def test_full_pipeline_deterministic_across_partitionings(spark, weights_path):

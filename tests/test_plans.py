@@ -109,9 +109,9 @@ def test_sequential_ids_parallel_and_equal_to_window(spark):
     assert got == want
 
 
-def test_fuzzy_lsh_join_is_not_cartesian(spark):
-    """The MinHash-LSH blocking join must be an equi-join on exploded
-    hash values — never a cross product of mentions × aliases."""
+def test_fuzzy_prefix_join_is_not_cartesian(spark):
+    """The fuzzy blocking join must be an equi-join on prefix bigram
+    ranks — never a cross product of mentions × aliases."""
     from golden_horse_spark.operators.linking import fuzzy_candidates
 
     mentions = spark.range(200).select(
@@ -123,7 +123,7 @@ def test_fuzzy_lsh_join_is_not_cartesian(spark):
         F.concat(F.lit("e"), "id").alias("entity_id"),
         F.lit(1.0).alias("prior"),
     )
-    out = fuzzy_candidates(mentions, aliases, 0.6, num_hash_tables=4)
+    out = fuzzy_candidates(mentions, aliases, 0.6)
     plan = _plan(out)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

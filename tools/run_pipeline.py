@@ -38,7 +38,8 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true", default=True)
     ap.add_argument("--no-resume", dest="resume", action="store_false")
     ap.add_argument("--fuzzy", action="store_true",
-                    help="enable MinHash-LSH fuzzy candidate generation")
+                    help="enable fuzzy candidate generation (exact char-bigram Jaccard "
+                         "join by prefix filtering)")
     ap.add_argument("--profile", action="store_true",
                     help="write the kg_profile QA report beside metrics")
     ap.add_argument("--dedup-docs", action="store_true",
