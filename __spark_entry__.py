@@ -36,7 +36,7 @@ if str(REPO) not in sys.path:
 # package imports must stay BELOW the sys.path guard above — the guard
 # is what makes them resolvable when this file is imported from a
 # different working directory (e.g. spark-submit --py-files)
-from golden_horse_spark.plans.pin import pin as _pin, pin_lazy as _pin_lazy  # noqa: E402
+from golden_horse_spark.plans.pin import pin as _pin  # noqa: E402
 
 WEIGHTS = str(REPO / "fixtures" / "ner_weights.npz")
 
@@ -652,11 +652,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # spread + one shared checkpoint (round 6): tfidf and bm25 each
         # run a full tokenize pass over docs, which was single-task on
         # the one-row-group documents file; the doc_id-keyed spread
-        # parallelizes both explodes AND feeds their (doc_id, term)
-        # groupBys/doc_id windows without further exchanges, and the pin
-        # makes the second pass read the materialized 50k docs instead
-        # of re-scanning
-        docs = _spread_docs(spark, sf).transform(_pin_lazy)
+        # parallelizes both explodes, and the checkpoint makes the
+        # second pass read the materialized 50k docs instead of
+        # re-scanning
+        docs = _spread_docs(spark, sf).localCheckpoint(eager=False)
         # max_df 0.95: the synthetic corpus has a ~31-word vocabulary of
         # mostly-ubiquitous terms; a 0.5 cap (right for real corpora)
         # would leave the ranking nothing to rank here
@@ -931,7 +930,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ],
             "subj string, pred string, obj string",
         )
-        closed = rdfs_closure(inst.unionByName(onto)).transform(_pin_lazy)
+        closed = rdfs_closure(inst.unionByName(onto)).localCheckpoint(
+            eager=False
+        )
         bgp = sparql_select(
             inst,
             [("?c", "in_nation", "?n"), ("?n", "in_region", "?r")],
@@ -1009,7 +1010,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ShMaxCount("one-nation", "in_nation", 1),
                 ShClass("region-subj-place", "in_region", "Place", on="subj"),
             ],
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         shacl_rows = None
         for cid in (
             "place-loc", "region-name", "one-nation", "region-subj-place"
@@ -1370,7 +1371,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .groupBy("w")
             .agg(F.count("*").alias("cnt"))
         )
-        g = gini(wc, "cnt").transform(_pin_lazy)
+        g = gini(wc, "cnt").localCheckpoint(eager=False)
         gini_rows = g.select(
             F.lit("gini:words").alias("k"),
             F.col("s1").alias("n"),
@@ -1420,8 +1421,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # FIVE tokenize-ish passes over docs (freq dict, bpe_train,
         # bpe_encode, word_histogram, unigram_encode), every one
         # single-task on the one-row-group documents file; spread
-        # parallelizes them and the pin shares one materialized read
-        docs = _spread_docs(spark, sf).transform(_pin_lazy)
+        # parallelizes them and the checkpoint shares one materialized
+        # read
+        docs = _spread_docs(spark, sf).localCheckpoint(eager=False)
         toks = docs.select(
             "doc_id", F.posexplode(F.split(F.trim("text"), " ")).alias("pos", "word")
         )
@@ -1455,9 +1457,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             unigram_train,
         )
 
-        # EAGER pin: both trainers below consume this concurrently; a
-        # lazy checkpoint would race both threads into materializing it
-        uhist = word_histogram(docs).transform(_pin)
+        # EAGER checkpoint: both trainers below consume this
+        # concurrently; a lazy one would race both threads into
+        # materializing it
+        uhist = word_histogram(docs).localCheckpoint()
         # overlap the two independent trainings (guide §2.6 — driver-
         # iterative passes serialize job waves; each result is
         # deterministic on its own, so concurrent execution cannot
@@ -1663,7 +1666,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
         fs_fields = ["g_nat", "g_seg", "g_bal"]
-        wdf = fs_weights(fsp, fs_fields).transform(_pin_lazy)
+        wdf = fs_weights(fsp, fs_fields).localCheckpoint(eager=False)
         w_rows = wdf.select(
             F.lit("fs").alias("part"),
             F.concat(F.lit("w:"), F.col("field")).alias("key"),
@@ -1685,7 +1688,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         fsc = fs_classify(
             fs_score(fsp, wdf, fs_fields), upper=1.0, lower=-1.0
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         n_rows = fsc.groupBy("decision").agg(F.count("*").alias("c")).select(
             F.lit("fs").alias("part"),
             F.concat(F.lit("n:"), F.col("decision")).alias("key"),
@@ -1787,7 +1790,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "s",
                 F.row_number().over(W.orderBy("s")).cast("long").alias("rid"),
             )
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         blocks = rk.select(
             F.concat(F.lit("p:"), F.substring("s", 1, 2)).alias("block_key"),
             F.col("rid").alias("record_id"),
@@ -1814,7 +1817,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ),
                 "id_b",
             )
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         meta_rows = kept.select(
             F.col("id_a").alias("mention_id"),
             F.col("id_b").cast("string").alias("entity_id"),
@@ -2209,7 +2212,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _spread_docs(spark, sf)
         # ONE signature pass shared by both halves (checkpointed; the
         # md5-min over shingles is the expensive part)
-        sig_df = minhash_signatures(docs, num_hashes=4, k=3).transform(_pin_lazy)
+        sig_df = minhash_signatures(
+            docs, num_hashes=4, k=3
+        ).localCheckpoint(eager=False)
         sigs = sig_df.select(
             F.lit("sig").alias("part"),
             F.col("doc_id").alias("a"),
@@ -2218,7 +2223,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         pair_df = minhash_dup_pairs(
             docs, num_hashes=4, bands=2, k=3, signatures=sig_df
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         pairs = pair_df.select(
             F.lit("pair").alias("part"),
             F.col("doc_a").alias("a"),
@@ -2446,7 +2451,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         wsym = ew.union(
             ew.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
         )
-        sym = sym.transform(_pin)  # one subtree feeds both unweighted walks
+        sym = sym.localCheckpoint()  # one subtree feeds both unweighted walks
         return (
             top20(pagerank(sym, n_iter=5), "uniform")
             .unionByName(
@@ -2502,7 +2507,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             bipartite_project(li, over="l_orderkey", node="l_partkey")
             # both branches read the edge build; materialize it ONCE (at
             # cluster scale: a stage table)
-            .transform(_pin)
+            .localCheckpoint()
         )
         deg = (
             e.select(F.col("src").alias("n"))
@@ -2553,7 +2558,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).withColumn(
             "_union",
             F.round(F.col("n_common") / F.col("jaccard")).cast("long"),
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         lp = (
             pj.groupBy("n_common")
             .agg(F.count("*").alias("n"))
@@ -2704,7 +2709,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.col("x.l_partkey").alias("x"),
                 F.col("y.l_partkey").alias("y"),
             )
-            .transform(_pin_lazy)
+            .localCheckpoint(eager=False)
         )
         n_ev = ev.count()
         pmi = (
@@ -2801,7 +2806,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         scc_labels = strongly_connected_components(
             darc, src="s", dst="d"
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         scc = (
             scc_labels
             .groupBy("component")
@@ -2898,7 +2903,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ),
             n_neg=2,
             corrupt="tail",
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         negh = (
             neg.groupBy((F.col("obj") % 32).alias("m"))
             .agg(F.count("*").alias("n"))
@@ -2927,7 +2932,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("s").alias("subj"),
             F.lit("co").alias("pred"),
             F.col("d").alias("obj"),
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         kg_ents = (
             kg_tri.select(F.col("subj").alias("node"))
             .union(kg_tri.select(F.col("obj").alias("node")))
@@ -2997,7 +3002,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sides (authority-less sources / hub-less sinks).
         from golden_horse_spark.operators.graph import hits
 
-        ht = hits(e, n_iter=2, normalize=None).transform(_pin_lazy)
+        ht = hits(e, n_iter=2, normalize=None).localCheckpoint(eager=False)
         hitsa = (
             ht.where(F.col("authority") > 0)
             .groupBy(
@@ -3027,7 +3032,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # re-enumerates triangles naively and counts corners.
         from golden_horse_spark.operators.graph import local_clustering
 
-        lcn = local_clustering(e).transform(_pin_lazy)
+        lcn = local_clustering(e).localCheckpoint(eager=False)
         lcc_rows = (
             lcn.where(F.col("n_triangles") > 0)
             .groupBy(
@@ -3120,7 +3125,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 li, over="l_orderkey", node="l_partkey", weighted=True
             )
             .select("src", "dst", F.col("w").cast("double").alias("w"))
-            .transform(_pin)
+            .localCheckpoint()
         )
         e = we.select("src", "dst")
         core = k_core(e, k=80)
@@ -3445,7 +3450,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         (docs,) = _tables(spark, sf, "documents")
         small = docs.where(F.col("doc_id") < 500)
         # ONE checkpointed signature pass shared by both parts (the
-        # q_minhash discipline)
+        # q_minhash discipline); pin keeps its doc_id partitioning, which
+        # the near part's (doc_a, doc_b) distinct reuses when the band
+        # self-join broadcasts
         sigs = simhash(small, bits=32, hash_fn="md5").transform(_pin)
         l, r = sigs.alias("l"), sigs.alias("r")
         exact = (
@@ -3480,7 +3487,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         _ship(spark)
         docs = _synth_docs(spark, 100)
-        media = synthesize_media(spark, docs).transform(_pin_lazy)
+        media = synthesize_media(spark, docs).localCheckpoint(eager=False)
         # f0_milli pins the DECODED CONTENT (mean luminance / waveform
         # mean ×1000), not just row shape — every real codec path
         # (P6/PNG/GIF/BMP/JPEG, PCM/µ-law/A-law WAV) is a per-row pure
@@ -3499,7 +3506,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # invariant); kind='phash_pairs_n' pins the banded-hamming
         # near-dup pair count at d≤10 (the media_dup_pairs composition
         # through simhash_near_pairs' pigeonhole join), even when 0.
-        ph = perceptual_hash(media).transform(_pin_lazy)
+        ph = perceptual_hash(media).localCheckpoint(eager=False)
         ph_rows = ph.select(
             "media_ref",
             F.lit("phash").alias("kind"),
@@ -3523,7 +3530,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             audio_fingerprint,
         )
 
-        afp = audio_fingerprint(media).transform(_pin_lazy)
+        afp = audio_fingerprint(media).localCheckpoint(eager=False)
         afp_rows = afp.select(
             "media_ref",
             F.lit("audiofp").alias("kind"),
@@ -3551,7 +3558,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             video_frame_hashes,
         )
 
-        vfh = video_frame_hashes(media).transform(_pin_lazy)
+        vfh = video_frame_hashes(media).localCheckpoint(eager=False)
         vh_rows = (
             vfh.groupBy("media_ref")
             .agg(

@@ -27,7 +27,6 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
-from golden_horse_spark.plans.pin import pin as _pin, pin_lazy as _pin_lazy  # noqa: E402
 
 BENCH_QUERIES = [
     "q01_pricing_summary",
@@ -376,9 +375,9 @@ def run_graph_bench(spark, n_nodes: int = 2_000_000) -> dict:
         (F.col("id") * 8 + 3).alias("src"),
         ((F.col("id") - 1) * 8 + 2).alias("dst"),
     )
-    digraph = rings.union(back_bridges).transform(_pin)
+    digraph = rings.union(back_bridges).localCheckpoint()
     t0 = _t.time()
-    scc = strongly_connected_components(digraph).transform(_pin)
+    scc = strongly_connected_components(digraph).localCheckpoint()
     n_scc_nodes = scc.count()
     scc_sec = round(_t.time() - t0, 2)
     gc.collect()
@@ -415,7 +414,7 @@ def run_graph_bench(spark, n_nodes: int = 2_000_000) -> dict:
     t0 = _t.time()
     bst = betweenness_centrality(
         edges, sources=[n_nodes], directed=False, max_hops=4
-    ).transform(_pin)
+    ).localCheckpoint()
     n_bst = bst.count()
     brandes_sec = round(_t.time() - t0, 2)
     gc.collect()
@@ -438,7 +437,7 @@ def run_graph_bench(spark, n_nodes: int = 2_000_000) -> dict:
     from golden_horse_spark.operators.graph import k_truss
 
     t0 = _t.time()
-    truss = k_truss(edges, k=4).transform(_pin)
+    truss = k_truss(edges, k=4).localCheckpoint()
     n_truss = truss.count()
     truss_sec = round(_t.time() - t0, 2)
     gc.collect()
@@ -548,7 +547,7 @@ def run_temporal_bench(spark, n_events: int = 2_000_000, n_keys: int = 20_000) -
             ).alias("ts"),
             (F.pmod(F.xxhash64("id", F.lit(2)), F.lit(1000)) / 10.0).alias("value"),
         )
-        .transform(_pin)  # pin the synthesized input out of both timings
+        .localCheckpoint()  # the synthesized input stays out of both timings
     )
     clicks = ev.where(F.col("event_id") % 8 == 0).select("user_id", "ts", "value")
 
@@ -587,7 +586,7 @@ def run_temporal_bench(spark, n_events: int = 2_000_000, n_keys: int = 20_000) -
     coal_sec = round(_t.time() - t0, 2)
 
     base = ev.select(F.col("event_id").alias("k"), F.col("value").alias("v"))
-    dim0 = scd2_init(base, 0).transform(_pin)
+    dim0 = scd2_init(base, 0).localCheckpoint()
     changes = base.where(F.col("k") % 3 == 0).select(
         "k", (F.col("v") + 1.0).alias("v")
     ).unionByName(
@@ -662,7 +661,7 @@ def run_dedup_bench(spark, n_docs: int = 100_000) -> dict:
                 " ",
             ).alias("text"),
         )
-        .transform(_pin)  # pin the synthesized input out of the timing
+        .localCheckpoint()  # the synthesized input stays out of the timing
     )
 
     # cold + 2 warm iterations, min-of-warm (pipeline-bench convention).
@@ -714,7 +713,7 @@ def run_media_bench(spark, n_docs: int = 2_000) -> dict:
     from golden_horse_spark.sources.documents import synthesize_documents
 
     docs = synthesize_documents(spark, n_docs, seed=11)
-    media = synthesize_media(spark, docs).transform(_pin)
+    media = synthesize_media(spark, docs).localCheckpoint()
     n_media = media.count()
     secs = []
     kept = 0
@@ -800,7 +799,7 @@ def run_sparql_bench(spark, n_triples: int = 5_000_000) -> dict:
         bought.unionByName(in_cat).unionByName(in_region)
         .unionByName(item_types).unionByName(onto)
         .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
-        .transform(_pin)
+        .localCheckpoint()
     )
     n_kg = kg.count()
 
@@ -817,7 +816,7 @@ def run_sparql_bench(spark, n_triples: int = 5_000_000) -> dict:
     bgp_sec = round(_t.time() - t0, 2)
 
     t0 = _t.time()
-    closed = rdfs_closure(kg).transform(_pin)
+    closed = rdfs_closure(kg).localCheckpoint()
     n_closed = closed.count()
     rdfs_sec = round(_t.time() - t0, 2)
     assert n_closed > n_kg

@@ -46,7 +46,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..plans.pin import pin as _pin  # noqa: F401  (used via .transform)
 
 __all__ = ["transe_init", "transe_sgd_pass", "transe_train"]
 
@@ -172,7 +171,7 @@ def transe_train(
     r2i = {r: i for i, r in enumerate(rels)}
     ent, rel = transe_init(len(ents), len(rels), dim, seed)
     p = n_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # pin partition CONTENTS: hash of the triple key, independent of
+    # fix partition CONTENTS: hash of the triple key, independent of
     # input layout — determinism across repartitionings of the caller
     idx = (
         tri.withColumn(
@@ -180,7 +179,7 @@ def transe_train(
             F.pmod(F.xxhash64(F.concat_ws("|", "h", "r", "t")), F.lit(p)),
         )
         .repartition(p, "pid")
-        .transform(_pin)
+        .localCheckpoint()
     )
     sc = spark.sparkContext
     losses = []

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from ..plans.fixpoint import fixpoint
-from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
+from ..plans.pin import pin as _pin
 
 # column types the driver-side union-find fast path handles (total order
 # in Python matches Spark's for these; anything else falls back to the
@@ -49,15 +49,14 @@ def _local_cc_limit() -> int:
     return int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "500000"))
 
 
-def _driver_union_find(spark, e2: DataFrame, dtype) -> DataFrame:
-    """Union-find over a collected edge list; component = min node of
-    each set (union links the larger root under the smaller, so every
-    root is its set's minimum — the exact label the distributed
+def _driver_union_find(spark, pdf, dtype) -> DataFrame:
+    """Union-find over a collected (pandas) edge list; component = min
+    node of each set (union links the larger root under the smaller, so
+    every root is its set's minimum — the exact label the distributed
     hash-to-min rounds converge to). The edge list has no NULL
     endpoint (``connected_components`` rewrites them first)."""
     import pandas as pd
 
-    pdf = e2.toPandas()  # Arrow-accelerated collect
     a_name, b_name = pdf.columns[0], pdf.columns[1]
     parent: dict = {}
 
@@ -115,9 +114,9 @@ def connected_components(
     500k; 0 disables) the edge list is collected and solved with
     union-find on the driver — identical labels (property-tested), no
     per-round job waves. Pass ``num_edges`` when the caller already
-    knows the count (skips the probe); otherwise one bounded
-    ``limit(n+1)`` count decides. Dup-pair / alias graphs are tiny
-    islands even at corpus scale, so production runs mostly take the
+    knows the count; otherwise one bounded ``limit(n+1)`` collect both
+    decides and, when it fits, is the edge list solved. Dup-pair /
+    alias graphs are tiny islands even at corpus scale, so production runs mostly take the
     fast path too; graph-scale inputs exceed the cap and run the
     distributed hash-to-min rounds below, driven to their fixpoint by
     ``plans.fixpoint``.
@@ -131,15 +130,16 @@ def connected_components(
         F.coalesce(F.col(dst), F.col(src)).alias("b"),
     ).where(F.col("a").isNotNull())
     if lim > 0 and s_type == d_type and s_type.simpleString() in _LOCAL_CC_TYPES:
-        n = num_edges
-        if n is None:
-            n = e.limit(lim + 1).count()
-        if n <= lim:
-            return _driver_union_find(spark, e, s_type)
+        if num_edges is None:
+            pdf = e.limit(lim + 1).toPandas()  # Arrow-accelerated collect
+            if len(pdf) <= lim:
+                return _driver_union_find(spark, pdf, s_type)
+        elif num_edges <= lim:
+            return _driver_union_find(spark, e.toPandas(), s_type)
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # symmetrize once; hash-partition on the PROBE key b so each round's
-    # join reuses this exchange (localCheckpoint pins the partitioning).
+    # join reuses this exchange (pin keeps the partitioning).
     # Self-loops stay: they keep nodes whose only edge is one.
     sym = (
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -200,11 +200,11 @@ def canonical_entities(links: DataFrame) -> DataFrame:
     edges = star.select(
         F.col("root").alias("src"), F.explode("ents").alias("dst")
     ).where(F.col("src") != F.col("dst")).distinct()
-    # materialize once: the adaptive fast path inside
-    # connected_components probes the edge count and then collects (or
-    # symmetrizes, on the distributed path) — without the pin each of
-    # those actions would re-run the mention-star aggregation above
-    edges = edges.transform(_pin_lazy)
+    # materialize once: the bounded fast-path collect inside
+    # connected_components and, past its cap, the distributed rounds'
+    # symmetrization both read these edges — without the checkpoint
+    # each would re-run the mention-star aggregation above
+    edges = edges.localCheckpoint(eager=False)
     singletons = links.select("entity_id").distinct()
     cc = connected_components(edges)
     return (
@@ -326,12 +326,12 @@ def merge_components(
         .join(lab, F.col("d") == lab["_n"], "left")
         .select("cs", F.coalesce("_c", "d").alias("cd"))
         .where(F.col("cs") != F.col("cd"))
-        # pin: the emptiness probe below materializes this (two lookup
-        # joins against the corpus-scale assignment); without the pin
-        # the CC rounds would recompute that lineage from scratch —
-        # the hot incremental path paid the assignment joins twice per
+        # checkpoint: the emptiness probe below materializes this (two
+        # lookup joins against the corpus-scale assignment); without it
+        # the CC rounds would recompute that lineage from scratch — the
+        # hot incremental path paid the assignment joins twice per
         # micro-batch (round-5 review fix)
-        .transform(_pin_lazy)
+        .localCheckpoint(eager=False)
     )
     if contracted.limit(1).count() == 0:
         new_nodes = (
@@ -396,7 +396,7 @@ def pairwise_er(
             F.col(pred_col).alias("_p"), F.col(gold_col).alias("_g")
         )
         .agg(F.count("*").alias("n"))
-        .transform(_pin_lazy)
+        .localCheckpoint(eager=False)
     )
     # C(c,2) with the even factor halved BEFORE multiplying: the
     # product then peaks at c²/2, pushing long overflow from

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
 
 
 # ------------------------------------------------------------- exact (E)
@@ -261,7 +260,7 @@ def minhash_dup_pairs(
     banded = sig.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("bk")
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    banded = banded.transform(_pin_lazy)
+    banded = banded.localCheckpoint(eager=False)
     if max_bucket is not None:
         banded = banded.withColumn(
             "_w", F.count("*").over(Window.partitionBy("band", "key"))
@@ -653,8 +652,9 @@ def embedding_near_dup_pairs(
     sf0.1, and the gap grows with n_cells). Pass
     ``unroll_max_cells ≥ n_cells`` to force the all-JVM unrolled
     expression instead (useful where Python workers are at a premium;
-    identical argmin semantics, equality-tested both ways). The
-    `.cache()` on the assigned table backs exactly TWO actions
+    identical argmin semantics, equality-tested both ways). A lazy
+    ``localCheckpoint`` of the assigned table (reclaimed by Spark's
+    ContextCleaner once unreferenced) backs exactly TWO actions
     (round-3 shave, was three): a plain-projection centroid sample and
     the final query, inside which the per-cell radii aggregate runs as
     a broadcast subtree joined to the literal centroid-distance table —
@@ -798,13 +798,13 @@ def embedding_near_dup_pairs(
                 )
 
         e = e0.mapInPandas(run, schema)
-    e = e.cache()
+    e = e.localCheckpoint(eager=False)
     # compatible cell pairs computed DISTRIBUTED inside the final job:
     # the n_cells² centroid-distance table is a literal, the per-cell
-    # coverage radii are a tiny aggregate over the cached table, and the
-    # triangle-inequality cut joins the two — no driver collect. Cells
-    # with no assigned vectors drop out via the inner join (they can't
-    # contribute pairs).
+    # coverage radii are a tiny aggregate over the checkpointed table,
+    # and the triangle-inequality cut joins the two — no driver collect.
+    # Cells with no assigned vectors drop out via the inner join (they
+    # can't contribute pairs).
     d_thresh = float(np.sqrt(max(0.0, 2.0 - 2.0 * min_cosine))) + 1e-9
     cdist = spark.createDataFrame(
         [
@@ -909,7 +909,7 @@ def _keep_min_representative(
     # self-union, which would execute the (expensive) pair-generation
     # subtree twice; at cluster scale this is a stage-table write,
     # locally a localCheckpoint (measured 2× on the sf0.1 probe)
-    pairs = pairs.select("id_a", "id_b").transform(_pin)
+    pairs = pairs.select("id_a", "id_b").localCheckpoint()
     # size the CC co-partition width to the PAIR GRAPH, not the corpus:
     # the dup graph is orders smaller than the input (tiny islands), so
     # session-default-wide rounds are pure scheduling overhead — 588

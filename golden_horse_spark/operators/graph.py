@@ -6,9 +6,9 @@ Iterative graph operators beside connected components
 discipline for relational iteration:
 
 * the edge table (with out-degrees) is hash-partitioned on the PROBE
-  key once and ``localCheckpoint``-pinned — every round's rank join
-  reuses that exchange, so a round costs ONE shuffle (the contribution
-  groupBy) instead of three;
+  key once and checkpointed with ``plans.pin`` (which keeps the hash
+  partitioning) — every round's rank join reuses that exchange, so a
+  round costs ONE shuffle (the contribution groupBy) instead of three;
 * ``localCheckpoint`` per round keeps the plan O(1) in rounds;
 * the only driver-side values are bounded scalars (node count, dangling
   rank mass — one double per round).
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.fixpoint import fixpoint
-from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
+from ..plans.pin import pin as _pin
 
 # Test seam for the per-round shuffle-budget claims: set to a list (in
 # tests) and the iterative operators append ``(tag, n_exchanges)`` for
@@ -246,12 +246,12 @@ def pagerank(
             # and an explicit repartition is a FORCED exchange Spark
             # never elides — it was costing one extra full shuffle of
             # the rank table per round (measured 71→38 s / 5 rounds at
-            # 500k nodes). localCheckpoint preserves partitioning.
+            # 500k nodes). pin preserves partitioning.
             # Lazy: the checkpoint still truncates the plan at the
             # round boundary, but on a dangling-free graph (no
             # per-round action) all rounds execute as ONE job wave
             # instead of n_iter eager materializations.
-            .transform(_pin_lazy)
+            .transform(_pin, eager=False)
         )
     return ranks
 
@@ -372,7 +372,7 @@ def quotient_graph(
     agg = (
         q.groupBy("src", "dst")
         .agg(F.sum("w").alias("weight"), F.sum("_unl").alias("_unl"))
-        .transform(_pin)
+        .localCheckpoint()
     )
     bad = agg.where(F.col("src").isNull()).collect()
     if bad:
@@ -519,7 +519,7 @@ def k_truss(
         .where(F.col("a") != F.col("b"))
         .distinct()
         .repartition(p, "a")
-        .transform(_pin)
+        .localCheckpoint()
     )
     # ---- initial supports: oriented triangle enumeration, kept as
     # (x, y, z) canonical triples ----
@@ -539,7 +539,7 @@ def k_truss(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).transform(_pin_lazy)
+    ).localCheckpoint(eager=False)
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = (
         o1.join(o2, "u")
@@ -586,7 +586,7 @@ def k_truss(
             F.coalesce("support", F.lit(0)).cast("long").alias("support"),
         )
         .repartition(p, "a")
-        .transform(_pin)
+        .localCheckpoint()
     )
     thr = k - 2
     while True:
@@ -619,7 +619,7 @@ def k_truss(
                 F.col("t")[1].alias("y"),
                 F.col("t")[2].alias("z"),
             )
-            .transform(_pin_lazy)
+            .localCheckpoint(eager=False)
         )
         dec_edges = destroyed.select(
             F.explode(
@@ -646,7 +646,7 @@ def k_truss(
                 ).alias("support"),
             )
             .repartition(p, "a")
-            .transform(_pin)
+            .localCheckpoint()
         )
     return cur
 
@@ -713,7 +713,7 @@ def k_core(
             )
         )
         _audit_plan("k_core_round", new_deg)
-        return new_deg.transform(_pin_lazy), False
+        return new_deg.transform(_pin, eager=False), False
 
     # stopping with peeling still active would return a SUPERSET of the
     # true k-core (long chains peel ~2 nodes a round)
@@ -777,7 +777,7 @@ def core_numbers(
         new_cores = (
             cores.join(hidx, "node")
             .select("node", F.least(F.col("core"), F.col("h")).alias("core"))
-            .transform(_pin_lazy)
+            .transform(_pin, eager=False)
         )
         # ONE action per round: materializes the lazy checkpoint and
         # decides convergence (estimates only ever decrease, so any
@@ -848,7 +848,7 @@ def bfs_distances(
         )
         if nxt.count() == 0:
             break
-        dist = dist.unionByName(nxt).transform(_pin)
+        dist = dist.unionByName(nxt).localCheckpoint()
         frontier = nxt
     return dist
 
@@ -1034,7 +1034,7 @@ def label_propagation(
         .distinct()
         .withColumn("label", F.col("node"))
         .repartition(p, "node")
-        .transform(_pin)
+        .localCheckpoint()
     )
     for _ in range(n_iter):
         votes = sym.join(
@@ -1053,7 +1053,7 @@ def label_propagation(
                 .alias("top")
             )
             .select("node", F.col("top.label").alias("label"))
-            .transform(_pin_lazy)
+            .transform(_pin, eager=False)
         )
     return labels
 
@@ -1271,7 +1271,7 @@ def hits(
                 "node", (F.col("score") / F.col("_t")).alias("score")
             )
         _audit_plan("hits_auth_half", auth)
-        auth = auth.transform(_pin_lazy)
+        auth = auth.transform(_pin, eager=False)
         hub = (
             arcs_d.join(auth, arcs_d["d"] == auth["node"])
             .groupBy(F.col("s").alias("node"))
@@ -1283,7 +1283,7 @@ def hits(
                 "node", (F.col("score") / F.col("_t")).alias("score")
             )
         _audit_plan("hits_hub_half", hub)
-        hub = hub.transform(_pin_lazy)
+        hub = hub.transform(_pin, eager=False)
     zero = F.lit(0.0) if normalize == "l1" else F.lit(0).cast("long")
     return (
         nodes.join(hub.withColumnRenamed("score", "hub"), "node", "left")
@@ -1466,7 +1466,7 @@ def louvain(
             break
         labels = strength.select(
             "node", F.col("node").alias("label")
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
         level_moves = 0
         zero_streak = 0
         for sweep in range(max_sweeps):
@@ -1529,7 +1529,7 @@ def louvain(
                 )
             )
             _audit_plan("louvain_sweep", picked)
-            picked = picked.transform(_pin)
+            picked = picked.localCheckpoint()
             moved = picked.where(F.col("label") != F.col("cur")).count()
             labels = _sever(
                 labels.where(~mover)
@@ -1555,7 +1555,7 @@ def louvain(
             mapping = mapping.join(
                 lab, mapping.comm == lab._n
             ).select("orig", F.col("_l").alias("comm"))
-        mapping = mapping.transform(_pin)
+        mapping = mapping.localCheckpoint()
         if level_moves == 0:
             break
         # contraction: communities become supernodes, weights sum,
@@ -1735,7 +1735,7 @@ def neighborhood_function(
             gathered.union(counters.select("node", "sk"))
             .groupBy("node")
             .agg(_ball_union_agg(sketch, k))
-            .transform(_pin_lazy)
+            .transform(_pin, eager=False)
         )
         t = counters.agg(F.sum(est).cast("long").alias("t")).first()["t"]
         totals.append(int(t))
@@ -1861,7 +1861,7 @@ def hyperball_profile(
             F.lit(1).cast("long").alias("ball"),  # b_0(v) = |{v}| = 1
             F.lit(0.0).alias("hc"),
         )
-        .transform(_pin)
+        .localCheckpoint()
     )
     totals = [state.count()]  # N(0) = n nodes
     for t in range(1, max_hops + 1):
@@ -1892,7 +1892,7 @@ def hyperball_profile(
                 ).cast("double")
                 / F.lit(float(t))
             ).alias("hc"),
-        ).transform(_pin_lazy)
+        ).transform(_pin, eager=False)
         totals.append(
             int(state.agg(F.sum("ball").cast("long")).first()[0])
         )
@@ -2000,7 +2000,7 @@ def strongly_connected_components(
             trimmed = (
                 active.join(keep, "node", "left_anti")
                 .select("node", F.col("node").alias("component"))
-                .transform(_pin)
+                .localCheckpoint()
             )
             if trimmed.count() == 0:
                 break
@@ -2024,7 +2024,7 @@ def strongly_connected_components(
         colors = (
             active.select("node", F.col("node").alias("color"))
             .repartition(p, "node")
-            .transform(_pin)
+            .localCheckpoint()
         )
         while True:
             cand = (
@@ -2067,7 +2067,7 @@ def strongly_connected_components(
             .where(F.col("color_a") == F.col("color_b"))
             .select("a", "b", F.col("color_a").alias("fc"))
             .repartition(p, "b")
-            .transform(_pin)
+            .localCheckpoint()
         )
         settled = (
             colors.where(F.col("node") == F.col("color"))
@@ -2094,12 +2094,12 @@ def strongly_connected_components(
             )
             if nxt.count() == 0:
                 break
-            settled = settled.unionByName(nxt).transform(_pin)
+            settled = settled.unionByName(nxt).localCheckpoint()
             frontier = nxt
         done.append(
             settled.select(
                 "node", F.col("fc").alias("component")
-            ).transform(_pin)
+            ).localCheckpoint()
         )
         active = (
             active.join(settled.select("node"), "node", "left_anti")
@@ -2264,7 +2264,7 @@ def shortest_paths(
             dist.join(improved.select("root", "node"), ["root", "node"], "left_anti")
             .unionByName(improved)
             .repartition(p, "node")
-            .transform(_pin)
+            .localCheckpoint()
         )
         frontier = improved
     return dist
@@ -2724,7 +2724,7 @@ def betweenness_centrality(
         "root", "node", "sigma",
         F.lit(0.0).alias("delta"),
         F.lit(0).cast("long").alias("phi"),
-    ).transform(_pin_lazy)
+    ).localCheckpoint(eager=False)
     states = [deepest]
     below = deepest
     for h in range(len(levels) - 2, -1, -1):
@@ -2769,7 +2769,7 @@ def betweenness_centrality(
                 F.coalesce("phi", F.lit(0).cast("long")).alias("phi"),
             )
             .repartition(p, "node")
-            .transform(_pin_lazy)
+            .transform(_pin, eager=False)
         )
         states.append(state)
         below = state
@@ -2918,7 +2918,7 @@ def negative_triples(
         )
     pool = pool.withColumn(
         "rk", F.row_number().over(Window.orderBy("entity")) - 1
-    ).transform(_pin)
+    ).localCheckpoint()
     n_pool = pool.count()
     if n_pool == 0:
         raise ValueError("negative_triples: empty entity pool")
@@ -3011,7 +3011,7 @@ def wl_labels(
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     if not directed:
         e = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    e = e.distinct().transform(_pin)
+    e = e.distinct().localCheckpoint()
     nodes = e.select(F.col("s").alias("node")).union(
         e.select(F.col("d").alias("node"))
     ).distinct()
@@ -3324,7 +3324,7 @@ def katz_centrality(
         x = (
             nodes.join(contrib, "node", "left")
             .select("node", step.alias("x"))
-            .transform(_pin_lazy)
+            .transform(_pin, eager=False)
         )
     if exact:
         return x.select(

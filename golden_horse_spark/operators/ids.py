@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
 
 
 def sequential_ids(
@@ -41,13 +40,13 @@ def sequential_ids(
     # exchange itself) — measured ~2× on q_word_dict's explode+agg
     # subtree. The checkpoint is dictionary-sized by this operator's
     # contract, so the extra materialization is vocabulary-scale.
-    df = df.transform(_pin_lazy)
+    df = df.localCheckpoint(eager=False)
     part = (
         df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
         .withColumn("_pid", F.spark_partition_id())
     )
     # one materialization backs both the count pass and the id join
-    part = part.transform(_pin_lazy)
+    part = part.localCheckpoint(eager=False)
     sizes = {
         r["_pid"]: r["n"]
         for r in part.groupBy("_pid").agg(F.count("*").alias("n")).collect()

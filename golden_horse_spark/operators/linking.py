@@ -31,7 +31,6 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
 from .dedup import prefix_jaccard_join
 
 CANDIDATE_COLS = ["mention_id", "entity_id", "score", "block_id"]
@@ -621,7 +620,7 @@ def fs_em_weights(
     m = [0.9] * k
     u = [_cl(init[c] if init[c] is not None else 0.5) for c in agree_cols]
     pi = prevalence
-    pairs = pairs.transform(_pin_lazy)
+    pairs = pairs.localCheckpoint(eager=False)
     for _ in range(n_iter):
         # E-step expression: log-odds accumulation, NULL fields skip
         log_odds = F.lit(math.log(pi) - math.log(1.0 - pi))
@@ -698,7 +697,7 @@ def sorted_neighborhood_candidates(
     position. Deterministic: ties in the key break on ``id_col``.
 
     Physical shape: the global dense rank is DISTRIBUTED — a
-    ``repartitionByRange`` on (key, id) orders partitions, a pinned
+    ``repartitionByRange`` on (key, id) orders partitions, a checkpointed
     per-partition ``row_number`` ranks within each, and partition-count
     offsets (one bounded ≤-shuffle-partitions collect) lift the local
     ranks to global ones. Round-5 review fix: the previous
@@ -721,11 +720,11 @@ def sorted_neighborhood_candidates(
         F.col(id_col).alias("_id"), F.col(key_col).alias("_key")
     )
     # range-partition on the FULL sort key so duplicates of a hot key
-    # still split across partitions; pin so the pid column, the counts
+    # still split across partitions; checkpoint so the pid column, the counts
     # and the rank all read one stable layout
     parted = (
         base.repartitionByRange(p, F.col("_key"), F.col("_id"))
-        .transform(_pin)
+        .localCheckpoint()
         .withColumn("_pid", F.spark_partition_id())
     )
     sizes = sorted(
@@ -823,7 +822,7 @@ def meta_blocking(
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("weight"))
-    ).transform(_pin_lazy)
+    ).localCheckpoint(eager=False)
     if scheme == "wep":
         tot = edges.agg(
             F.sum("weight").alias("s"), F.count("*").alias("c")
@@ -975,14 +974,14 @@ def monge_elkan(
     twin replays it with its own jaro_winkler_similarity.
 
     The ``_pid`` join key comes from ``monotonically_increasing_id``,
-    which depends on physical row order; the keyed frame is pinned
-    with a lazy ``localCheckpoint`` so the tok_a branch, tok_b branch
-    and the final join-back all read the SAME materialized ids even
+    which depends on physical row order; the keyed frame is
+    materialized with a lazy ``localCheckpoint`` so the tok_a branch,
+    tok_b branch and the final join-back all read the SAME ids even
     when ``pairs`` is the output of a shuffle whose recomputation
     order is not contractual (task retry / branch recompute)."""
     keyed = pairs.withColumn(
         "_pid", F.monotonically_increasing_id()
-    ).transform(_pin_lazy)
+    ).localCheckpoint(eager=False)
 
     def _direction(left_col, right_col, out):
         tok_a = keyed.select(
@@ -1090,7 +1089,7 @@ def soft_tfidf(
             .otherwise(F.lit(0.0))
             .alias("_w"),
         )
-        .transform(_pin_lazy)
+        .localCheckpoint(eager=False)
     )
     if require_in_corpus:
         # fail loudly instead of silently scoring out-of-corpus names
@@ -1114,11 +1113,11 @@ def soft_tfidf(
                 "of both sides as corpus, or require_in_corpus=False "
                 "to score them 0.0"
             )
-    # _pid from monotonically_increasing_id is order-dependent; pin it
+    # _pid from monotonically_increasing_id is order-dependent; checkpoint
     # (see monge_elkan) so ta/tb/join-back agree under recomputation.
     keyed = pairs.withColumn(
         "_pid", F.monotonically_increasing_id()
-    ).transform(_pin_lazy)
+    ).localCheckpoint(eager=False)
     ta = (
         keyed.select("_pid", F.col(col_a).alias("_nm"))
         .join(weights, "_nm")

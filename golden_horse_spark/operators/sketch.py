@@ -35,8 +35,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.pin import pin as _pin
-
 
 def _misra_gries_add(counters: dict, key, inc: int, k: int) -> None:
     """WEIGHTED Misra–Gries step (Berinde et al. / the mergeable-
@@ -134,7 +132,7 @@ def heavy_hitters(
              "_pn": [0] * len(counters) + [n]}
         )
 
-    sk = df.select(col).mapInPandas(sketch, sk_schema).transform(_pin)
+    sk = df.select(col).mapInPandas(sketch, sk_schema).localCheckpoint()
     n = sk.agg(F.sum("_pn")).first()[0] or 0
     cands = sk.where(F.col(col).isNotNull()).select(col).distinct()
     return (

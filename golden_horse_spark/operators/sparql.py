@@ -56,7 +56,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..plans.fixpoint import fixpoint
-from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
 
 
 def _is_var(term) -> bool:
@@ -804,7 +803,7 @@ def sparql_construct(
         )
     bind = bind.select(*sorted(used)).distinct()
     if len(template) > 1:
-        bind = bind.transform(_pin_lazy)
+        bind = bind.localCheckpoint(eager=False)
     arms = []
     for s, p, o in template:
         arms.append(
@@ -1027,11 +1026,11 @@ def rdfs_closure(
         F.col(subj).alias("s"), F.col(pred).alias("p"), F.col(obj).alias("o")
     )
     if not _in_meta_pass:
-        # the pass below references its input ~11 times; pinned once,
-        # each reference scans the checkpoint instead of re-planning
-        # (and re-running) an unmaterialized input's whole lineage. Meta
-        # passes receive the previous pass's pinned output.
-        t = t.transform(_pin)
+        # the pass below references its input ~11 times; checkpointed
+        # once, each reference scans the checkpoint instead of
+        # re-planning (and re-running) an unmaterialized input's whole
+        # lineage. Meta passes receive the previous pass's checkpoint.
+        t = t.localCheckpoint()
     schema_preds = (sco, spo, dom, rng)
 
     spark = triples.sparkSession
@@ -1157,7 +1156,7 @@ def rdfs_closure(
         > 0
     )
     if meta and not _in_meta_pass:
-        # pin each pass's output before re-entering (round-6 ADVICE
+        # checkpoint each pass's output before re-entering (round-6 ADVICE
         # fix): each pass otherwise nests the previous pass's WHOLE
         # plan (joins, broadcasts, distincts) inside its own, so
         # planning cost grows multiplicatively across passes — the
@@ -1169,11 +1168,11 @@ def rdfs_closure(
                 prev_out, subj=subj, pred=pred, obj=obj, sco=sco, spo=spo,
                 dom=dom, rng=rng, type_pred=type_pred, max_hops=max_hops,
                 collect_threshold=collect_threshold, _in_meta_pass=True,
-            ).transform(_pin)
+            ).localCheckpoint()
             n = nxt.count()
             return (nxt, n), n == prev
 
-        out = out.transform(_pin)
+        out = out.localCheckpoint()
         out, _ = fixpoint((out, out.count()), rerun, 8, "rdfs_closure")
     return out
 

@@ -41,7 +41,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
+from ..plans.pin import pin as _pin
 
 
 def asof_join(
@@ -557,7 +557,9 @@ def funnel(
         events.where(F.col(type_col) == steps[0])
         .groupBy(F.col(user_col).alias("_u"))
         .agg(F.min(ts_col).alias("_t"))
-        .transform(_pin_lazy)  # each survivor frame computes once
+        # each survivor frame computes once; pin keeps its _u hash
+        # partitioning, so the next step's join shuffles only the events
+        .transform(_pin, eager=False)
     )
     out = None
     for i, st in enumerate(steps, start=1):
@@ -571,7 +573,7 @@ def funnel(
                 .where(F.col("_ts") > F.col("_t"))
                 .groupBy("_u")
                 .agg(F.min("_ts").alias("_t"))
-                .transform(_pin_lazy)
+                .transform(_pin, eager=False)
             )
         row = cur.agg(F.count("*").alias("n_users")).select(
             F.lit(i).alias("step"),

@@ -15,7 +15,7 @@ This module trains BPE the scalable way:
   a 1-row argmax collect (bounded: one pair per step);
 * re-encoding a step's merge touches ONLY words containing the chosen
   pair (an ``exists`` filter — no shuffle), and the histogram is
-  ``localCheckpoint``-pinned per step so the plan stays O(1) in steps;
+  ``localCheckpoint``-ed per step so the plan stays O(1) in steps;
 * determinism: ties broken by (max count, lexicographically smallest
   pair) via a single ``min(struct(-count, a, b))`` aggregate — no
   global sort, bit-stable across partitionings, so trained merge
@@ -37,7 +37,6 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from ..plans.pin import pin as _pin, pin_lazy as _pin_lazy
 
 # end-of-word sentinel: single char keeps symbol arrays compact; U+2581
 # (the SentencePiece "lower one eighth block") never appears in the
@@ -134,7 +133,7 @@ def bpe_train(
     hist = (
         hist.select(_symbols(F.col("word")).alias("syms"), "count")
         .repartition(p, "syms")
-        .transform(_pin)
+        .localCheckpoint()
     )
     if hist.count() <= local_vocab_limit:
         return _bpe_train_local(
@@ -195,7 +194,7 @@ def bpe_train(
             .otherwise(F.col("syms"))
             .alias("syms"),
             "count",
-        ).transform(_pin_lazy)
+        ).localCheckpoint(eager=False)
     return merges
 
 
@@ -331,11 +330,11 @@ def unigram_train(
 
     spark = hist.sparkSession
     mpl = max_piece_len
-    # pin the histogram BEFORE the size gate (same as bpe_train): the
+    # checkpoint the histogram BEFORE the size gate (same as bpe_train): the
     # count() materializes the checkpoint, so the local path's collect
     # and the distributed path's per-iteration reuse both read the
     # materialized rows instead of re-running the histogram subtree
-    hist = hist.transform(_pin)
+    hist = hist.localCheckpoint()
     local_rows = None
     if local_vocab_limit and hist.count() <= local_vocab_limit:
         local_rows = [

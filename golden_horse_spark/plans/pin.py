@@ -1,69 +1,48 @@
-"""Partitioning-preserving local checkpoints.
+"""Partitioning-preserving local checkpoints, for co-partitioned state.
 
-Spark 4 + AQE silently drops partitioning metadata at every
-``localCheckpoint``: with adaptive execution enabled, the checkpointed
-dataset's physical plan is an ``AdaptiveSparkPlan`` whose
-``outputPartitioning`` is still unknown when ``LogicalRDD.fromDataset``
-captures it, so the resulting scan reports no partitioning and every
-downstream co-partitioned join/aggregate pays a redundant Exchange that
-EnsureRequirements would otherwise elide. Measured on this repo's
-pagerank: 4 scheduled shuffles per round instead of the 1 the operator
-is designed for — at 100 TB that's 3 extra full shuffles of the rank
-table per iteration, a scale-killer hiding behind a one-line API call.
+With adaptive execution on, a ``localCheckpoint``'s source plan is an
+``AdaptiveSparkPlan`` whose ``outputPartitioning`` is still unknown when
+``LogicalRDD.fromDataset`` captures it, so the checkpointed scan reports
+no partitioning and a later join or aggregate on the same key pays an
+Exchange that EnsureRequirements would otherwise elide (Spark 4.1.2: a
+co-partitioned join of two checkpointed frames plans 1 shuffle with a
+plain ``localCheckpoint``, 0 with ``pin``).
 
-``pin_checkpoint`` closes the gap: the checkpoint source is PLANNED
-with AQE off (a per-plan property — the conf is flipped only around
-plan creation and restored immediately), so the physical plan exposes
-its real ``hashpartitioning`` and ``LogicalRDD`` keeps it; downstream
-queries are planned with AQE on as usual and see a partitioned scan.
-The trade: the checkpointed sub-plan itself (typically one exchange +
-narrow ops in this package's loop bodies) runs without AQE's runtime
-re-planning — exactly the plans that are intentionally pinned anyway.
+``pin`` plans the checkpoint in a clone of the caller's session with
+AQE off on the clone only: the clone carries the caller's runtime conf
+(shuffle partitions included), its physical plan exposes the real
+``hashpartitioning``, and ``LogicalRDD`` keeps it. The checkpointed
+plan is then handed back to the caller's session, where downstream
+queries plan with AQE on as usual. The caller's conf is never written,
+so queries planned concurrently from other threads (streaming
+``foreachBatch``, trainer threads) always see AQE on.
+
+Keep-pin rule: a site uses ``pin`` only when a later join, aggregate or
+window on the checkpoint's own hash key reuses its partitioning — the
+round state and arc tables of the iterative graph operators and of
+connected components. Everywhere else a stock
+``df.localCheckpoint(eager)`` is the checkpoint: it keeps AQE's runtime
+re-planning of the checkpointed sub-plan. ``tests/test_pin.py`` holds
+the allowlist of functions that call ``pin``, each with its key and
+consumer.
 """
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 
-_AQE_KEY = "spark.sql.adaptive.enabled"
-# one lock for ALL pin callers: streaming foreachBatch threads invoke
-# pinned operators concurrently with the driver thread, and two
-# overlapping flips could restore a stale conf value (round-6 ADVICE
-# fix). The lock serializes flip→plan→restore windows so the restored
-# value is always the true outer setting.
-_PIN_LOCK = threading.RLock()
 
-
-def pin_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` that preserves hash partitioning
-    (plans the checkpoint source with AQE off — see module docstring).
-    Works for lazy checkpoints too: ``fromDataset`` forces planning at
-    call time, inside the conf window.
-
-    The conf flip is session-scoped for the duration of ONE plan
-    construction (microseconds, restored in ``finally``) and serialized
-    by ``_PIN_LOCK`` across threads, so overlapping pins can't restore
-    a stale value. A non-pin query planned concurrently from another
-    thread could still observe the microsecond window; callers that
-    plan unrelated queries from other threads should scope with
-    ``SparkSession.newSession()`` instead."""
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)`` that keeps the hash partitioning of
+    ``df``'s plan — see the module docstring. ``transform``-friendly:
+    ``df.transform(pin)`` / ``df.transform(pin, eager=False)``. A lazy
+    pin still plans at call time (``fromDataset`` builds the physical
+    plan), so the AQE-off planning happens inside the clone either way."""
     spark = df.sparkSession
-    with _PIN_LOCK:
-        prev = spark.conf.get(_AQE_KEY)
-        spark.conf.set(_AQE_KEY, "false")
-        try:
-            return df.localCheckpoint(eager=eager)
-        finally:
-            spark.conf.set(_AQE_KEY, prev)
-
-
-def pin(df: DataFrame) -> DataFrame:
-    """``transform``-friendly eager form: ``df.transform(pin)``."""
-    return pin_checkpoint(df, eager=True)
-
-
-def pin_lazy(df: DataFrame) -> DataFrame:
-    """``transform``-friendly lazy form: ``df.transform(pin_lazy)``."""
-    return pin_checkpoint(df, eager=False)
+    clone = spark._jsparkSession.cloneSession()
+    clone.conf().set("spark.sql.adaptive.enabled", "false")
+    of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    plan = df._jdf.queryExecution().logical()
+    ck = of_rows(clone, plan).localCheckpoint(eager)
+    back = of_rows(spark._jsparkSession, ck.queryExecution().logical())
+    return DataFrame(back, spark)

@@ -78,14 +78,19 @@ def test_embedding_near_dup_blocked_equals_bruteforce(spark):
 
 
 def test_embedding_near_dup_zero_vector_dropped(spark):
+    """Zero vectors never pair; and the assigned table is a checkpoint
+    Spark reclaims, not a cached table left behind in the session's
+    CacheManager after the call."""
     from golden_horse_spark.operators.dedup import embedding_near_dup_pairs
 
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [1.0, 1e-9]), (2, [0.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
+    spark.catalog.clearCache()
     got = embedding_near_dup_pairs(emb, min_cosine=0.9, n_cells=2).collect()
     assert {(r["id_a"], r["id_b"]) for r in got} == {(0, 1)}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # ------------------------------------------------------------ minhash LSH

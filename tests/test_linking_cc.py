@@ -1404,6 +1404,29 @@ def test_cc_num_edges_hint_and_limit_fallback(spark):
     assert over_cap == want
 
 
+def test_cc_fast_path_is_one_job(spark):
+    """Below the driver cap one bounded ``limit(n+1)`` collect both
+    decides the path and is the edge list union-find solves: CC of a
+    small in-memory frame runs exactly one Spark job (a count probe
+    plus a second collect of the same edges ran three)."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)] + [(20, 21), (21, 22), (30, 31)],
+        "src long, dst long",
+    )
+    sc = spark.sparkContext
+    group = "cc-fast-path-one-job"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    got = {r["node"]: r["component"] for r in out.collect()}
+    assert got == {**{i: 0 for i in range(9)}, 20: 20, 21: 20, 22: 20,
+                   30: 30, 31: 30}
+
+
 def test_cc_null_endpoints_are_not_nodes_on_both_paths(spark):
     """NULL is not a node: an edge with one NULL endpoint keeps its
     other endpoint (as a self-loop), an edge with two is dropped. The
