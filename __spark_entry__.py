@@ -4859,7 +4859,7 @@ def oracle_sql() -> dict[str, str]:
             FROM lineitem JOIN part ON l_partkey = p_partkey
             GROUP BY p_brand
         """,
-        "q_salted_counts": """
+        "q_salted_counts": r"""
             SELECT 'agg:' || l_returnflag AS k, count(l_quantity) AS n,
                    round(sum(l_quantity), 2) AS qty
             FROM lineitem GROUP BY l_returnflag
@@ -4962,7 +4962,7 @@ def oracle_sql() -> dict[str, str]:
                 WITH wcnt AS (
                     SELECT w, count(*) AS cnt FROM (
                         SELECT unnest(string_split_regex(trim(text),
-                                                         '\\s+')) AS w
+                                                         '\s+')) AS w
                         FROM documents
                     ) WHERE length(w) > 0 GROUP BY w
                 ), wrank AS (

@@ -49,14 +49,24 @@ def _local_cc_limit() -> int:
     return int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "500000"))
 
 
-def _driver_union_find(spark, pdf, dtype) -> DataFrame:
-    """Union-find over a collected (pandas) edge list; component = min
-    node of each set (union links the larger root under the smaller, so
-    every root is its set's minimum — the exact label the distributed
-    hash-to-min rounds converge to). The edge list has no NULL
-    endpoint (``connected_components`` rewrites them first)."""
+def _driver_union_find(e: DataFrame, pdf, dtype) -> DataFrame:
+    """Union-find over ``pdf``, the collected (pandas) rows of the edge
+    frame ``e(a, b)``; component = min node of each set (union links
+    the larger root under the smaller, so every root is its set's
+    minimum — the exact label the distributed hash-to-min rounds
+    converge to). The edge list has no NULL endpoint
+    (``connected_components`` rewrites them first).
+
+    An empty edge list returns ``e``'s own projection under a false
+    filter, which the optimizer folds to an empty ``LocalRelation``:
+    ``createDataFrame`` of an empty pandas frame skips Arrow and plans a
+    Python RDD, which costs a job of its own when read."""
     import pandas as pd
 
+    if pdf.empty:
+        return e.select(
+            F.col("a").alias("node"), F.col("a").alias("component")
+        ).where(F.lit(False))
     a_name, b_name = pdf.columns[0], pdf.columns[1]
     parent: dict = {}
 
@@ -87,7 +97,7 @@ def _driver_union_find(spark, pdf, dtype) -> DataFrame:
     schema = StructType(
         [StructField("node", dtype, True), StructField("component", dtype, True)]
     )
-    return spark.createDataFrame(out, schema=schema)
+    return e.sparkSession.createDataFrame(out, schema=schema)
 
 
 def connected_components(
@@ -119,7 +129,13 @@ def connected_components(
     alias graphs are tiny islands even at corpus scale, so production runs mostly take the
     fast path too; graph-scale inputs exceed the cap and run the
     distributed hash-to-min rounds below, driven to their fixpoint by
-    ``plans.fixpoint``.
+    ``plans.fixpoint``. Only that distributed path materializes the
+    edges: symmetrized in one pass, in its pinned edge table. The
+    bounded collect computes them itself.
+
+    An empty edge list returns zero rows of the id type as an empty
+    ``LocalRelation`` (no Python RDD, no job): a left join against it,
+    as in :func:`canonical_entities`, folds away in the optimizer.
     """
     spark = edges.sparkSession
     lim = _local_cc_limit() if local_edge_limit is None else local_edge_limit
@@ -133,16 +149,23 @@ def connected_components(
         if num_edges is None:
             pdf = e.limit(lim + 1).toPandas()  # Arrow-accelerated collect
             if len(pdf) <= lim:
-                return _driver_union_find(spark, pdf, s_type)
+                return _driver_union_find(e, pdf, s_type)
         elif num_edges <= lim:
-            return _driver_union_find(spark, e.toPandas(), s_type)
+            return _driver_union_find(e, e.toPandas(), s_type)
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # symmetrize once; hash-partition on the PROBE key b so each round's
-    # join reuses this exchange (pin keeps the partitioning).
+    # symmetrize once, in one pass over the edges (each row emits both
+    # directions, so the caller's edge lineage runs once, inside this
+    # pin); hash-partition on the PROBE key b so each round's join
+    # reuses this exchange (pin keeps the partitioning).
     # Self-loops stay: they keep nodes whose only edge is one.
+    both_ways = F.explode(F.array(
+        F.struct(F.col("a").alias("a"), F.col("b").alias("b")),
+        F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
+    )).alias("ab")
     sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        e.select(both_ways)
+        .select("ab.a", "ab.b")
         .distinct()
         .repartition(p, "b")
         .transform(_pin)
@@ -192,6 +215,14 @@ def canonical_entities(links: DataFrame) -> DataFrame:
     star from its minimum candidate entity — same components, |entities|
     nodes instead of |mentions| + |entities|. The projection is one
     aggregation on mention_id (range/AQE-partitioned shuffle).
+
+    Links scored with one entity per mention (``score_links``' default
+    ``top_k=1``, the pipeline's case) project to zero edges: every
+    entity is its own canonical id, ``connected_components`` returns an
+    empty ``LocalRelation`` and the left join below folds away. The
+    edges are not checkpointed here: the bounded fast-path collect
+    reads them once, and past its cap ``connected_components``
+    materializes them once, in the pinned edge table of its rounds.
     """
     star = links.groupBy("mention_id").agg(
         F.min("entity_id").alias("root"),
@@ -200,11 +231,6 @@ def canonical_entities(links: DataFrame) -> DataFrame:
     edges = star.select(
         F.col("root").alias("src"), F.explode("ents").alias("dst")
     ).where(F.col("src") != F.col("dst")).distinct()
-    # materialize once: the bounded fast-path collect inside
-    # connected_components and, past its cap, the distributed rounds'
-    # symmetrization both read these edges — without the checkpoint
-    # each would re-run the mention-star aggregation above
-    edges = edges.localCheckpoint(eager=False)
     singletons = links.select("entity_id").distinct()
     cc = connected_components(edges)
     return (

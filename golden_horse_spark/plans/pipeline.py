@@ -34,8 +34,9 @@ counts — the per-partition lineage the rule requires. For unpartitioned
 stages the partition is the WRITE TASK and its count is read on the
 driver from the footer of the ``part-NNNNN-*`` file that task wrote, so
 each such stage commit costs exactly one Spark job (the write); for the
-partitioned triples table it is the partition-column value, counted by
-a partition-pruned query after the write.
+partitioned triples table it is the partition-column value, counted on
+the driver from the footers of the files in that value's directory, so
+that commit runs no count or schema job after the write either.
 """
 
 from __future__ import annotations
@@ -47,10 +48,14 @@ import re
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable, Dict, Optional
+from urllib.parse import unquote
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType, IntegerType, LongType, StringType, StructType,
+)
 
 from ..operators.canonicalize import canonical_entities
 from ..operators.linking import generate_candidates, score_links
@@ -80,6 +85,8 @@ class PipelineConfig:
 
 
 _PART_FILE = re.compile(r"part-(\d+)-")
+# directory value Spark writes for a NULL or empty partition value
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _footer_rows(data_path: Path) -> Dict[str, int]:
@@ -96,6 +103,40 @@ def _footer_rows(data_path: Path) -> Dict[str, int]:
         task = str(int(_PART_FILE.match(f.name).group(1)))
         rows[task] = rows.get(task, 0) + pq.read_metadata(f).num_rows
     return rows
+
+
+def _partition_footer_rows(data_path: Path, column: str) -> Dict[str, int]:
+    """Row counts per ``<column>=<raw>`` directory of a partitioned
+    parquet table, keyed by the raw (still escaped) directory value and
+    read on the driver from the footers of its ``part-*.parquet`` files
+    — the partitioned twin of :func:`_footer_rows`."""
+    import pyarrow.parquet as pq
+
+    rows: Dict[str, int] = {}
+    for d in sorted(data_path.glob(f"{column}=*")):
+        raw = d.name[len(column) + 1:]
+        rows[raw] = sum(
+            pq.read_metadata(f).num_rows for f in d.glob("part-*.parquet")
+        )
+    return rows
+
+
+def _partition_value(raw: str, dtype):
+    """The Python value Spark's partition discovery reads back from the
+    raw directory value ``raw`` of a column it typed ``dtype``: path
+    escapes undone, the default partition (NULL and '') as None. Spark
+    infers integral, double and string partition columns from directory
+    names (booleans are read back as the strings 'true'/'false')."""
+    if raw == _DEFAULT_PARTITION:
+        return None
+    raw = unquote(raw)
+    if isinstance(dtype, (IntegerType, LongType)):
+        return int(raw)
+    if isinstance(dtype, DoubleType):
+        return float(raw)
+    if isinstance(dtype, StringType):
+        return raw
+    raise TypeError(f"partition column of type {dtype.simpleString()}")
 
 
 def _atomic_write_json(path: Path, obj: dict) -> None:
@@ -136,8 +177,14 @@ class StageWriter:
       PARTITION-granular: every completed partition value gets its own
       atomic completion record under ``<stage>.parts/``; on restart the
       completed partitions are filter-pruned away from the recompute and
-      only the remainder is written (dynamic partition overwrite, so
-      finished partitions' files are never touched). A SIGKILL at any
+      only the remainder is written (dynamic partition overwrite, set
+      on the write itself, so finished partitions' files are never
+      touched; the session's overwrite mode is never changed). The
+      commit runs no count or schema job after the write: each completion
+      record's count is the footer rows of its ``<col>=<value>``
+      directory, its value is the directory name as the re-read's
+      partition discovery types it, and the re-read is handed the data
+      columns' schema instead of inferring it. A SIGKILL at any
       point — mid-job, between the job and the markers, mid-marker-loop
       — recovers to the identical table with no duplicated partitions,
       because (a) a partition without a marker is always rewritten
@@ -212,66 +259,71 @@ class StageWriter:
         pdir.mkdir(parents=True, exist_ok=True)
         done = self.done_parts(stage, fingerprint) if self.resume else {}
         df = compute()
-        conf = self.spark.conf
-        prev_mode = conf.get("spark.sql.sources.partitionOverwriteMode")
-        # not-a-completed-partition predicate on the partition column —
-        # a plain deterministic predicate, so it partition-prunes both
-        # the recompute's write AND the post-write counting scan (NULL
-        # partition values are handled explicitly: isin() is NULL on
-        # NULL input, never True/False)
-        not_done = F.lit(True)
         if done:
+            # resume: filter away completed partitions with a
+            # not-a-completed-partition predicate on the partition
+            # column (the value list is bounded by n_parts, a tiny
+            # in-predicate; NULL is handled explicitly: isin() is NULL
+            # on NULL input, never True/False) and overwrite ONLY the
+            # remainder's directories; completed partitions' files are
+            # untouched.
             done_vals = [json.loads(k) for k in done]
             nonnull = [v for v in done_vals if v is not None]
             col = F.col(partition_by)
+            not_done = F.lit(True)
             if nonnull:
                 not_done = ~F.coalesce(col.isin(nonnull), F.lit(False))
             if any(v is None for v in done_vals):
                 not_done = not_done & col.isNotNull()
-        try:
-            if done:
-                # resume: filter away completed partitions (the value
-                # list is bounded by n_parts, a tiny in-predicate) and
-                # overwrite ONLY the remainder's directories; completed
-                # partitions' files are untouched.
-                conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-                df.filter(not_done).write.mode("overwrite") \
-                    .partitionBy(partition_by).parquet(str(data_path))
-            else:
-                # first attempt (or full invalidation): static overwrite
-                # clears stale directories from any previous fingerprint,
-                # and stale completion records are dropped with them.
-                for f in pdir.glob("*.json"):
-                    f.unlink()
-                conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-                df.write.mode("overwrite") \
-                    .partitionBy(partition_by).parquet(str(data_path))
-        finally:
-            conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+            df.filter(not_done).write.mode("overwrite") \
+                .option("partitionOverwriteMode", "dynamic") \
+                .partitionBy(partition_by).parquet(str(data_path))
+        else:
+            # first attempt (or full invalidation): static overwrite
+            # clears stale directories from any previous fingerprint,
+            # and stale completion records are dropped with them.
+            for f in pdir.glob("*.json"):
+                f.unlink()
+            df.write.mode("overwrite") \
+                .option("partitionOverwriteMode", "static") \
+                .partitionBy(partition_by).parquet(str(data_path))
         self._empty_guard(data_path, df.schema)
-        out = self.spark.read.parquet(str(data_path))
+        part_dirs = _partition_footer_rows(data_path, partition_by)
+        # the data columns' schema skips the footer-inference job; the
+        # partition column's type is still inferred from the directory
+        # names on the driver. An empty stage has no partition
+        # directory, only the guard's file, which holds every column.
+        read_schema = df.schema
+        if part_dirs:
+            read_schema = StructType(
+                [f for f in df.schema if f.name != partition_by]
+            )
+        out = self.spark.read.schema(read_schema).parquet(str(data_path))
         # completion records from the data that actually landed (exact
-        # per-partition counters for lineage), one atomic file each.
-        # Only the partitions written THIS attempt are counted — the
-        # count scan partition-prunes to them via ``not_done``, so a
-        # resume never re-reads completed partitions (their counts come
-        # from their existing markers); at 100 TB stage sizes that is
-        # the difference between a bounded restart and a full re-scan.
-        counts = out.filter(not_done).groupBy(partition_by).count().collect()
+        # per-partition counters for lineage), one atomic file each,
+        # counted from the part files' footers with each directory's
+        # value parsed as the re-read infers it. Only the partitions
+        # written THIS attempt get a record — a resume never re-reads
+        # completed partitions (their counts come from their existing
+        # markers).
+        dtype = out.schema[partition_by].dataType
         parts_map: Dict[str, int] = dict(done)
-        for r in counts:
-            val = r[partition_by]
+        for raw, n in part_dirs.items():
+            val = _partition_value(raw, dtype)
+            key = json.dumps(val)
+            if key in done:
+                continue
             _atomic_write_json(
                 pdir / _marker_name(partition_by, val),
                 {
                     "stage": stage,
                     "column": partition_by,
                     "value": val,
-                    "rows": r["count"],
+                    "rows": n,
                     "fingerprint": fingerprint,
                 },
             )
-            parts_map[json.dumps(val)] = r["count"]
+            parts_map[key] = n
         self._finish_manifest(stage, fingerprint, parts_map)
         return out
 
@@ -280,9 +332,8 @@ class StageWriter:
         # ZERO part files (not even a schema footer), which breaks every
         # later read with UNABLE_TO_INFER_SCHEMA. Write one empty,
         # schema-bearing file so downstream stages see an empty table.
-        # (partitioned empties drop the partition column from the
-        # schema-bearing file — it comes back as an empty read of the
-        # directory either way)
+        # (a partitioned stage's guard file is unpartitioned: it holds
+        # every column, the partition column included)
         if not any(data_path.glob("**/*.parquet")):
             self.spark.createDataFrame([], schema).repartition(1) \
                 .write.mode("overwrite").parquet(str(data_path))

@@ -1427,6 +1427,43 @@ def test_cc_fast_path_is_one_job(spark):
                    30: 30, 31: 30}
 
 
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+def test_cc_empty_edges_plan_no_python_rdd(spark, id_type):
+    """An empty edge list returns zero rows of the id type as an empty
+    ``LocalRelation``: ``createDataFrame`` of an empty pandas frame
+    would plan a Python RDD, a job of its own when read."""
+    edges = spark.range(0).selectExpr(
+        f"cast(id as {id_type}) as src", f"cast(id as {id_type}) as dst"
+    )
+    out = connected_components(edges)
+    assert out.schema.simpleString() == (
+        f"struct<node:{id_type},component:{id_type}>"
+    )
+    assert "LogicalRDD" not in _optimized_plan(out)
+    assert out.collect() == []
+
+
+def test_canonical_entities_one_link_per_mention_folds_the_join(spark):
+    """One link per mention (``score_links``' default ``top_k=1``)
+    projects to zero edges: every entity is its own canonical id and
+    the plan holds no Python RDD (the left join against the empty
+    components folds away)."""
+    import pandas as pd
+
+    links = spark.createDataFrame(pd.DataFrame({
+        "mention_id": [1, 2, 3, 4],
+        "entity_id": ["e1", "e2", "e1", "e3"],
+    }))
+    out = canonical_entities(links)
+    assert "LogicalRDD" not in _optimized_plan(out)
+    got = {(r["entity_id"], r["canonical_id"]) for r in out.collect()}
+    assert got == {("e1", "e1"), ("e2", "e2"), ("e3", "e3")}
+
+
 def test_cc_null_endpoints_are_not_nodes_on_both_paths(spark):
     """NULL is not a node: an edge with one NULL endpoint keeps its
     other endpoint (as a self-loop), an edge with two is dropped. The

@@ -5,7 +5,6 @@ later keyed join/aggregate reuses the checkpoint's partitioning."""
 
 import ast
 import threading
-import warnings
 from pathlib import Path
 
 import pytest
@@ -182,10 +181,7 @@ PIN_SITES = {
 
 
 def _pin_users(path: Path, rel: str) -> set[str]:
-    with warnings.catch_warnings():  # oracle SQL strings hold regex escapes
-        warnings.simplefilter("ignore", SyntaxWarning)
-        warnings.simplefilter("ignore", DeprecationWarning)
-        tree = ast.parse(path.read_text(encoding="utf-8"))
+    tree = ast.parse(path.read_text(encoding="utf-8"))
     names = {
         a.asname or a.name
         for node in ast.walk(tree)

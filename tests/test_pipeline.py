@@ -174,6 +174,7 @@ def test_empty_corpus_pipeline_completes(spark, weights_path, tmp_path_factory):
     for name in ("sentences", "mentions", "candidates", "links", "entities",
                  "triples"):
         assert stages[name].count() == 0, name
+    assert "part" in stages["triples"].columns
     # resume over the empty checkpoints also works
     stages2 = run_pipeline(
         spark,
@@ -674,6 +675,97 @@ def test_unpartitioned_commit_is_one_job_with_footer_counters(spark, tmp_path):
     assert man["partitions"] == footers
     assert man["rows"] == sum(footers.values()) == out.count() == 1000
     assert out.schema == spark.read.parquet(str(tmp_path / "store" / "st")).schema
+
+
+def _partitioned_rows(spark):
+    # 40 partition values: more directories than Spark's parallel
+    # partition-discovery threshold (32), as in the 64-part triples table
+    return spark.range(0, 2000, numPartitions=4).selectExpr(
+        "id", "cast(id % 40 as int) as part"
+    )
+
+
+def test_partitioned_commit_counts_from_footers(spark, tmp_path):
+    """A partitioned stage commit runs no collect job: each completion
+    record's rows are its directory's footer rows and equal the
+    re-read's per-partition count, and the re-read's schema is the
+    inferred one (no schema-inference job)."""
+    import pyarrow.parquet as pq
+
+    from golden_horse_spark.plans.pipeline import StageWriter
+
+    root = tmp_path / "store"
+    w = StageWriter(spark, str(root))
+    fp = w.fingerprint("st", "u1")
+    sc = spark.sparkContext
+    out, jobs = _group_jobs(
+        sc, "stagewriter-partitioned",
+        lambda: w.load_or_compute(
+            "st", fp, lambda: _partitioned_rows(spark), partition_by="part"
+        ),
+    )
+    tracker = sc.statusTracker()
+    stage_names = [
+        tracker.getStageInfo(s).name
+        for j in jobs for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert not [n for n in stage_names if n.startswith("collect")], stage_names
+    assert out.schema == spark.read.parquet(str(root / "st")).schema
+    counts = {r["part"]: r["count"] for r in out.groupBy("part").count().collect()}
+    assert len(counts) == 40 and sum(counts.values()) == 2000
+    markers = {}
+    for f in (root / "st.parts").glob("*.json"):
+        rec = json.loads(f.read_text())
+        footer = sum(
+            pq.read_metadata(p).num_rows
+            for p in (root / "st" / f"part={rec['value']}").glob("*.parquet")
+        )
+        assert rec["rows"] == footer
+        markers[rec["value"]] = rec["rows"]
+    assert markers == counts
+    man = w.manifest("st")
+    assert {int(k): v for k, v in man["partitions"].items()} == counts
+
+
+def test_partitioned_commit_writes_nothing_to_the_session_conf(
+    spark, tmp_path, monkeypatch
+):
+    """The partition overwrite mode is set on each write, never on the
+    session: a first commit and a marker resume write nothing to the
+    caller's conf."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from golden_horse_spark.plans.pipeline import StageWriter
+
+    writes = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def rec_set(self, key, value):
+        writes.append(("set", key))
+        return real_set(self, key, value)
+
+    def rec_unset(self, key):
+        writes.append(("unset", key))
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", rec_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", rec_unset)
+    root = tmp_path / "store"
+    w = StageWriter(spark, str(root))
+    fp = w.fingerprint("st", "u1")
+
+    def compute():
+        return _partitioned_rows(spark)
+
+    w.load_or_compute("st", fp, compute, partition_by="part")
+    # marker resume: manifest gone, one partition's record gone too, so
+    # the remainder is rewritten with a dynamic overwrite
+    (root / "st.manifest.json").unlink()
+    next((root / "st.parts").glob("*.json")).unlink()
+    out = w.load_or_compute("st", fp, compute, partition_by="part")
+    assert writes == []
+    assert out.count() == 2000
+    assert w.manifest("st")["rows"] == 2000
 
 
 def test_empty_unpartitioned_stage_gets_manifest(spark, tmp_path):
