@@ -1024,29 +1024,6 @@ def fuzzy_dedup(
     return _keep_min_representative(ids, pairs, doc_id)
 
 
-def dedup_semantic(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    min_cosine: float = 0.99,
-    doc_id: str = "doc_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **near_dup_kwargs,
-) -> DataFrame:
-    """Apply :func:`semantic_dedup` to a document table: keeps one doc
-    per semantic group (the min-id representative) plus every doc
-    without an embedding row (no evidence of duplication — the
-    conservative choice for a training corpus)."""
-    keep = semantic_dedup(
-        embeddings, min_cosine, id_col=id_col, vec_col=vec_col,
-        **near_dup_kwargs,
-    ).where(F.col("keep"))
-    survivors = keep.select(F.col(id_col).alias(doc_id))
-    have_vec = embeddings.select(F.col(id_col).alias(doc_id)).distinct()
-    no_vec = docs.join(have_vec, doc_id, "left_anti")
-    return docs.join(survivors, doc_id, "left_semi").unionByName(no_vec)
-
-
 # ----------------------------------- cross-doc duplicated spans (Lee+22)
 
 

@@ -431,48 +431,6 @@ def assortativity(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataF
     )
 
 
-def clustering_stats(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Global clustering coefficient inputs → ONE row ``(n_triangles,
-    n_wedges, global_cc)`` with ``global_cc = 3·triangles / wedges``
-    (wedges = Σ_v C(deg v, 2), the open+closed path-of-2 count). The
-    two integers are exact; the division is the only float. Reuses the
-    degree-oriented triangle count, so the wedge-explosion bound holds.
-    """
-    tri = triangle_count(edges, src=src, dst=dst)
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .union(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("d"))
-    )
-    # d·(d−1) is even, so shiftright-1 IS the exact /2 — summing longs
-    # keeps the wedge count exact past 2^53 (double SUM would not)
-    wedges = deg.agg(
-        F.sum(
-            F.shiftright(F.col("d") * (F.col("d") - 1), 1)
-        ).alias("n_wedges")
-    )
-    return tri.crossJoin(wedges).select(
-        "n_triangles",
-        "n_wedges",
-        (
-            F.lit(3.0)
-            * F.col("n_triangles")
-            / F.greatest(F.col("n_wedges"), F.lit(1))
-        ).alias("global_cc"),
-    )
-
-
 def k_truss(
     edges: DataFrame,
     k: int,
@@ -1000,15 +958,10 @@ def label_propagation(
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     _dec = "decimal(27,9)"
     if weight_col is None:
-        sym = (
-            edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-            .where(F.col("s") != F.col("d"))
-            .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-            .where(F.col("s") != F.col("d"))
-            .distinct()
-            .withColumn("ew", F.lit(1))
+        sym = _arcs(edges, src, dst, p).select(
+            F.col("a").alias("s"), F.col("b").alias("d")
         )
-        self_w = F.lit(1)
+        ew = self_w = F.lit(1)
     else:
         n_neg = edges.where(F.col(weight_col) < 0).count()
         if n_neg:
@@ -1026,9 +979,10 @@ def label_propagation(
                                    F.col("s").alias("d"), "ew"))
             .groupBy("s", "d")
             .agg(F.sum("ew").cast(_dec).alias("ew"))  # parallel edges sum
+            .repartition(p, "s")
+            .transform(_pin)
         )
-        self_w = F.lit(self_weight).cast(_dec)
-    sym = sym.repartition(p, "s").transform(_pin)
+        ew, self_w = F.col("ew"), F.lit(self_weight).cast(_dec)
     labels = (
         sym.select(F.col("s").alias("node"))
         .distinct()
@@ -1039,7 +993,7 @@ def label_propagation(
     for _ in range(n_iter):
         votes = sym.join(
             labels.withColumnRenamed("node", "s"), "s"
-        ).select(F.col("d").alias("node"), "label", F.col("ew").alias("w"))
+        ).select(F.col("d").alias("node"), "label", ew.alias("w"))
         self_votes = labels.select("node", "label", self_w.alias("w"))
         # argmax-by-count, ties to the smallest label, as ONE aggregate:
         # min(struct(-count, label)) — no per-node window, no sort
@@ -1672,161 +1626,6 @@ def _check_sketch_args(sketch, lg_k, k):
         raise ValueError(f"k={k} — bottom-k needs k ≥ 8 to estimate")
 
 
-def neighborhood_function(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 16,
-    sketch: str = "kmv",
-    k: int = 1024,
-    lg_k: int = 12,
-    directed: bool = False,
-    num_partitions: int | None = None,
-    early_stop: bool = True,
-) -> DataFrame:
-    """HyperANF (Boldi, Rosa & Vigna, WWW'11): the neighborhood function
-    N(t) = |{(u,v) : dist(u,v) ≤ t}| for t = 0..max_hops, estimated by
-    per-node distinct-count sketches union-merged along edges — the
-    scalable way to measure distance distributions / effective diameter
-    where exact all-pairs BFS (O(n·m)) is unthinkable. Returns a small
-    DataFrame ``(hop int, n_pairs long)``.
-
-    Sketch backends (see the module section above): ``"kmv"`` (default)
-    is DETERMINISTIC under any partitioning — union is a set operation
-    on sorted bottom-k arrays — and EXACT while balls hold < k nodes;
-    ``"hll"`` (Spark datasketches built-ins) packs more accuracy per
-    byte for extreme graphs but its transient-hop estimates vary
-    ~0.1–0.2% run-to-run (HIP accumulator is merge-order-dependent —
-    measured, documented in BENCH.md), so don't pin its outputs.
-
-    ``early_stop``: the TRUE N(t) is monotone and the graph has finite
-    diameter; once every sketch stops changing, consecutive totals are
-    identical and iteration halts (kmv totals are exact functions of
-    the kept sets, hll totals of the registers). Worst case for hll a
-    wobble-coincidence truncates one hop early; kmv cannot coincide
-    below the fixpoint only if two successive TRUE totals differ but
-    estimates collide — possible in the estimator regime, harmless for
-    the distance distribution. The check rides the per-hop total we
-    already compute — zero extra jobs.
-
-    Per hop: ONE co-partitioned gather join + ONE merge groupBy (a
-    pagerank round's shuffle shape), lazily checkpointed state, O(1)
-    plan size in hops. Distributed state ≤ 8k (kmv) / 2^lg_k (hll)
-    bytes per node; driver state is max_hops scalars.
-
-    Reference parity note: golden-horse has no distance-distribution
-    operator; this extends the §2.12 graph catalog (BFS = single-source
-    exact; this = all-sources approximate) for KG-scale analytics.
-    """
-    _check_sketch_args(sketch, lg_k, k)
-    spark = edges.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # counter(v) gathers along REVERSED arcs (v pulls from w over (v,w)),
-    # so the arc table is partitioned by the probe side b
-    sym = _arcs(edges, src, dst, p, key="b", directed=directed)
-    counters = _ball_init(sym, p, sketch, lg_k, k)
-    totals = [counters.count()]  # N(0) = n nodes
-    est = _ball_est(sketch, k)
-    for _ in range(max_hops):
-        gathered = sym.join(
-            counters.withColumnRenamed("node", "b"), "b"
-        ).select(F.col("a").alias("node"), "sk")
-        counters = (
-            gathered.union(counters.select("node", "sk"))
-            .groupBy("node")
-            .agg(_ball_union_agg(sketch, k))
-            .transform(_pin, eager=False)
-        )
-        t = counters.agg(F.sum(est).cast("long").alias("t")).first()["t"]
-        totals.append(int(t))
-        if early_stop and len(totals) >= 2 and totals[-1] == totals[-2]:
-            break
-    return spark.createDataFrame(
-        [(h, n) for h, n in enumerate(totals)], "hop int, n_pairs long"
-    )
-
-
-def effective_diameter(
-    edges: DataFrame,
-    fraction: float = 0.9,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 64,
-    sketch: str = "kmv",
-    k: int = 1024,
-    lg_k: int = 12,
-    directed: bool = False,
-    num_partitions: int | None = None,
-) -> float:
-    """Effective diameter at ``fraction`` (Leskovec's 90% convention):
-    the smallest t, linearly interpolated between hops, at which
-    N(t) ≥ fraction · N(∞) — computed from :func:`neighborhood_function`
-    run to convergence (``early_stop`` fires once every sketch is
-    stable, so ``max_hops`` is a safety bound, not a cost). One
-    driver-side pass over ≤ max_hops scalars. Interpolates on the
-    running max of the curve: the true N(t) is monotone but estimator
-    wobble (hll transient hops) can dip locally."""
-    if not 0 < fraction <= 1:
-        raise ValueError(f"fraction={fraction} outside (0, 1]")
-    rows = neighborhood_function(
-        edges, src=src, dst=dst, max_hops=max_hops, sketch=sketch, k=k,
-        lg_k=lg_k, directed=directed, num_partitions=num_partitions,
-        early_stop=True,
-    ).collect()
-    raw = [r["n_pairs"] for r in sorted(rows, key=lambda r: r["hop"])]
-    nf, hi = [], 0
-    for v in raw:
-        hi = max(hi, v)
-        nf.append(hi)
-    target = fraction * nf[-1]
-    for h, n in enumerate(nf):
-        if n >= target:
-            if h == 0 or nf[h] == nf[h - 1]:
-                return float(h)
-            return (h - 1) + (target - nf[h - 1]) / (nf[h] - nf[h - 1])
-    return float(len(nf) - 1)
-
-
-def harmonic_centrality(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 16,
-    sketch: str = "kmv",
-    k: int = 1024,
-    lg_k: int = 12,
-    directed: bool = False,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Harmonic centrality H(v) = Σ_{u≠v} 1/dist(v,u) for every node at
-    once, via HyperBall (Boldi & Vigna, ICDMW'13 — the method's
-    headline application): with b_t(v) = |ball(v,t)| from the same
-    per-node sketches as :func:`neighborhood_function`,
-    H(v) = Σ_t (b_t(v) − b_{t−1}(v)) / t. Exact closeness needs one BFS
-    per node — O(n·m); this needs diameter-many pagerank-shaped rounds
-    TOTAL for all nodes. Returns (node, centrality double, ball long).
-
-    The per-node running state (previous ball size, harmonic sum) rides
-    the SAME merge aggregate as the sketch union — gathered neighbor
-    rows carry NULL state, the node's own row carries it, ``max``
-    selects it — so the extension costs zero extra shuffles. With the
-    default ``"kmv"`` sketch the result is deterministic under any
-    partitioning and EXACT (up to float rounding of 1/t sums) on
-    graphs whose balls stay under k; with ``"hll"`` the per-hop
-    increments inherit the documented transient wobble (clamped at 0).
-
-    ``directed=True`` measures OUT-ball harmonic centrality (transpose
-    the edges for the in-ball variant Boldi–Vigna recommend for web
-    graphs).
-
-    Thin wrapper over :func:`hyperball_profile` (one shared run).
-    """
-    return hyperball_profile(
-        edges, src=src, dst=dst, max_hops=max_hops, sketch=sketch, k=k,
-        lg_k=lg_k, directed=directed, num_partitions=num_partitions,
-    )[1]
-
-
 def hyperball_profile(
     edges: DataFrame,
     src: str = "src",
@@ -1838,16 +1637,27 @@ def hyperball_profile(
     directed: bool = False,
     num_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """ONE HyperBall run → ``(nf_df, hc_df)``: the neighborhood-function
-    rows (hop, n_pairs) AND the per-node harmonic-centrality table
-    (node, centrality, ball). The NF totals are exactly the convergence
-    scalars the centrality loop must compute anyway, so sharing the run
-    halves the cost vs calling :func:`neighborhood_function` and
-    :func:`harmonic_centrality` separately — at large k the converged-
-    hop gathers move Σ_arcs |ball| sketch entries and dominate
-    everything else. Runs to convergence (totals stable), bounded by
-    ``max_hops``; the returned NF includes the first stable hop, same
-    convention as neighborhood_function's early stop.
+    """ONE HyperBall run (Boldi & Vigna, ICDMW'13; HyperANF, Boldi, Rosa
+    & Vigna, WWW'11) → ``(nf_df, hc_df)``: the neighborhood function
+    N(t) = |{(u,v) : dist(u,v) ≤ t}| as rows (hop int, n_pairs long),
+    AND the per-node harmonic centrality H(v) = Σ_{u≠v} 1/dist(v,u) as
+    (node, centrality double, ball long). Per-node distinct-count
+    sketches of the t-ball are union-merged along arcs each hop; with
+    b_t(v) = |ball(v,t)|, N(t) = Σ_v b_t(v) and
+    H(v) = Σ_t (b_t(v) − b_{t−1}(v)) / t. The NF totals are exactly the
+    convergence scalars the centrality loop computes anyway, and the
+    per-node running state (previous ball, harmonic sum) rides the same
+    merge aggregate as the sketch union (gathered rows carry NULL state,
+    ``max`` selects the node's own), so one run costs one gather join +
+    one merge groupBy per hop. Exact all-pairs BFS is O(n·m).
+
+    ``sketch`` picks a backend of the section comment above (``"kmv"``
+    is deterministic and exact below k; ``"hll"`` wobbles in transient
+    hops — its per-hop increments are clamped at 0). ``directed=True``
+    gathers along out-arcs (out-ball NF and centrality).
+
+    Runs to convergence (totals stable), bounded by ``max_hops``; the
+    returned NF includes the first stable hop.
     """
     _check_sketch_args(sketch, lg_k, k)
     spark = edges.sparkSession
@@ -2392,88 +2202,6 @@ def random_walks(
     for d in parts[1:]:
         out = out.unionByName(d)
     return out
-
-
-def graph_embeddings(
-    edges: DataFrame,
-    dim: int = 32,
-    walk_length: int = 10,
-    num_walks: int = 2,
-    window: int = 5,
-    n_iter: int = 1,
-    seed: int = 1,
-    src: str = "src",
-    dst: str = "dst",
-    directed: bool = False,
-    num_partitions: int | None = None,
-    deterministic: bool = False,
-) -> DataFrame:
-    """DeepWalk graph embeddings end-to-end → ``(node, embedding)``
-    with ``embedding: array<float>`` — the composition
-    :func:`random_walks` → skip-gram (Perozzi et al. KDD'14), closing
-    the loop to this package's ANN/near-dup operators, which consume
-    exactly this (id, array<float>) shape.
-
-    The walk corpus is the derandomized generator above (md5-choice —
-    reproducible sentences); the skip-gram stage is Spark MLlib's
-    JVM-side Word2Vec (hierarchical-softmax skip-gram), trained on one
-    sentence per (root, walk). ``deterministic=True`` forces
-    numPartitions=1 and a canonical sentence order so two runs with
-    the same seed produce identical vectors — the multi-partition
-    default trades that for training parallelism (Hogwild-style merge,
-    run-to-run float drift), which is the right default at scale and
-    the reason this operator is pytest-verified (shape, coverage,
-    determinism in the pinned mode) but never oracle-pinned.
-    """
-    from pyspark.ml.feature import Word2Vec
-
-    walks = random_walks(
-        edges,
-        None,
-        walk_length=walk_length,
-        num_walks=num_walks,
-        src=src,
-        dst=dst,
-        directed=directed,
-        num_partitions=num_partitions,
-    )
-    sentences = (
-        walks.groupBy("root", "walk")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("step", "node"))
-                ),
-                lambda s: s["node"].cast("string"),
-            ).alias("sentence")
-        )
-    )
-    if deterministic:
-        sentences = sentences.orderBy("root", "walk").coalesce(1)
-    w2v = Word2Vec(
-        vectorSize=dim,
-        windowSize=window,
-        minCount=0,
-        maxIter=n_iter,
-        seed=seed,
-        # the documented contract: deterministic=True serializes
-        # (numPartitions=1 + canonical sentence order); the default
-        # actually trains Hogwild-parallel (round-5 review fix: 1 was
-        # hardcoded for BOTH modes, so the promised parallel default
-        # never happened)
-        numPartitions=1 if deterministic else int(
-            sentences.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        ),
-        inputCol="sentence",
-        outputCol="_v",
-    )
-    model = w2v.fit(sentences)
-    from pyspark.ml.functions import vector_to_array
-
-    return model.getVectors().select(
-        F.col("word").alias("node"),
-        vector_to_array(F.col("vector"), "float32").alias("embedding"),
-    )
 
 
 def node2vec_walks(
@@ -3201,17 +2929,6 @@ def transe_rank_eval(
             (F.coalesce("_nbetter", F.lit(0)) + 1).cast("long").alias("rank"),
         )
     )
-
-
-def ranking_metrics(ranks: DataFrame, ks=(1, 3, 10)) -> DataFrame:
-    """MRR + Hits@k over a ``rank`` column (the standard KG-embedding
-    report). One global aggregate."""
-    aggs = [F.avg(1.0 / F.col("rank")).alias("mrr")]
-    for k in ks:
-        aggs.append(
-            F.avg((F.col("rank") <= k).cast("double")).alias(f"hits_{k}")
-        )
-    return ranks.agg(*aggs)
 
 
 def condensation(

@@ -33,9 +33,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from .dedup import prefix_jaccard_join
 
-CANDIDATE_COLS = ["mention_id", "entity_id", "score", "block_id"]
-
-
 def exact_candidates(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     """Broadcast-hash join on surface form. mentions must carry
     (mention_id, surface)."""

@@ -10,8 +10,8 @@
   query probes only the closest ``n_probe`` cells — at 10^12 vectors the
   scan touches n_probe/n_cells of the data, and the cell assignment is
   the partition key so each probe is partition-pruned.
-* ``lsh_bucket_topk`` — random-hyperplane LSH variant: sign-bit sketch
-  via broadcast hyperplanes, candidates from matching buckets only.
+* ``lsh_multitable_topk`` — random-hyperplane LSH variant: L tables of
+  seeded sign-bit sketches, candidates from matching buckets only.
 """
 
 from __future__ import annotations
@@ -89,9 +89,7 @@ def train_centroids(
     The sample is ``limit(sample)`` — a PARTIAL scan (first partitions
     to answer), deliberately: IVF seeding only needs plausible cluster
     shapes, and exact operators built on these cells (blocked near-dup)
-    are correct for ANY centroids. When the init must reflect the full
-    distribution, use ``train_centroids_distributed`` (hash-spread
-    sample + distributed Lloyd)."""
+    are correct for ANY centroids."""
     rows = embeddings.select(vec_col).limit(sample).collect()
     x = np.array([r[0] for r in rows], dtype=np.float64)
     return _lloyd(x, n_cells, seed)
@@ -121,40 +119,6 @@ def assign_cells(
     return embeddings.withColumn("cell", F.array_min(F.array(*cands))["c"])
 
 
-def assign_cells_arrow(
-    embeddings: DataFrame, centroids: np.ndarray, vec_col: str = "embedding"
-) -> DataFrame:
-    """``assign_cells`` for LARGE centroid counts: one numpy matmul per
-    Arrow batch instead of an unrolled codegen expression. The unrolled
-    form's plan size (and codegen time) grows linearly with n_cells —
-    fine to ~64 cells, pathological at thousands; this path is O(1) in
-    plan size and rides BLAS. Same argmin semantics (ties → lowest cell
-    index, matching array_min's (d, c) struct ordering); equality-tested
-    against ``assign_cells`` in test_dedup_scale."""
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructType
-
-    C = np.asarray(centroids, dtype=np.float64)
-    cc = (C * C).sum(1)
-    # copy the field list: StructType(df.schema.fields) would SHARE it,
-    # and .add() would then mutate the input DataFrame's schema object
-    schema = StructType(list(embeddings.schema.fields)).add(
-        "cell", IntegerType()
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf):
-                x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                rank = cc[None, :] - 2.0 * (x @ C.T)
-                pdf = pdf.assign(cell=rank.argmin(1).astype("int32"))
-            else:
-                pdf = pdf.assign(cell=pd.Series([], dtype="int32"))
-            yield pdf
-
-    return embeddings.mapInPandas(run, schema)
-
-
 def ivf_topk(
     embeddings_with_cells: DataFrame,
     centroids: np.ndarray,
@@ -169,34 +133,6 @@ def ivf_topk(
     order = np.argsort(((centroids - q) ** 2).sum(1))[:n_probe]
     cand = embeddings_with_cells.where(F.col("cell").isin(*[int(c) for c in order]))
     return cosine_topk(cand, query, k, id_col, vec_col)
-
-
-def lsh_bucket_topk(
-    embeddings: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    n_planes: int = 12,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Single-table random-hyperplane LSH: bucket = sign bits of dot with
-    seeded hyperplanes; search only the query's bucket. This is the
-    PRIMITIVE — a single table only has usable recall when the target
-    neighbors are very close (match prob per neighbor is (1−θ/π)^b).
-    For moderate-cosine neighbors use ``lsh_multitable_topk``."""
-    dim = len(query)
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(n_planes, dim)
-    bucket_expr = None
-    for i, p in enumerate(planes):
-        bit = F.when(_dot(F.col(vec_col), p) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket_expr = bit if bucket_expr is None else bucket_expr.bitwiseOR(bit)
-    q_bucket = sum((1 << i) for i, p in enumerate(planes) if float(np.dot(p, query)) > 0)
-    bucketed = embeddings.withColumn("bucket", bucket_expr)
-    return cosine_topk(
-        bucketed.where(F.col("bucket") == q_bucket), query, k, id_col, vec_col
-    )
 
 
 def lsh_multitable_topk(
@@ -226,8 +162,7 @@ def lsh_multitable_topk(
     paying below cosine ≈ 0.5, and IVF (``ivf_topk``) is the better
     scale path there.
 
-    Shape: unlike the single-table primitive (b column expressions),
-    L·b projections as nested zip_with/aggregate lambdas explode the
+    Shape: L·b projections as nested zip_with/aggregate lambdas explode the
     codegen expression tree (measured 67s first-call compile at
     b=4, L=16). All L·b projections are ONE (batch × dim)·(dim × L·b)
     numpy matmul — an Arrow-batched pandas_udf producing a boolean
@@ -317,9 +252,9 @@ def train_pq(
     that fits in cluster memory and one that doesn't; ``pq_adc_topk``
     searches the codes without decompressing.
 
-    The training sample is the hash-spread TakeOrdered draw (same shape
-    as ``train_centroids_distributed``): deterministic AND uniform over
-    the data, no sort shuffle. Codebooks are a few hundred KB —
+    The training sample is the hash-spread ``orderBy(xxhash64).limit``
+    draw, which Spark plans as TakeOrdered: deterministic AND uniform
+    over the data, no sort shuffle. Codebooks are a few hundred KB —
     broadcast-size by construction.
     """
     rows = (
@@ -348,8 +283,8 @@ def pq_encode(
     out_col: str = "pq_code",
 ) -> DataFrame:
     """Add ``out_col`` = array<smallint> of per-subspace nearest-codeword
-    indices. One numpy matmul per subspace per Arrow batch (the
-    ``assign_cells_arrow`` shape — O(1) plan size, rides BLAS); ties →
+    indices. One numpy matmul per subspace per Arrow batch (O(1) plan
+    size, rides BLAS); ties →
     lowest code index (argmin), deterministic."""
     from pyspark.sql.types import ArrayType, ShortType, StructType
 
@@ -449,54 +384,3 @@ def pq_adc_topk(
         .limit(k)
     )
 
-
-def train_centroids_distributed(
-    embeddings: DataFrame,
-    n_cells: int = 16,
-    n_iter: int = 8,
-    sample: int = 2000,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Lloyd's k-means with DISTRIBUTED assignment + mean steps — the
-    10^12-vector upgrade of the driver-side ``train_centroids`` (which
-    k-means a driver sample; right for IVF seeding, wrong when the
-    centroids must reflect the full distribution).
-
-    Per iteration: ``assign_cells`` (narrow codegen pass) →
-    posexplode(vector) → groupBy(cell, dim).avg — ONE keyed shuffle of
-    (cell, dim, value) triples — and an O(n_cells·dim) collect of the
-    new centroids. Empty cells keep their previous centroid.
-
-    Init (round 3): the sample is the ``sample`` smallest rows by
-    content hash — Spark plans ``orderBy(xxhash64).limit`` as
-    TakeOrdered (per-partition top-K + driver merge, NO sort shuffle),
-    so the draw is deterministic AND spread uniformly over the data
-    instead of first-partitions-biased (``limit`` alone would seed from
-    whatever partitions answer first — on sorted data that skews every
-    init toward one region). The driver-side ``train_centroids`` keeps
-    the plain limit (partial scan; bias is harmless for IVF seeding —
-    documented there).
-    """
-    rows = (
-        embeddings.select(vec_col)
-        .orderBy(F.xxhash64(vec_col))
-        .limit(sample)
-        .collect()
-    )
-    x = np.array([r[0] for r in rows], dtype=np.float64)
-    rng = np.random.RandomState(seed)
-    cents = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)].copy()
-    for _ in range(n_iter):
-        assigned = assign_cells(embeddings.select(vec_col), cents, vec_col)
-        means = (
-            assigned.select("cell", F.posexplode(F.col(vec_col)).alias("dim", "v"))
-            .groupBy("cell", "dim")
-            .agg(F.avg("v").alias("m"))
-            .collect()
-        )
-        new = cents.copy()
-        for r in means:
-            new[r["cell"], r["dim"]] = r["m"]
-        cents = new
-    return cents

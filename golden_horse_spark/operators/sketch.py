@@ -46,7 +46,7 @@ def _misra_gries_add(counters: dict, key, inc: int, k: int) -> None:
     equal mass from ≥ k+1 distinct keys, so every key's undercount is
     ≤ n/(k+1), the classic MG guarantee. The single shared
     implementation behind both the batch sketch
-    (:func:`heavy_hitter_candidates`) and the streaming one
+    (:func:`heavy_hitters`) and the streaming one
     (``streaming.stream.streaming_heavy_hitters``)."""
     if key in counters:
         counters[key] += inc
@@ -75,29 +75,6 @@ def _misra_gries_update(counters: dict, values, k: int) -> dict:
     for v, cnt in values.value_counts(dropna=False).items():
         _misra_gries_add(counters, v, int(cnt), k)
     return counters
-
-
-def heavy_hitter_candidates(
-    df: DataFrame, col: str, threshold_frac: float
-) -> DataFrame:
-    """Pass 1: per-partition Misra–Gries survivors — a guaranteed
-    superset of all values with global frequency > ``threshold_frac``.
-    One shuffle-free sweep; ≤ ⌈1/φ⌉ rows per partition."""
-    if not 0 < threshold_frac < 1:
-        raise ValueError(f"threshold_frac must be in (0, 1), got {threshold_frac}")
-    k = int(1.0 / threshold_frac) + 1
-    field = df.schema[col]
-    out_schema = f"`{col}` {field.dataType.simpleString()}"
-
-    def sketch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # stream the whole PARTITION through one sketch — mapInPandas
-        # batches share this generator, so state carries across them
-        counters: dict = {}
-        for pdf in batches:
-            _misra_gries_update(counters, pdf[col], k)
-        yield pd.DataFrame({col: list(counters.keys())})
-
-    return df.select(col).mapInPandas(sketch, out_schema).distinct()
 
 
 def heavy_hitters(

@@ -260,9 +260,6 @@ def coalesce_intervals(
     )
 
 
-SCD2_COLS = ("valid_from", "valid_to", "is_current")
-
-
 def scd2_init(
     snapshot: DataFrame,
     ts,
@@ -390,13 +387,6 @@ def compact_changelog(
         .where((F.col("_rn") == 1) & ~F.col(op_col).eqNullSafe(tombstone))
         .drop("_rn")
     )
-
-
-ALLEN_RELATIONS = (
-    "equals", "before", "after", "meets", "met_by", "starts",
-    "started_by", "finishes", "finished_by", "during", "contains",
-    "overlaps", "overlapped_by",
-)
 
 
 def allen_join(

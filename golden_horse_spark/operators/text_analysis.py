@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 
 def tokens_col(text: Column) -> Column:
-    """Whitespace tokenizer; BPE-ish regex variant in ``bpe_token_count``."""
+    """Whitespace tokenizer."""
     return F.split(F.trim(text), r"\s+")
 
 
@@ -24,13 +24,6 @@ def token_count(text: Column) -> Column:
     return F.when(F.length(F.trim(text)) == 0, 0).otherwise(
         F.size(tokens_col(text))
     )
-
-
-def bpe_token_count(text: Column) -> Column:
-    """BPE-ish sub-word count: runs of letters, digits, or single
-    punctuation — the usual ~token proxy when no tokenizer model ships."""
-    toks = F.split(text, r"(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])")
-    return F.size(F.filter(toks, lambda t: F.trim(t) != ""))
 
 
 def punct_ratio(text: Column) -> Column:

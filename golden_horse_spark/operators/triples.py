@@ -16,9 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-TRIPLE_COLS = ["subj", "pred", "obj", "doc_id", "part"]
-
-
 def _with_part(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn("part", F.pmod(F.hash("subj"), F.lit(n_parts)).cast("int"))
 

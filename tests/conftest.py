@@ -8,6 +8,15 @@ REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 FIXTURE_WEIGHTS = REPO / "fixtures" / "ner_weights.npz"
+# The project's program roots: the driver entry, the benches, the tools
+# and the benchmark harness. Whatever none of them reaches is test-only.
+PROGRAM_ROOTS = [
+    REPO / "__spark_entry__.py",
+    REPO / "bench.py",
+    REPO / "bench_extra.py",
+    *sorted((REPO / "tools").glob("*.py")),
+    *sorted((REPO / "perfbench").glob("*.py")),
+]
 REF_DATA = Path("/root/reference/data")
 TESTDATA = Path(os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata"))
 

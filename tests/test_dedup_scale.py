@@ -234,44 +234,6 @@ def test_quantize_roundtrip_error_bound(spark):
             assert abs(orig - rec) <= scale / 2 + 1e-12
 
 
-def test_distributed_kmeans_matches_numpy(spark):
-    """Distributed Lloyd == dense NumPy Lloyd from the same seeded init
-    (within float-sum reduction noise)."""
-    import numpy as np
-
-    from golden_horse_spark.operators.similarity import (
-        train_centroids_distributed,
-    )
-
-    emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    got = train_centroids_distributed(emb, n_cells=4, n_iter=4, sample=100)
-
-    x = np.array(
-        [r["embedding"] for r in emb.select("embedding").collect()],
-        dtype=np.float64,
-    )
-    # mirror the operator's hash-spread init draw (orderBy(xxhash64))
-    from pyspark.sql import functions as F
-
-    init_rows = (
-        emb.select("embedding")
-        .orderBy(F.xxhash64("embedding"))
-        .limit(100)
-        .collect()
-    )
-    xi = np.array([r[0] for r in init_rows], dtype=np.float64)
-    rng = np.random.RandomState(42)
-    cents = xi[rng.choice(len(xi), size=4, replace=False)].copy()
-    for _ in range(4):
-        d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        a = d.argmin(1)
-        for c in range(4):
-            pts = x[a == c]
-            if len(pts):
-                cents[c] = pts.mean(0)
-    assert np.allclose(got, cents, atol=1e-9), np.abs(got - cents).max()
-
-
 # ------------------------------------------- adversarial corpus (round 3)
 
 
@@ -338,28 +300,6 @@ def test_minhash_pairs_with_precomputed_signatures(spark):
         ).collect()
     }
     assert direct == shared == {(10, 11, 2)}
-
-
-def test_assign_cells_arrow_equals_unrolled(spark):
-    """The Arrow-matmul assignment (big-n_cells path) produces exactly
-    the same cell per vector as the unrolled codegen expression."""
-    from golden_horse_spark.operators.similarity import (
-        assign_cells,
-        assign_cells_arrow,
-        train_centroids,
-    )
-
-    emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    cents = train_centroids(emb, n_cells=12, sample=400)
-    a = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells(emb, cents).select("vec_id", "cell").collect()
-    }
-    b = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells_arrow(emb, cents).select("vec_id", "cell").collect()
-    }
-    assert a == b and len(a) > 100
 
 
 def test_near_dup_arrow_assignment_path_exact(spark):
@@ -483,9 +423,9 @@ def test_semantic_dedup_matches_union_find(spark):
 
 
 def test_dedup_semantic_docs_keep_semantics(spark):
-    """dedup_semantic keeps exactly one doc per semantic group and every
-    doc without an embedding row."""
-    from golden_horse_spark.operators.dedup import dedup_semantic
+    """semantic_dedup keeps exactly one vector per semantic group — the
+    min id — and flags every other member of the group."""
+    from golden_horse_spark.operators.dedup import semantic_dedup
 
     rng = np.random.default_rng(11)
     base = rng.normal(size=8)
@@ -501,17 +441,13 @@ def test_dedup_semantic_docs_keep_semantics(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    docs = spark.createDataFrame(
-        [(0, "a"), (1, "a copy"), (2, "b"), (3, "no embedding")],
-        "doc_id long, text string",
-    )
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup_semantic(
-            docs, emb, min_cosine=0.99, n_cells=2, sample=10
+    got = sorted(
+        (r["vec_id"], r["component"], r["keep"])
+        for r in semantic_dedup(
+            emb, min_cosine=0.99, n_cells=2, sample=10
         ).collect()
     )
-    assert kept == [0, 2, 3]
+    assert got == [(0, 0, True), (1, 0, False), (2, 2, True)]
 
 
 def test_dup_span_stats_vs_bruteforce(spark):

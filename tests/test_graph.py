@@ -946,18 +946,26 @@ def _python_nf(edges, directed, max_hops):
     return nf
 
 
-def test_neighborhood_function_path_hand_case(spark):
-    from golden_horse_spark.operators.graph import neighborhood_function
+def _hyperball_nf(df, **kw):
+    """{hop: n_pairs} of one hyperball_profile run."""
+    from golden_horse_spark.operators.graph import hyperball_profile
 
+    return {r["hop"]: r["n_pairs"] for r in hyperball_profile(df, **kw)[0].collect()}
+
+
+def _padded(nf, max_hops):
+    """N(0..max_hops): the run stops at its first stable hop, and N(t)
+    stays at that value for every later t."""
+    return [nf[min(h, max(nf))] for h in range(max_hops + 1)]
+
+
+def test_neighborhood_function_path_hand_case(spark):
     # path 0-1-2-3: N(0)=4, N(1)=10, N(2)=14, N(3)=16=N(∞);
-    # early stop emits one stable duplicate hop then halts
+    # the run emits one stable duplicate hop then halts
     df = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3)], "src long, dst long"
     )
-    rows = {
-        r["hop"]: r["n_pairs"]
-        for r in neighborhood_function(df, max_hops=10).collect()
-    }
+    rows = _hyperball_nf(df, max_hops=10)
     assert rows[0] == 4 and rows[1] == 10
     assert rows[2] == 14 and rows[3] == 16
     assert rows[4] == 16 and max(rows) == 4
@@ -965,8 +973,6 @@ def test_neighborhood_function_path_hand_case(spark):
 
 def test_neighborhood_function_vs_python_reference(spark):
     import random
-
-    from golden_horse_spark.operators.graph import neighborhood_function
 
     rng = random.Random(29)
     for trial, directed in [(0, False), (1, True), (2, False)]:
@@ -978,20 +984,15 @@ def test_neighborhood_function_vs_python_reference(spark):
         )
         edges = [(a, b) for a, b in edges if a != b]
         df = spark.createDataFrame(edges, "src long, dst long")
-        got = {
-            r["hop"]: r["n_pairs"]
-            for r in neighborhood_function(
-                df, max_hops=6, directed=directed, early_stop=False
-            ).collect()
-        }
+        got = _padded(_hyperball_nf(df, max_hops=6, directed=directed), 6)
         want = _python_nf(edges, directed, 6)
-        assert got == dict(enumerate(want)), (trial, directed, got, want)
+        assert got == want, (trial, directed, got, want)
 
 
 def test_neighborhood_function_partitioning_invariant(spark):
     import random
 
-    from golden_horse_spark.operators.graph import neighborhood_function
+    from golden_horse_spark.operators.graph import hyperball_profile
 
     rng = random.Random(31)
     edges = [
@@ -1006,12 +1007,11 @@ def test_neighborhood_function_partitioning_invariant(spark):
         df = spark.createDataFrame(edges, "src long, dst long").repartition(
             parts
         )
+        nf_df, hc_df = hyperball_profile(df, max_hops=5, num_partitions=nparts)
         outs.append(
-            sorted(
-                tuple(r)
-                for r in neighborhood_function(
-                    df, max_hops=5, num_partitions=nparts
-                ).collect()
+            (
+                sorted(tuple(r) for r in nf_df.collect()),
+                sorted(tuple(r) for r in hc_df.collect()),
             )
         )
     assert outs[0] == outs[1]
@@ -1020,43 +1020,32 @@ def test_neighborhood_function_partitioning_invariant(spark):
 def test_effective_diameter(spark):
     import pytest
 
-    from golden_horse_spark.operators.graph import (
-        effective_diameter,
-        neighborhood_function,
-    )
+    from golden_horse_spark.operators.graph import hyperball_profile
 
-    # 10-node path: exact NF known; check the interpolated 90% point
-    # against a hand-rolled interpolation of the python reference
+    # 10-node path: N(t) grows until t = 9, the diameter (the effective
+    # diameter at fraction 1.0), and matches the exact NF at every hop
     edges = [(i, i + 1) for i in range(9)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    nf = _python_nf(edges, False, 9)
-    target = 0.9 * nf[-1]
-    h = next(i for i, v in enumerate(nf) if v >= target)
-    want = (h - 1) + (target - nf[h - 1]) / (nf[h] - nf[h - 1])
-    got = effective_diameter(df, fraction=0.9)
-    assert abs(got - want) < 1e-12
-    # fraction=1.0 → the true diameter (9 for the path)
-    assert effective_diameter(df, fraction=1.0) == 9.0
+    nf = _hyperball_nf(df, max_hops=64)
+    assert _padded(nf, 10) == _python_nf(edges, False, 10)
+    assert min(h for h in nf if nf[h] == nf[max(nf)]) == 9
     # a clique converges in one hop
     k4 = spark.createDataFrame(
         [(a, b) for a in range(4) for b in range(a + 1, 4)],
         "src long, dst long",
     )
-    assert effective_diameter(k4, fraction=1.0) <= 1.0
-    with pytest.raises(ValueError, match="fraction"):
-        effective_diameter(df, fraction=0.0)
+    k4_nf = _hyperball_nf(k4, max_hops=64)
+    assert max(k4_nf) == 2 and k4_nf[1] == k4_nf[2] == 16
     with pytest.raises(ValueError, match="lg_k"):
-        neighborhood_function(df, sketch="hll", lg_k=3)
+        hyperball_profile(df, sketch="hll", lg_k=3)
     with pytest.raises(ValueError, match="k="):
-        neighborhood_function(df, sketch="kmv", k=4)
+        hyperball_profile(df, sketch="kmv", k=4)
     with pytest.raises(ValueError, match="sketch"):
-        neighborhood_function(df, sketch="vmk")
+        hyperball_profile(df, sketch="vmk")
 
 
 def test_neighborhood_function_kmv_estimator_regime(spark):
     import random
-
-    from golden_horse_spark.operators.graph import neighborhood_function
 
     # a connected 80-node graph with k=16: balls blow past k, forcing
     # the (k−1)/u_k estimator — the regime where the hll backend is
@@ -1078,27 +1067,20 @@ def test_neighborhood_function_kmv_estimator_regime(spark):
             edges, "src long, dst long"
         ).repartition(parts)
         outs.append(
-            sorted(
-                tuple(r)
-                for r in neighborhood_function(
-                    df, max_hops=4, sketch="kmv", k=16,
-                    num_partitions=nparts, early_stop=False,
-                ).collect()
+            _hyperball_nf(
+                df, max_hops=4, sketch="kmv", k=16, num_partitions=nparts
             )
         )
     assert outs[0] == outs[1]
     # ...and land within the KMV error envelope of the exact NF
     want = _python_nf(edges, False, 4)
-    got = dict(outs[0])
-    for h, true_n in enumerate(want):
-        rel = abs(got[h] - true_n) / true_n
-        assert rel < 0.5, (h, got[h], true_n)  # k=16 ⇒ σ≈27%; 0.5 ≈ 2σ
+    for h, got_n in outs[0].items():
+        rel = abs(got_n - want[h]) / want[h]
+        assert rel < 0.5, (h, got_n, want[h])  # k=16 ⇒ σ≈27%; 0.5 ≈ 2σ
 
 
 def test_neighborhood_function_hll_backend_exact_regime(spark):
     import random
-
-    from golden_horse_spark.operators.graph import neighborhood_function
 
     # the hll backend in its exact sparse regime matches python exactly
     rng = random.Random(47)
@@ -1110,13 +1092,8 @@ def test_neighborhood_function_hll_backend_exact_regime(spark):
         if a != b
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["hop"]: r["n_pairs"]
-        for r in neighborhood_function(
-            df, max_hops=5, sketch="hll", early_stop=False
-        ).collect()
-    }
-    assert got == dict(enumerate(_python_nf(edges, False, 5)))
+    got = _padded(_hyperball_nf(df, max_hops=5, sketch="hll"), 5)
+    assert got == _python_nf(edges, False, 5)
 
 
 def _python_harmonic(edges, directed):
@@ -1148,13 +1125,16 @@ def _python_harmonic(edges, directed):
 def test_harmonic_centrality_vs_python_reference(spark):
     import random
 
-    from golden_horse_spark.operators.graph import harmonic_centrality
+    from golden_horse_spark.operators.graph import hyperball_profile
+
+    def centrality(df, **kw):
+        return hyperball_profile(df, **kw)[1]
 
     # star: hub H = n−1, leaves H = 1 + (n−2)/2
     star = [(0, i) for i in range(1, 6)]
     got = {
         r["node"]: r["centrality"]
-        for r in harmonic_centrality(
+        for r in centrality(
             spark.createDataFrame(star, "src long, dst long")
         ).collect()
     }
@@ -1176,7 +1156,7 @@ def test_harmonic_centrality_vs_python_reference(spark):
         df = spark.createDataFrame(edges, "src long, dst long")
         got = {
             r["node"]: r["centrality"]
-            for r in harmonic_centrality(df, directed=directed).collect()
+            for r in centrality(df, directed=directed).collect()
         }
         want = _python_harmonic(edges, directed)
         assert set(got) == set(want)
@@ -1189,19 +1169,19 @@ def test_harmonic_centrality_vs_python_reference(spark):
         [(0, 1), (1, 2), (10, 11)], "src long, dst long"
     )
     balls = {
-        r["node"]: r["ball"] for r in harmonic_centrality(two).collect()
+        r["node"]: r["ball"] for r in centrality(two).collect()
     }
     assert balls == {0: 3, 1: 3, 2: 3, 10: 2, 11: 2}
 
 
 def test_hyperball_profile_shared_run_equivalence(spark):
+    """The two outputs of one run agree with each other and with the
+    exact references: N at the last hop is Σ_v |ball(v)| of the
+    centrality table, the NF matches all-pairs BFS and H(v) matches a
+    BFS from every node."""
     import random
 
-    from golden_horse_spark.operators.graph import (
-        harmonic_centrality,
-        hyperball_profile,
-        neighborhood_function,
-    )
+    from golden_horse_spark.operators.graph import hyperball_profile
 
     rng = random.Random(53)
     edges = [
@@ -1213,15 +1193,14 @@ def test_hyperball_profile_shared_run_equivalence(spark):
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
     nf_df, hc_df = hyperball_profile(df, max_hops=8)
-    nf = sorted(tuple(r) for r in nf_df.collect())
-    hc = sorted(tuple(r) for r in hc_df.collect())
-    want_nf = sorted(
-        tuple(r) for r in neighborhood_function(df, max_hops=8).collect()
-    )
-    want_hc = sorted(
-        tuple(r) for r in harmonic_centrality(df, max_hops=8).collect()
-    )
-    assert nf == want_nf and hc == want_hc
+    nf = {r["hop"]: r["n_pairs"] for r in nf_df.collect()}
+    hc = {r["node"]: (r["centrality"], r["ball"]) for r in hc_df.collect()}
+    assert nf[max(nf)] == sum(ball for _, ball in hc.values())
+    assert _padded(nf, 8) == _python_nf(edges, False, 8)
+    want = _python_harmonic(edges, False)
+    assert set(hc) == set(want)
+    for n, (c, _) in hc.items():
+        assert abs(c - want[n]) < 1e-9, (n, c, want[n])
 
 
 def _py_reach(edges, roots, max_hops, directed=True):
@@ -1905,44 +1884,6 @@ def test_k_truss_guard(spark):
         k_truss(df, 1)
 
 
-def test_graph_embeddings_end_to_end(spark):
-    from golden_horse_spark.operators.graph import graph_embeddings
-
-    # two 6-cliques joined by one bridge: walks stay mostly inside
-    # their clique, so the embedding space must exist for ALL nodes
-    edges = [
-        (a, b) for a in range(6) for b in range(6) if a < b
-    ] + [
-        (a + 10, b + 10) for a in range(6) for b in range(6) if a < b
-    ] + [(0, 10)]
-    df = spark.createDataFrame(edges, "src int, dst int")
-    emb = graph_embeddings(
-        df, dim=8, walk_length=6, num_walks=2, deterministic=True
-    )
-    rows = emb.collect()
-    nodes = {r["node"] for r in rows}
-    assert nodes == {str(n) for n in list(range(6)) + list(range(10, 16))}
-    assert all(len(r["embedding"]) == 8 for r in rows)
-    # pinned mode: same seed → identical vectors across runs
-    again = {
-        r["node"]: list(r["embedding"])
-        for r in graph_embeddings(
-            df, dim=8, walk_length=6, num_walks=2, deterministic=True
-        ).collect()
-    }
-    first = {r["node"]: list(r["embedding"]) for r in rows}
-    assert first == again
-    # composes with the ANN operators: (id, array<float>) shape
-    from golden_horse_spark.operators.similarity import cosine_topk
-
-    vecs = emb.select(
-        F.col("node").cast("long").alias("vec_id"), "embedding"
-    )
-    qvec = [float(v) for v in first["0"]]
-    top = cosine_topk(vecs, qvec, k=3)
-    assert top.count() == 3
-
-
 def _py_n2v(edges, roots, length, num_walks, p, q, directed):
     """Reference: replay the integer-weighted node2vec choice exactly."""
     import hashlib
@@ -2059,7 +2000,7 @@ def test_assortativity_and_clustering_vs_python(spark):
 
     from golden_horse_spark.operators.graph import (
         assortativity,
-        clustering_stats,
+        local_clustering,
     )
 
     def py_ref(edges):
@@ -2112,10 +2053,11 @@ def test_assortativity_and_clustering_vs_python(spark):
         ), edges
         if r == r:  # not NaN
             assert abs(row["r"] - r) < 1e-12, edges
-        crow = clustering_stats(df).head()
-        assert (crow["n_triangles"], crow["n_wedges"]) == (tri, wedges)
-        if wedges:
-            assert abs(crow["global_cc"] - 3 * tri / wedges) < 1e-12
+        lrows = local_clustering(df).collect()
+        # each triangle counts at its three corners; each node centres
+        # C(deg, 2) wedges
+        assert sum(r["n_triangles"] for r in lrows) == 3 * tri
+        assert sum(r["degree"] * (r["degree"] - 1) // 2 for r in lrows) == wedges
     # the star closed form
     srow = assortativity(
         spark.createDataFrame([(0, i) for i in range(1, 6)], "src int, dst int")
@@ -2250,15 +2192,21 @@ def test_quotient_graph_single_pass_and_guard(spark):
 
 
 def test_clustering_stats_wedges_exact_long(spark):
-    from golden_horse_spark.operators.graph import clustering_stats
+    from golden_horse_spark.operators.graph import local_clustering
 
     star = spark.createDataFrame(
         [(0, i) for i in range(1, 6)], "src long, dst long"
     )
-    row = clustering_stats(star).collect()[0]
-    # center degree 5 -> 10 wedges; leaves contribute 0
-    assert row["n_wedges"] == 10 and row["n_triangles"] == 0
-    assert dict(clustering_stats(star).dtypes)["n_wedges"] == "bigint"
+    lc = local_clustering(star)
+    rows = {r["node"]: r for r in lc.collect()}
+    # the centre has degree 5 (C(5,2) = 10 open wedges, no triangle);
+    # leaves have degree 1 and lcc 0
+    assert (rows[0]["degree"], rows[0]["n_triangles"], rows[0]["lcc"]) == (5, 0, 0.0)
+    assert all(
+        (rows[i]["degree"], rows[i]["lcc"]) == (1, 0.0) for i in range(1, 6)
+    )
+    dtypes = dict(lc.dtypes)
+    assert dtypes["degree"] == dtypes["n_triangles"] == "bigint"
 
 
 def test_negative_triples_md5_replay_and_filter(spark):
@@ -2437,10 +2385,7 @@ def _transe_brute(test, ent, rel, known, corrupt="tail"):
 def test_transe_rank_eval_vs_brute_force(spark):
     import random
 
-    from golden_horse_spark.operators.graph import (
-        ranking_metrics,
-        transe_rank_eval,
-    )
+    from golden_horse_spark.operators.graph import transe_rank_eval
 
     rng = random.Random(7)
     ents = [f"e{i}" for i in range(12)]
@@ -2470,13 +2415,6 @@ def test_transe_rank_eval_vs_brute_force(spark):
         }
         exp = _transe_brute(test, ent, rel, known, corrupt=corrupt)
         assert got == exp, corrupt
-    # metrics formula
-    ranks = transe_rank_eval(tdf, edf, rdf, known=kdf)
-    m = ranking_metrics(ranks, ks=(1, 3)).collect()[0]
-    rs = [r["rank"] for r in ranks.collect()]
-    assert abs(m["mrr"] - sum(1.0 / r for r in rs) / len(rs)) < 1e-12
-    assert abs(m["hits_1"] - sum(r <= 1 for r in rs) / len(rs)) < 1e-12
-    assert abs(m["hits_3"] - sum(r <= 3 for r in rs) / len(rs)) < 1e-12
 
 
 def test_transe_filtered_vs_raw(spark):

@@ -139,9 +139,6 @@ PIN_SITES = {
     "operators/graph.py::_ball_init": (
         "initial sketches on node; the first gather join (node as b)"
     ),
-    "operators/graph.py::neighborhood_function": (
-        "counters on node; the next hop's gather join (node as b)"
-    ),
     "operators/graph.py::hyperball_profile": (
         "ball state on node; the next hop's gather join (node as b)"
     ),

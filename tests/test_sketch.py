@@ -10,7 +10,6 @@ from hypothesis import strategies as st
 
 from golden_horse_spark.operators.sketch import (
     _misra_gries_update,
-    heavy_hitter_candidates,
     heavy_hitters,
 )
 
@@ -82,22 +81,31 @@ def test_heavy_hitters_partitioning_invariant(spark):
 
 
 def test_candidates_are_superset_and_bounded(spark):
-    from pyspark.sql import functions as F
+    """The per-partition sweep inside heavy_hitters keeps ≤ k counters
+    and retains every value above n_p/(k+1) of its partition, so the
+    union of the survivors is a superset of the true heavy hitters —
+    which heavy_hitters then returns exactly."""
+    from collections import Counter
 
     rows = _skewed_corpus(23)
-    df = spark.createDataFrame(rows, "id long, w string").repartition(8)
     phi = 0.05
-    cands = {r["w"] for r in heavy_hitter_candidates(df, "w", phi).collect()}
+    k = int(1 / phi) + 1
+    cands = set()
+    for part in (rows[i::8] for i in range(8)):
+        counters = _misra_gries_update({}, [w for _, w in part], k)
+        local = Counter(w for _, w in part)
+        assert len(counters) <= k
+        assert {w for w, c in local.items() if c > len(part) / (k + 1)} <= set(
+            counters
+        )
+        cands |= set(counters)
     n = len(rows)
-    true_hh = {
-        r["w"]
-        for r in df.groupBy("w").agg(F.count("*").alias("c"))
-        .where(F.col("c") > phi * n).collect()
-    }
-    assert true_hh <= cands
-    assert len(cands) <= 8 * (int(1 / phi) + 1)  # ≤ k per partition
+    true_hh = {w for w, c in Counter(w for _, w in rows).items() if c > phi * n}
+    assert true_hh and true_hh <= cands
+    df = spark.createDataFrame(rows, "id long, w string").repartition(8)
+    assert {r["w"] for r in heavy_hitters(df, "w", phi).collect()} == true_hh
     with pytest.raises(ValueError):
-        heavy_hitter_candidates(df, "w", 1.5)
+        heavy_hitters(df, "w", 1.5)
 
 
 def _py_cms(values, depth, width):

@@ -3,15 +3,13 @@ or DeprecationWarning — an invalid escape such as ``'\\s'`` in a
 non-raw string warns today and is a syntax error in a later Python."""
 
 import warnings
-from pathlib import Path
 
-REPO = Path(__file__).resolve().parents[1]
+from tests.conftest import PROGRAM_ROOTS, REPO
 
 
 def _sources():
     files = sorted((REPO / "golden_horse_spark").rglob("*.py"))
-    files += [REPO / "__spark_entry__.py", REPO / "bench.py"]
-    files += sorted((REPO / "tools").rglob("*.py"))
+    files += PROGRAM_ROOTS
     files += sorted((REPO / "tests").rglob("*.py"))
     return files
 

@@ -98,10 +98,7 @@ def test_one_partition_equals_sequential(spark):
 
 
 def test_loss_decreases_and_eval_beats_random(spark):
-    from golden_horse_spark.operators.graph import (
-        ranking_metrics,
-        transe_rank_eval,
-    )
+    from golden_horse_spark.operators.graph import transe_rank_eval
 
     tdf = spark.createDataFrame(KG, "subj string, pred string, obj string")
     ent_df, rel_df, losses = transe_train(
@@ -122,7 +119,8 @@ def test_loss_decreases_and_eval_beats_random(spark):
         rel_df.withColumnRenamed("relation", "node"),
         known=tdf,
     )
-    mrr = ranking_metrics(ranks).first()["mrr"]
+    rs = [r["rank"] for r in ranks.collect()]
+    mrr = sum(1.0 / r for r in rs) / len(rs)
     assert mrr > 0.5, mrr
 
 
