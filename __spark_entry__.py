@@ -109,21 +109,9 @@ def _kg_stages(spark: SparkSession, n_docs: int = 200) -> dict:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG construction (NER → linking → CC → triples) over
-    interleaved documents; also touches the sf0.001 relational tables
-    (documents adapter union'd in for plumbing coverage)."""
-    from golden_horse_spark.sources.documents import interleaved_from_testdata
-
+    interleaved documents."""
     _ship(spark)
     stages = _kg_stages(spark, 200)
-    td = interleaved_from_testdata(spark, "/root/testdata/sf0.001")
-    from golden_horse_spark.operators.ner import extract_mentions, mentions_with_ids
-    from golden_horse_spark.operators.sentence_seg import documents_to_sentences
-
-    # testdata docs flow through the same chain (yield no Chinese mentions,
-    # exercising the empty path) and the synthesized corpus yields triples
-    _ = mentions_with_ids(
-        extract_mentions(documents_to_sentences(td.limit(50)), WEIGHTS)
-    )
     return stages["triples"].select("subj", "pred", "obj", "doc_id", "part")
 
 

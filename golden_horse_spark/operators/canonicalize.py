@@ -313,86 +313,6 @@ def bcubed(
     )
 
 
-def merge_components(
-    assignment: DataFrame,
-    new_edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
-    """INCREMENTAL connected components: fold a batch of new edges into
-    an existing ``(node, component)`` assignment without re-running CC
-    over the whole graph — the streaming/CDC form of entity resolution
-    (new documents arrive, new mention–entity edges appear, identity
-    clusters merge).
-
-    Correctness rests on the quotient-graph argument: contracting every
-    existing component to its label preserves connectivity, so running
-    CC over (contracted new edges + one self-edge per untouched label)
-    and composing the two maps equals CC over the full union. The
-    composed label is again the MINIMUM node id of the merged cluster —
-    the same canonical choice `connected_components` makes, so
-    incremental and from-scratch agree exactly (tested).
-
-    Scale shape: the existing assignment is touched by two lookup joins
-    (new-edge endpoints → current labels) and one final map-side
-    rewrite join; the CC rounds run ONLY on the contracted delta graph,
-    whose size is bounded by the batch, not the corpus. New nodes
-    (absent from the assignment) enter as their own labels via
-    coalesce.
-    """
-    a = assignment.select("node", "component")
-    lab = a.select(
-        F.col("node").alias("_n"), F.col("component").alias("_c")
-    )
-    e = new_edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    contracted = (
-        e.join(lab, e["s"] == lab["_n"], "left")
-        .select(F.coalesce("_c", "s").alias("cs"), "d")
-        .join(lab, F.col("d") == lab["_n"], "left")
-        .select("cs", F.coalesce("_c", "d").alias("cd"))
-        .where(F.col("cs") != F.col("cd"))
-        # checkpoint: the emptiness probe below materializes this (two
-        # lookup joins against the corpus-scale assignment); without it
-        # the CC rounds would recompute that lineage from scratch — the
-        # hot incremental path paid the assignment joins twice per
-        # micro-batch (round-5 review fix)
-        .localCheckpoint(eager=False)
-    )
-    if contracted.limit(1).count() == 0:
-        new_nodes = (
-            e.select(F.col("s").alias("node"))
-            .union(e.select("d"))
-            .distinct()
-            .join(a.select("node"), "node", "left_anti")
-            .withColumn("component", F.col("node"))
-        )
-        return a.unionByName(new_nodes)
-    delta_cc = connected_components(
-        contracted, src="cs", dst="cd", max_iter=max_iter
-    )  # (node=old label, component=new merged label)
-    relab = delta_cc.select(
-        F.col("node").alias("_old"), F.col("component").alias("_new")
-    )
-    # rewrite the existing assignment where its label merged
-    merged = (
-        a.join(relab, a["component"] == relab["_old"], "left")
-        .select("node", F.coalesce("_new", "component").alias("component"))
-    )
-    # new nodes: their contracted label's final component, or themselves
-    new_nodes = (
-        e.select(F.col("s").alias("node"))
-        .union(e.select("d"))
-        .distinct()
-        .join(a.select("node"), "node", "left_anti")
-    )
-    new_assigned = (
-        new_nodes.join(relab, new_nodes["node"] == relab["_old"], "left")
-        .select("node", F.coalesce("_new", "node").alias("component"))
-    )
-    return merged.unionByName(new_assigned)
-
-
 def pairwise_er(
     labels: DataFrame,
     pred_col: str = "pred_label",

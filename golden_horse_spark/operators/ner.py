@@ -1,7 +1,10 @@
 """NER stage: sentences → token labels → mentions (SURVEY.md §2.7 M1-M4,
 §3.2 inference chain).
 
-One ``mapInPandas`` over the sentences table. Inside each Arrow batch:
+``extract_mentions`` takes the distinct sentence texts, spreads them
+over ``spark.sql.shuffle.partitions`` tasks and runs one ``mapInPandas``
+kernel over them, then joins the spans back to every sentence on its
+text. Inside each Arrow batch of distinct texts:
 
 1. encode every sentence (featurizer + dict lookup — string work, pure
    Python but O(tokens), no Spark round-trips);
@@ -37,19 +40,6 @@ from pyspark.sql.types import (
 from ..model.crf import decode_batch, pad_features
 from ..model.features import encode_sentence
 from ..model.weights import NerWeights
-
-MENTIONS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("span_idx", IntegerType()),
-        StructField("sent_idx", IntegerType()),
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-        StructField("surface", StringType()),
-        StructField("etype", StringType()),
-        StructField("ntype", StringType()),
-    ]
-)
 
 LABELS_SCHEMA = StructType(
     [
@@ -123,48 +113,24 @@ def _load_weights(path: str) -> NerWeights:
     return w
 
 
-def classify_batch(weights, texts: List[str]) -> List[List[str]]:
+def classify_batch(weights, texts: List[Optional[str]]) -> List[List[str]]:
     """Vectorized classify of a batch of sentence strings → label strings.
 
     Equivalent to per-sentence ``NerWeights.classify`` (tested), but the
-    CRF recursion runs batched per length bucket. Joint CWS+NER weights
-    (model/joint.py) route through their own per-sentence LSTM+CRF path
-    with intra-batch text dedup.
+    CRF recursion runs batched per length bucket; a null text is empty.
+    Joint CWS+NER weights (model/joint.py) route through their own
+    per-sentence LSTM+CRF path.
     """
-    n = len(texts)
-    out: List[Optional[List[str]]] = [None] * n
+    texts = [text or "" for text in texts]
     if hasattr(weights, "classify_ner"):  # joint model
-        memo: dict = {}
-        for i, text in enumerate(texts):
-            t = text or ""
-            labs = memo.get(t)
-            if labs is None:
-                labs = weights.classify_ner(list(t))
-                memo[t] = labs
-            out[i] = labs
-        return out  # type: ignore[return-value]
+        return [weights.classify_ner(list(t)) for t in texts]
     idx2label = weights.idx2label
     pad_id = weights.pad_id
+    out: List[Optional[List[str]]] = [None] * len(texts)
 
-    # Dedupe identical texts within the batch: web corpora repeat
-    # boilerplate sentences heavily, and the kernel is deterministic per
-    # text — compute once, fan the result out.
-    first_index: dict = {}
-    dup_of: dict = {}
-    uniq: List[str] = []
-    for i, text in enumerate(texts):
-        t = text or ""
-        j = first_index.get(t)
-        if j is None:
-            first_index[t] = i
-            uniq.append(t)
-        else:
-            dup_of[i] = j
-
-    # encode uniques, compute emissions per sentence (ragged), bucket by length
+    # encode, compute emissions per sentence (ragged), bucket by length
     buckets: dict = {}
-    for text in uniq:
-        i = first_index[text]
+    for i, text in enumerate(texts):
         chars = list(text)
         t_len = len(chars)
         if t_len == 0:
@@ -188,8 +154,6 @@ def classify_batch(weights, texts: List[str]) -> List[List[str]]:
         paths = decode_batch(ems, lengths, weights.a, weights.viterbi)
         for (i, _), path in zip(items, paths):
             out[i] = [idx2label[int(p)] for p in path]
-    for i, j in dup_of.items():
-        out[i] = out[j]
     return out  # type: ignore[return-value]
 
 
@@ -216,61 +180,30 @@ def warm_workers(spark, weights_path: str, n_tasks: int | None = None) -> None:
 
 
 def extract_mentions(sentences: DataFrame, weights_path: str) -> DataFrame:
-    """sentences(doc_id, span_idx, sent_idx, text, offset) → mentions.
+    """sentences(doc_id, span_idx, sent_idx, text, ...) → mentions.
 
-    Narrow (no shuffle): the NER kernel is a map over sentence rows.
-    ``start``/``end`` are char offsets WITHIN the sentence; global doc
-    offsets are ``offset + start``.
-    """
-    from ..model.evaluation import bio_spans
+    The kernel runs once per DISTINCT sentence text and its spans fan
+    back out to every sentence with that text: web corpora repeat
+    boilerplate heavily, and the kernel is deterministic per text. The
+    distinct, the repartition and the fan-out join are all keyed on the
+    text itself, so no two texts can share a result. ``start``/``end``
+    are char offsets WITHIN the sentence; global doc offsets are
+    ``offset + start``.
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = _load_weights(weights_path)
-        for pdf in batches:
-            texts = pdf["text"].tolist()
-            labels = classify_batch(w, texts)
-            rows = []
-            for (doc_id, span_idx, sent_idx, text), labs in zip(
-                pdf[["doc_id", "span_idx", "sent_idx", "text"]].itertuples(
-                    index=False, name=None
-                ),
-                labels,
-            ):
-                for s, e, etype, ntype in bio_spans(labs):
-                    rows.append(
-                        (doc_id, span_idx, sent_idx, s, e, text[s:e], etype, ntype)
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MENTIONS_SCHEMA.fields]
-            )
-
-    return sentences.mapInPandas(run, MENTIONS_SCHEMA)
-
-
-def extract_mentions_global_dedup(
-    sentences: DataFrame, weights_path: str
-) -> DataFrame:
-    """Corpus-level variant of ``extract_mentions``: run the NER kernel
-    once per DISTINCT sentence text, then fan results back out.
-
-    At web scale most sentence mass is duplicated boilerplate; this
-    trades one shuffle (distinct) + one join for skipping the kernel on
-    every duplicate. The join key is ``xxhash64(text)`` so the shuffle
-    carries 8-byte keys instead of full strings (collision-safe enough at
-    64 bits for dedup-of-compute; outputs still carry the real text).
-    Output is identical to ``extract_mentions`` (tested).
-
-    The distinct texts are hash-repartitioned on ``text_key`` to
-    ``spark.sql.shuffle.partitions`` before the kernel. The kernel's
-    cost is per sentence, not per byte, while AQE sizes the distinct's
-    shuffle by bytes and would coalesce a corpus of short sentences into
-    a single kernel task; AQE never coalesces a repartition with an
-    explicit partition count, so every core runs the kernel."""
+    The texts are hash-repartitioned to ``spark.sql.shuffle.partitions``
+    and the distinct runs on that layout, with no shuffle of its own.
+    The kernel's cost is per sentence, not per byte, while AQE sizes an
+    aggregate's shuffle by bytes and would coalesce a corpus of short
+    sentences into a single kernel task; AQE never coalesces a
+    repartition with an explicit partition count, so every core runs
+    the kernel. (A repartition AFTER the distinct would be dropped by
+    the planner: the distinct's own exchange already hash-partitions on
+    the text with that count.)"""
     from ..model.evaluation import bio_spans
 
     per_text_schema = StructType(
         [
-            StructField("text_key", _long_type()),
+            StructField("text", StringType()),
             StructField("start", IntegerType()),
             StructField("end", IntegerType()),
             StructField("surface", StringType()),
@@ -279,29 +212,17 @@ def extract_mentions_global_dedup(
         ]
     )
 
-    keyed = sentences.withColumn("text_key", F.xxhash64("text"))
-    # distinct() on BOTH columns, not dropDuplicates([text_key]) —
-    # round 6: text_key is a function of text, so the row sets are
-    # identical (modulo the same negligible 64-bit-collision caveat as
-    # the join itself), but dropDuplicates' first(text) aggregate has a
-    # string buffer and therefore planned as Sort+SortAggregate twice
-    # over every sentence text; a no-aggregate distinct is a plain
-    # HashAggregate — no sorts
     n = int(sentences.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    distinct = (
-        keyed.select("text_key", "text").distinct().repartition(n, "text_key")
-    )
+    distinct = sentences.select("text").repartition(n, "text").distinct()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w = _load_weights(weights_path)
         for pdf in batches:
-            labels = classify_batch(w, pdf["text"].tolist())
+            texts = pdf["text"].tolist()
             rows = []
-            for (key, text), labs in zip(
-                pdf[["text_key", "text"]].itertuples(index=False, name=None), labels
-            ):
+            for text, labs in zip(texts, classify_batch(w, texts)):
                 for s, e, etype, ntype in bio_spans(labs):
-                    rows.append((key, s, e, text[s:e], etype, ntype))
+                    rows.append((text, s, e, text[s:e], etype, ntype))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in per_text_schema.fields]
             )
@@ -313,18 +234,12 @@ def extract_mentions_global_dedup(
     # shuffled-hash join (a shuffle_hash hint cost two 40 MiB exchanges
     # and AQE coalesced the compute-heavy probe stage to 14 tasks); at
     # web scale the sentences side blows past the threshold and the
-    # same plan degrades gracefully to a shuffled join on the 8-byte
-    # key. The threshold check IS the scale adaptivity.
-    return keyed.join(per_text, "text_key").select(
+    # same plan degrades gracefully to a shuffled join on the text.
+    # The threshold check IS the scale adaptivity.
+    return sentences.join(per_text, "text").select(
         "doc_id", "span_idx", "sent_idx", "start", "end", "surface",
         "etype", "ntype",
     )
-
-
-def _long_type():
-    from pyspark.sql.types import LongType
-
-    return LongType()
 
 
 def tag_sentences(sentences: DataFrame, weights_path: str) -> DataFrame:

@@ -15,7 +15,7 @@ Semantics re-derived from the reference (icwb.py):
   ①-⑨ and 一二三…亿) / D (date 日月年) / E (latin) / S (other non-hanzi)
   / O (hanzi).
 * unicode predicates (icwb.py:451-477).
-* URL rewrite (icwb.py:137,162-168).
+* URL pattern (icwb.py:137,162-168).
 """
 
 from __future__ import annotations
@@ -95,13 +95,3 @@ URL_PATTERN = (
     r"http[s]?://(?:[a-zA-Z]|[0-9]|[$-_@.&+]|[!*\(\),]"
     r"|(?:%[0-9a-fA-F][0-9a-fA-F]))+"
 )
-
-
-def rewrite_urls(text: str) -> str:
-    import re
-
-    return re.sub(URL_PATTERN, "URL", text)
-
-
-def rewrite_urls_col(col: Column) -> Column:
-    return F.regexp_replace(col, URL_PATTERN, "URL")

@@ -44,10 +44,8 @@ def _misra_gries_add(counters: dict, key, inc: int, k: int) -> None:
     (min(inc, current minimum)) from ALL counters including the
     provisional new one, and drop zeros — each decrement event removes
     equal mass from ≥ k+1 distinct keys, so every key's undercount is
-    ≤ n/(k+1), the classic MG guarantee. The single shared
-    implementation behind both the batch sketch
-    (:func:`heavy_hitters`) and the streaming one
-    (``streaming.stream.streaming_heavy_hitters``)."""
+    ≤ n/(k+1), the classic MG guarantee. The step behind
+    :func:`heavy_hitters`' per-partition sweep."""
     if key in counters:
         counters[key] += inc
     elif len(counters) < k:

@@ -190,15 +190,13 @@ def sessionize(
     the key's previous event reaches ``gap`` seconds. Adds
     ``session_seq`` (1-based per key). Two stacked window functions
     (lag, running sum) over the SAME (key, ts) ordering — one hash
-    exchange + one sort, no joins, no state store (the streaming twin is
-    ``F.session_window``; this is the batch/backfill form).
+    exchange + one sort, no joins, no state store.
 
     Boundary semantics match ``F.session_window`` exactly: session
     windows are half-open ``[start, last_ts + gap)``, so an event at
     precisely ``last_ts + gap`` starts a NEW session (strict ``< gap``
     keeps it in the old one only when the diff is strictly smaller).
-    Locked by test_temporal boundary cases + the streaming-equivalence
-    test.
+    Locked by test_temporal boundary cases.
     """
     keys = [key] if isinstance(key, str) else list(key)
     w = Window.partitionBy(*keys).orderBy(ts_col)

@@ -25,7 +25,6 @@ def materialize_triples(
     links: DataFrame,
     entities: DataFrame,
     n_parts: int = 64,
-    co_occurrence: bool = True,
 ) -> DataFrame:
     """mentions(mention_id, doc_id, span_idx, sent_idx, surface, etype),
     links(mention_id, entity_id), entities(entity_id, canonical_id)
@@ -83,22 +82,21 @@ def materialize_triples(
         "subj", F.col("po.pred").alias("pred"), F.col("po.obj").alias("obj"),
         "doc_id",
     )
-    if co_occurrence:
-        left = linked.alias("l")
-        right = linked.alias("r")
-        co = left.join(
-            right,
-            (F.col("l.doc_id") == F.col("r.doc_id"))
-            & (F.col("l.span_idx") == F.col("r.span_idx"))
-            & (F.col("l.sent_idx") == F.col("r.sent_idx"))
-            & (F.col("l.subj") < F.col("r.subj")),
-        ).select(
-            F.col("l.subj").alias("subj"),
-            F.lit("co_occurs_with").alias("pred"),
-            F.col("r.subj").alias("obj"),
-            F.col("l.doc_id").alias("doc_id"),
-        )
-        out = out.unionByName(co)
+    left = linked.alias("l")
+    right = linked.alias("r")
+    co = left.join(
+        right,
+        (F.col("l.doc_id") == F.col("r.doc_id"))
+        & (F.col("l.span_idx") == F.col("r.span_idx"))
+        & (F.col("l.sent_idx") == F.col("r.sent_idx"))
+        & (F.col("l.subj") < F.col("r.subj")),
+    ).select(
+        F.col("l.subj").alias("subj"),
+        F.lit("co_occurs_with").alias("pred"),
+        F.col("r.subj").alias("obj"),
+        F.col("l.doc_id").alias("doc_id"),
+    )
+    out = out.unionByName(co)
     # ONE distinct over the union instead of one per branch (round 6):
     # the branches' predicate spaces are disjoint (mentioned_in/has_type
     # vs co_occurs_with), so distinct(union) == union(distincts) — same

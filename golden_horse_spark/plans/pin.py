@@ -14,8 +14,8 @@ AQE off on the clone only: the clone carries the caller's runtime conf
 ``hashpartitioning``, and ``LogicalRDD`` keeps it. The checkpointed
 plan is then handed back to the caller's session, where downstream
 queries plan with AQE on as usual. The caller's conf is never written,
-so queries planned concurrently from other threads (streaming
-``foreachBatch``, trainer threads) always see AQE on.
+so queries planned concurrently from other threads (trainer threads)
+always see AQE on.
 
 Keep-pin rule: a site uses ``pin`` only when a later join, aggregate or
 window on the checkpoint's own hash key reuses its partitioning — the

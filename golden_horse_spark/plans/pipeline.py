@@ -59,7 +59,7 @@ from pyspark.sql.types import (
 
 from ..operators.canonicalize import canonical_entities
 from ..operators.linking import generate_candidates, score_links
-from ..operators.ner import extract_mentions_global_dedup, mentions_with_ids
+from ..operators.ner import extract_mentions, mentions_with_ids
 from ..operators.sentence_seg import documents_to_sentences
 from ..operators.triples import materialize_triples
 
@@ -442,8 +442,8 @@ def run_pipeline(
         "sentences", fp_sent, lambda: documents_to_sentences(docs)
     )
 
-    # ":dedup=True" names the dedup-of-compute NER path (output equal to
-    # the per-row kernel, test_ner_stage); kept so existing dirs resume
+    # ":dedup=True" is the suffix of the earlier two-path NER config; the
+    # rows are unchanged, so it stays and existing dirs resume
     fp_men = store.fingerprint(
         "mentions", fp_sent + cfg.weights_path + ":dedup=True"
     )
@@ -451,7 +451,7 @@ def run_pipeline(
         "mentions",
         fp_men,
         lambda: mentions_with_ids(
-            extract_mentions_global_dedup(sentences, cfg.weights_path)
+            extract_mentions(sentences, cfg.weights_path)
         ),
     )
 

@@ -797,70 +797,6 @@ def test_fs_em_guards(spark):
         fs_em_weights(df, ["g"], prevalence=1.5)
 
 
-def test_merge_components_equals_full_cc(spark):
-    """Randomized: incremental merge over 3 delta batches == from-
-    scratch CC over the union, exactly (same min-label canonical)."""
-    import random
-
-    from golden_horse_spark.operators.canonicalize import (
-        connected_components,
-        merge_components,
-    )
-
-    rng = random.Random(5)
-    all_edges = [
-        (rng.randint(0, 60), rng.randint(0, 60)) for _ in range(80)
-    ]
-    all_edges = [(a, b) for a, b in all_edges if a != b]
-    base, d1, d2 = all_edges[:30], all_edges[30:55], all_edges[55:]
-
-    def df(es):
-        return spark.createDataFrame(es, "src int, dst int")
-
-    inc = connected_components(df(base))
-    inc = merge_components(inc, df(d1))
-    inc = merge_components(inc, df(d2))
-    full = connected_components(df(all_edges))
-    got = {(r["node"], r["component"]) for r in inc.collect()}
-    exp = {(r["node"], r["component"]) for r in full.collect()}
-    assert got == exp
-
-
-def test_merge_components_bridges_two_clusters(spark):
-    from golden_horse_spark.operators.canonicalize import (
-        connected_components,
-        merge_components,
-    )
-
-    base = spark.createDataFrame([(1, 2), (10, 11)], "src int, dst int")
-    cc0 = connected_components(base)
-    # bridge through a brand-new node 99
-    delta = spark.createDataFrame([(2, 99), (99, 10)], "src int, dst int")
-    got = {
-        (r["node"], r["component"])
-        for r in merge_components(cc0, delta).collect()
-    }
-    assert got == {(1, 1), (2, 1), (10, 1), (11, 1), (99, 1)}
-
-
-def test_merge_components_disjoint_and_selfloop_delta(spark):
-    from golden_horse_spark.operators.canonicalize import (
-        connected_components,
-        merge_components,
-    )
-
-    base = spark.createDataFrame([(1, 2)], "src int, dst int")
-    cc0 = connected_components(base)
-    delta = spark.createDataFrame(
-        [(50, 51), (7, 7)], "src int, dst int"
-    )
-    got = {
-        (r["node"], r["component"])
-        for r in merge_components(cc0, delta).collect()
-    }
-    assert got == {(1, 1), (2, 1), (50, 50), (51, 50), (7, 7)}
-
-
 def test_sorted_neighborhood_vs_python(spark):
     from golden_horse_spark.operators.linking import (
         sorted_neighborhood_candidates,

@@ -2,7 +2,10 @@
 exactly with the local single-process port (which is itself the faithful
 re-derivation of the reference inference chain, SURVEY.md §3.2)."""
 
+from collections import Counter
+
 import pytest
+from pyspark.sql import functions as F
 
 from golden_horse_spark.model.evaluation import bio_spans, span_eval
 from golden_horse_spark.model.segment import REF_DATA
@@ -43,66 +46,55 @@ def test_fixture_quality_on_dev(model, dev_corpus):
     assert res["f1"] >= 0.40, res
 
 
-@needs_dev
-@pytest.mark.spark
-def test_global_dedup_variant_identical(spark, weights_path, dev_corpus):
-    """extract_mentions_global_dedup (compute once per distinct sentence,
-    join back) must produce EXACTLY the per-row results."""
-    from golden_horse_spark.operators.ner import (
-        extract_mentions,
-        extract_mentions_global_dedup,
-    )
+def _driver_mentions(model, sentences):
+    """The reference: ``NerWeights.classify`` + ``bio_spans`` over every
+    collected sentence row, as a multiset of mention rows."""
+    out = Counter()
+    for r in sentences.collect():
+        for s, e, etype, ntype in bio_spans(model.classify(list(r["text"]))):
+            out[(r["doc_id"], r["span_idx"], r["sent_idx"], s, e,
+                 r["text"][s:e], etype, ntype)] += 1
+    return out
+
+
+def _synthetic_sentences(spark, path):
+    """Sentences of 100 synthetic docs, stored first as the pipeline's
+    sentences stage is, so the only MapInPandas in a job over them is the
+    NER kernel. The docs draw from a small pool, so texts repeat."""
     from golden_horse_spark.operators.sentence_seg import documents_to_sentences
     from golden_horse_spark.sources.documents import synthesize_documents
 
-    docs = synthesize_documents(spark, 100, seed=21, partitions=5)
-    sentences = documents_to_sentences(docs)
-    base = {tuple(r) for r in extract_mentions(sentences, weights_path).collect()}
-    dedup = {
-        tuple(r)
-        for r in extract_mentions_global_dedup(sentences, weights_path).collect()
-    }
-    assert dedup == base and len(base) > 0
+    documents_to_sentences(
+        synthesize_documents(spark, 100, seed=21, partitions=5)
+    ).write.parquet(str(path))
+    return spark.read.parquet(str(path))
 
 
 @pytest.mark.spark
 def test_global_dedup_equals_per_row_and_spreads_kernel(
-    spark, weights_path, tmp_path
+    spark, weights_path, model, tmp_path
 ):
-    """Corpus-free: on synthetic document sentences the dedup variant
-    equals ``extract_mentions`` row for row (as a multiset), and its
-    kernel stage runs ``spark.sql.shuffle.partitions`` tasks — AQE must
-    not coalesce the few hundred KB of distinct text into one task."""
-    from collections import Counter
-
-    from golden_horse_spark.operators.ner import extract_mentions_global_dedup
-    from golden_horse_spark.operators.sentence_seg import documents_to_sentences
-    from golden_horse_spark.sources.documents import synthesize_documents
-
-    # stored first, as the pipeline's sentences stage is, so the only
-    # MapInPandas in the measured jobs is the NER kernel
-    documents_to_sentences(
-        synthesize_documents(spark, 100, seed=21, partitions=5)
-    ).write.parquet(str(tmp_path / "sentences"))
-    sentences = spark.read.parquet(str(tmp_path / "sentences"))
-    base = Counter(
-        tuple(r) for r in extract_mentions(sentences, weights_path).collect()
-    )
+    """Corpus-free: on synthetic document sentences, whose texts repeat,
+    ``extract_mentions`` equals a per-row driver-side classify row for
+    row (as a multiset), and its kernel stage runs
+    ``spark.sql.shuffle.partitions`` tasks — AQE must not coalesce the
+    few hundred KB of distinct text into one task."""
+    sentences = _synthetic_sentences(spark, tmp_path / "sentences")
+    texts = [r["text"] for r in sentences.select("text").collect()]
+    assert len(set(texts)) < len(texts)  # the fan-out join has work to do
 
     sc = spark.sparkContext
     group = "ner-global-dedup-kernel"
     sc.setJobGroup(group, group, False)
     try:
-        dedup = Counter(
-            tuple(r)
-            for r in extract_mentions_global_dedup(
-                sentences, weights_path
-            ).collect()
+        got = Counter(
+            tuple(r) for r in extract_mentions(sentences, weights_path).collect()
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert dedup == base and len(base) > 0
+    ref = _driver_mentions(model, sentences)
+    assert got == ref and len(ref) > 0
 
     tracker = sc.statusTracker()
     store = sc._jsc.sc().statusStore()
@@ -116,6 +108,22 @@ def test_global_dedup_equals_per_row_and_spreads_kernel(
                 kernel_tasks.append(info.numTasks)
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert kernel_tasks == [n]
+
+
+@pytest.mark.spark
+def test_mentions_exact_under_hash_collisions(
+    spark, weights_path, model, tmp_path, monkeypatch
+):
+    """The fan-out join is keyed on the text itself: with every 64-bit
+    text hash forced to one value, each sentence still gets the spans of
+    its own text, not those of another text with the same hash."""
+    sentences = _synthetic_sentences(spark, tmp_path / "sentences")
+    monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(0).cast("bigint"))
+    got = Counter(
+        tuple(r) for r in extract_mentions(sentences, weights_path).collect()
+    )
+    ref = _driver_mentions(model, sentences)
+    assert got == ref and len(ref) > 0
 
 
 @needs_dev

@@ -11,8 +11,6 @@ from golden_horse_spark.operators.normalize import (
     is_number,
     q2b,
     q2b_col,
-    rewrite_urls,
-    rewrite_urls_col,
 )
 from golden_horse_spark.sources.gazetteer import gazetteer_match_spans
 
@@ -39,21 +37,13 @@ def test_unicode_predicates():
     assert is_alphabet("Q") and not is_alphabet("中")
 
 
-def test_url_rewrite():
-    assert rewrite_urls("see http://t.cn/abc123 now") == "see URL now"
-    assert rewrite_urls("no links") == "no links"
-
-
 @pytest.mark.spark
 def test_column_forms_agree_with_python(spark):
     samples = ["ＡＢＣ，１２３", "中文 abc", "http://x.co/y z", "一年3月"]
     df = spark.createDataFrame([(s,) for s in samples], "t string")
-    rows = df.select(
-        "t", q2b_col(F.col("t")).alias("q"), rewrite_urls_col(F.col("t")).alias("u")
-    ).collect()
+    rows = df.select("t", q2b_col(F.col("t")).alias("q")).collect()
     for r in rows:
         assert r["q"] == q2b(r["t"])
-        assert r["u"] == rewrite_urls(r["t"])
     chars = list("，3一年x中□Ａ")
     cdf = spark.createDataFrame([(c,) for c in chars], "c string")
     got = {r["c"]: r["k"] for r in cdf.select("c", char_class_col(F.col("c")).alias("k")).collect()}
