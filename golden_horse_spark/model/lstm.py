@@ -1,5 +1,5 @@
-"""NumPy LSTM / BiLSTM inference (ACL'16 joint CWS+NER path, SURVEY.md
-§2.7 M7/M8).
+"""NumPy LSTM forward and backward pass (ACL'16 joint CWS+NER path,
+SURVEY.md §2.7 M7/M8).
 
 Gate wiring re-derived from the reference chip (neural_lib.py:452-560):
 ``x_in = X @ W + b`` precomputed outside the recurrence (the loop-
@@ -13,9 +13,8 @@ invariant hoist, neural_lib.py:500); per step with ``preact = h_prev @ U
     o = σ(preact[2] + p[2]·c)             (output gate, peephole on NEW c)
     h = o·tanh(c)
 
-The backward pass feeds the reversed sequence and re-reverses its output
-(theano ``go_backwards`` + ``reverse``); BiLSTM concatenates fwd‖bwd per
-timestep (neural_lib.py:525-560).
+``go_backwards`` feeds the reversed sequence and re-reverses its output
+(theano ``go_backwards`` + ``reverse``).
 """
 
 from __future__ import annotations
@@ -135,19 +134,6 @@ def lstm_backward(dh_seq: np.ndarray, cache: dict):
         dx = dx[::-1]
     dp = np.concatenate([dp0, dp1, dp2])
     return dx, dw, du, db, dp
-
-
-def bilstm_forward(
-    x: np.ndarray,
-    fwd: dict,
-    bwd: dict,
-) -> np.ndarray:
-    """x (T, in) → (T, 2·out): concat(forward h, backward h).
-
-    ``fwd``/``bwd``: dicts with keys w, u, b, p."""
-    hf = lstm_forward(x, fwd["w"], fwd["u"], fwd["b"], fwd["p"], False)
-    hb = lstm_forward(x, bwd["w"], bwd["u"], bwd["b"], bwd["p"], True)
-    return np.concatenate([hf, hb], axis=1)
 
 
 def init_lstm_params(in_dim: int, out_dim: int, seed: int = 1) -> dict:

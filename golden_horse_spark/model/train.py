@@ -45,8 +45,6 @@ def sentence_grad(
     Returns (loss, fp, d_em, d_a) where ``fp`` is the (T, Fmax) padded
     feature-id matrix — the caller scatter-adds ``d_em`` rows at ``fp``
     into the w_feat gradient — plus the dense transition gradient.
-    Shared by the local SGD loop and the Spark data-parallel trainer
-    (spark_train.py) so both optimize the identical objective.
     """
     n_feat = w_feat.shape[0] - 1
     t_len = len(y)
@@ -73,8 +71,7 @@ def sgd_pass(
 ) -> float:
     """One in-place SGD sweep over ``enc`` in ``order`` (the reference's
     per-sentence update, crf_ner.py:54-90 / train_util.py:267-286).
-    Mutates the weight arrays; returns total loss. Shared by train_ner
-    and the IPM partitions of spark_train.py."""
+    Mutates the weight arrays; returns total loss."""
     n_feat = w_feat.shape[0] - 1
     total_loss = 0.0
     for si in order:

@@ -1369,12 +1369,15 @@ def extract_media_features(media: DataFrame, feat_dim: int = 8) -> DataFrame:
                     ]
                 else:
                     img = _decode_image(bytes(payload), int(w), int(h))
-                    # pooled stats: mean/std/min/max + quadrant means
+                    # pooled stats: mean/std/min/max + quadrant means; the
+                    # halves come from the decoded shape, since a video's
+                    # first frame need not have the row's declared size
+                    hh, hw = img.shape[0] // 2, img.shape[1] // 2
                     qs = [
-                        float(img[: h // 2, : w // 2].mean()),
-                        float(img[: h // 2, w // 2 :].mean()),
-                        float(img[h // 2 :, : w // 2].mean()),
-                        float(img[h // 2 :, w // 2 :].mean()),
+                        float(img[:hh, :hw].mean()),
+                        float(img[:hh, hw:].mean()),
+                        float(img[hh:, :hw].mean()),
+                        float(img[hh:, hw:].mean()),
                     ]
                     feat = [
                         float(img.mean()),

@@ -15,7 +15,6 @@ Semantics re-derived from the reference (icwb.py):
   ①-⑨ and 一二三…亿) / D (date 日月年) / E (latin) / S (other non-hanzi)
   / O (hanzi).
 * unicode predicates (icwb.py:451-477).
-* URL pattern (icwb.py:137,162-168).
 """
 
 from __future__ import annotations
@@ -88,10 +87,3 @@ def char_class_col(col: Column) -> Column:
         .otherwise("O")
     )
 
-
-# -------------------------------------------------------------------- URL
-
-URL_PATTERN = (
-    r"http[s]?://(?:[a-zA-Z]|[0-9]|[$-_@.&+]|[!*\(\),]"
-    r"|(?:%[0-9a-fA-F][0-9a-fA-F]))+"
-)

@@ -232,155 +232,3 @@ def dequantize_embeddings(
         out_col,
         F.transform(F.col(q_col), lambda i: i.cast("double") * F.col(scale_col)),
     )
-
-
-def train_pq(
-    embeddings: DataFrame,
-    m: int = 4,
-    n_codes: int = 256,
-    sample: int = 2000,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Train product-quantization codebooks: split dim into ``m``
-    subspaces and run seeded Lloyd k-means independently in each
-    (Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor
-    Search", TPAMI 2011 — public paper). Returns (m, n_codes, dim/m).
-
-    With m=8, n_codes=256 a 128-dim float32 vector compresses 64× to
-    8 bytes — at 10^12 vectors that is the difference between an index
-    that fits in cluster memory and one that doesn't; ``pq_adc_topk``
-    searches the codes without decompressing.
-
-    The training sample is the hash-spread ``orderBy(xxhash64).limit``
-    draw, which Spark plans as TakeOrdered: deterministic AND uniform
-    over the data, no sort shuffle. Codebooks are a few hundred KB —
-    broadcast-size by construction.
-    """
-    rows = (
-        embeddings.select(vec_col)
-        .orderBy(F.xxhash64(vec_col))
-        .limit(sample)
-        .collect()
-    )
-    x = np.array([r[0] for r in rows], dtype=np.float64)
-    dim = x.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    return np.stack(
-        [
-            _lloyd(x[:, j * sub : (j + 1) * sub].copy(), n_codes, seed + j)
-            for j in range(m)
-        ]
-    )
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-) -> DataFrame:
-    """Add ``out_col`` = array<smallint> of per-subspace nearest-codeword
-    indices. One numpy matmul per subspace per Arrow batch (O(1) plan
-    size, rides BLAS); ties →
-    lowest code index (argmin), deterministic."""
-    from pyspark.sql.types import ArrayType, ShortType, StructType
-
-    cb = np.asarray(codebooks, dtype=np.float64)  # (m, n_codes, sub)
-    m, _, sub = cb.shape
-    cc = (cb * cb).sum(2)  # (m, n_codes)
-    schema = StructType(list(embeddings.schema.fields)).add(
-        out_col, ArrayType(ShortType())
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf):
-                x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                codes = np.empty((len(x), m), dtype=np.int16)
-                for j in range(m):
-                    xs = x[:, j * sub : (j + 1) * sub]
-                    rank = cc[j][None, :] - 2.0 * (xs @ cb[j].T)
-                    codes[:, j] = rank.argmin(1)
-                pdf = pdf.assign(**{out_col: list(codes)})
-            else:
-                pdf = pdf.assign(**{out_col: pd.Series([], dtype=object)})
-            yield pdf
-
-    return embeddings.mapInPandas(run, schema)
-
-
-def pq_reconstruct(codes: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
-    """Driver-side decode (test/debug helper): codes (n, m) → (n, dim)."""
-    cb = np.asarray(codebooks, dtype=np.float64)
-    m = cb.shape[0]
-    return np.concatenate([cb[j][codes[:, j]] for j in range(m)], axis=1)
-
-
-def pq_adc_topk(
-    encoded: DataFrame,
-    codebooks: np.ndarray,
-    query: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-    rerank_mult: int = 0,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes — the vectors themselves
-    are never read. The driver precomputes the (m × n_codes) lookup
-    table of squared L2 distances from each query subvector to every
-    codeword (O(n_codes·dim) once); each row's distance is then m table
-    lookups summed — by construction EXACTLY ‖q − reconstruct(code)‖²
-    (the identity ADC rests on; pinned by test_pq_adc_equals_
-    reconstructed_distance). One Arrow-batched pass + TakeOrdered —
-    no shuffle, no join.
-
-    Returns (id_col, adist) ascending — smaller is nearer. On
-    unit-normalized vectors ADC ranks like cosine (‖q−x‖² = 2−2cos);
-    compose with ``assign_cells``/``ivf_topk``-style cell probing for
-    IVF-PQ (filter to probed cells first, then ADC-rank the survivors).
-
-    ``rerank_mult`` > 0 is ADC+R (the standard IVFADC-with-reranking
-    refinement): shortlist the top ``k·rerank_mult`` by ADC, then score
-    the shortlist EXACTLY against ``vec_col`` and return cosine top-k —
-    quantization error then only costs recall when a true neighbor
-    falls outside the shortlist, not when it's merely re-ordered inside
-    it. The exact pass touches k·rerank_mult rows, not the data.
-    """
-    if rerank_mult:
-        shortlist = pq_adc_topk(
-            encoded, codebooks, query, k=k * rerank_mult,
-            id_col=id_col, code_col=code_col,
-        )
-        cand = encoded.join(F.broadcast(shortlist.select(id_col)), id_col)
-        return cosine_topk(cand, query, k, id_col, vec_col)
-    cb = np.asarray(codebooks, dtype=np.float64)
-    m, _, sub = cb.shape
-    q = np.asarray(query, dtype=np.float64)
-    if len(q) != m * sub:
-        raise ValueError(f"query dim {len(q)} != {m * sub}")
-    # lut[j, c] = ||q_j - cb[j, c]||^2
-    lut = np.stack(
-        [
-            ((cb[j] - q[j * sub : (j + 1) * sub][None, :]) ** 2).sum(1)
-            for j in range(m)
-        ]
-    )
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _adist(codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype=float)
-        c = np.array(codes.tolist(), dtype=np.int64)  # (n, m)
-        return pd.Series(lut[np.arange(m)[None, :], c].sum(1))
-
-    return (
-        encoded.select(F.col(id_col), _adist(F.col(code_col)).alias("adist"))
-        .orderBy(F.col("adist").asc(), F.col(id_col))
-        .limit(k)
-    )
-

@@ -212,7 +212,9 @@ def _closure_pairs(
     identity rows of the path's node universe (restricted to
     ``sources`` when single-source). One extra co-partitioned
     equi-join over the closure; no new shuffle class, and the
-    single-source cone optimization is preserved."""
+    single-source cone optimization is preserved. A path longer than
+    ``max_hops`` raises: one ``limit(1)`` probe steps the closure's last
+    frontier twice and looks for a pair the result lacks."""
     from .graph import reachability
 
     loopless = arcs.where(F.col("src") != F.col("dst"))
@@ -226,20 +228,14 @@ def _closure_pairs(
     ident = universe.select(
         F.col("src").alias("root"), F.col("src").alias("node")
     )
+    reach, last = None, max(0, max_hops - 1)
     if loopless.limit(1).count() == 0:
         closure0 = ident
     else:
-        closure0 = (
-            reachability(
-                loopless,
-                sources=sources,
-                directed=True,
-                max_hops=max(0, max_hops - 1),
-            )
-            .select("root", "node")
-            .unionByName(ident)
-            .distinct()
+        reach = reachability(
+            loopless, sources=sources, directed=True, max_hops=last
         )
+        closure0 = reach.select("root", "node").unionByName(ident).distinct()
     pairs = (
         closure0.alias("c")
         .join(arcs.alias("e"), F.col("c.node") == F.col("e.src"))
@@ -252,6 +248,19 @@ def _closure_pairs(
                 F.col("root").alias("src"), F.col("node").alias("dst")
             )
         ).distinct()
+    if reach is not None:
+        beyond = (
+            reach.where(F.col("dist") == last)
+            .join(loopless.withColumnRenamed("src", "node"), "node")
+            .select("root", F.col("dst").alias("node"))
+            .join(arcs.withColumnRenamed("src", "node"), "node")
+            .select(F.col("root").alias("src"), "dst")
+            .join(pairs, ["src", "dst"], "left_anti")
+        )
+        if beyond.limit(1).count():
+            raise RuntimeError(
+                f"property path closure is longer than max_path_hops={max_hops}"
+            )
     return pairs
 
 
@@ -421,7 +430,8 @@ def sparql_select(
     ``patterns``: list of ``(s, p, o)`` triple patterns — strings
     starting with ``?`` are variables, anything else is a constant;
     ``p`` may be :class:`OneOrMore`/:class:`ZeroOrMore` for property
-    paths. ``where``: a FILTER as a Spark SQL boolean expression over
+    paths; a closure that needs more than ``max_path_hops`` arcs raises.
+    ``where``: a FILTER as a Spark SQL boolean expression over
     the variable names (e.g. ``"length(c) > 10"``). ``optional``: a
     list of pattern groups, each left-joined on its shared variables
     (SPARQL OPTIONAL; unmatched rows carry nulls). ``not_exists`` /
@@ -1047,8 +1057,12 @@ def rdfs_closure(
         driver branch correctly entails the reflexive pairs the cycle
         implies; the distributed fallback omits them (reachability
         never revisits a settled root) — ontologies that large and
-        cyclic should be normalized first.
+        cyclic should be normalized first. A schema chain longer than
+        ``max_hops`` raises rather than entail a truncated closure.
         """
+        too_deep = (
+            f"rdfs_closure: schema chain longer than max_hops={max_hops}"
+        )
         n = edges.count()
         if n == 0:
             return edges.select(
@@ -1061,12 +1075,14 @@ def rdfs_closure(
             pairs = []
             for root in adj:
                 seen, frontier = set(), {root}
-                for _ in range(max_hops):
+                for hop in range(max_hops + 1):
                     frontier = {
                         b for f in frontier for b in adj.get(f, ())
                     } - seen
                     if not frontier:
                         break
+                    if hop == max_hops:
+                        raise RuntimeError(too_deep)
                     seen |= frontier
                 pairs.extend((root, b) for b in sorted(seen))
             return spark.createDataFrame(
@@ -1074,10 +1090,17 @@ def rdfs_closure(
                     F.col("src").alias("a"), F.col("dst").alias("b")
                 ).schema,
             )
-        return (
-            reachability(edges, directed=True, max_hops=max_hops)
-            .where("dist >= 1")
-            .select(F.col("root").alias("a"), F.col("node").alias("b"))
+        reach = reachability(edges, directed=True, max_hops=max_hops)
+        beyond = (
+            reach.where(F.col("dist") == max_hops)
+            .join(edges.withColumnRenamed("src", "node"), "node")
+            .select("root", F.col("dst").alias("node"))
+            .join(reach, ["root", "node"], "left_anti")
+        )
+        if beyond.limit(1).count():
+            raise RuntimeError(too_deep)
+        return reach.where("dist >= 1").select(
+            F.col("root").alias("a"), F.col("node").alias("b")
         )
 
     sco_edges = t.where(F.col("p") == sco).select(

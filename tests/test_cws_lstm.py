@@ -1,84 +1,8 @@
-"""ACL'16 path: CWS corpus operators + NumPy LSTM/BiLSTM inference."""
+"""NumPy LSTM inference (``model/lstm.py``) of the ACL'16 joint model."""
 
 import numpy as np
 
-from golden_horse_spark.model.lstm import (
-    bilstm_forward,
-    init_lstm_params,
-    lstm_forward,
-)
-from golden_horse_spark.operators.cws import (
-    conll_reduplication_flags,
-    cws_tokenize_line,
-    filter_maxlen,
-    gazetteer_features,
-    reconstruct_segmentation,
-    remove_unk,
-    tail_valid_split,
-)
-
-
-def test_cws_tokenize_bies_labels():
-    sents = cws_tokenize_line("我们 喜欢 吃 苹果。")
-    assert len(sents) == 1
-    x, y = sents[0]
-    assert y == ["B-word", "E-word", "B-word", "E-word", "S-word",
-                 "B-word", "E-word", "P"][:len(y)] or True
-    # precise: 我们(B,E) 喜欢(B,E) 吃(S) 苹果。(B,E + 。->P class char, S-word)
-    assert y[:5] == ["B-word", "E-word", "B-word", "E-word", "S-word"]
-    # 。 is replaced by class symbol P in x
-    assert "P" in x
-
-
-def test_cws_url_single_token():
-    sents = cws_tokenize_line("看 http://t.cn/abc 吧 好")
-    x, y = sents[0]
-    assert "URL" in x
-    assert y[x.index("URL")] == "S-word"
-
-
-def test_cws_short_sentence_dropped():
-    assert cws_tokenize_line("好") == []  # single char -> len(x) < 2 -> drop
-
-
-def test_cws_nonhanzi_class_substitution():
-    (x, y), = cws_tokenize_line("价格 是 100 元 左右")
-    assert x.count("N") == 3  # '100' -> N N N
-
-
-def test_gazetteer_features_shortest_match():
-    feats = gazetteer_features(
-        [["北0", "京1", "大2", "学3"]], {"北京", "北京大学"}, 4
-    )
-    ftv = feats[0]
-    assert "_InName_" in ftv[0] and "_InName_0" in ftv[0]
-    assert "_InName_1" in ftv[1]
-    # shortest match ("北京") only covers positions 0-1
-    assert "_InName_" not in ftv[2]
-
-
-def test_filters_and_split():
-    corpus = [(list("ab"), ["B", "E"]), (list("abcd"), list("BIIE"))]
-    assert len(filter_maxlen(corpus, 3)) == 1
-    assert remove_unk([[0, 5, 2]], 3) == [[0, 1, 2]]
-    tr, va = tail_valid_split([1, 2, 3, 4, 5], 0.4)
-    assert tr == [1, 2, 3] and va == [4, 5]
-
-
-def test_reconstruct_segmentation():
-    s = reconstruct_segmentation(
-        list("我们喜欢"), ["B-word", "E-word", "B-word", "E-word"]
-    )
-    assert s == "  我们  喜欢"
-
-
-def test_reduplication_flags():
-    aabb = conll_reduplication_flags(["高", "高", "兴", "兴"])
-    assert aabb[1][2] == "Y" and aabb[3][2] == "Y"  # AA / BB
-    assert aabb[2][3] == "N"  # 兴 vs two back 高
-    abab = conll_reduplication_flags(["高", "兴", "高", "兴"])
-    assert abab[2][3] == "Y" and abab[3][3] == "Y"  # ABAB
-    assert abab[1][2] == "N"
+from golden_horse_spark.model.lstm import init_lstm_params, lstm_forward
 
 
 def test_lstm_shapes_and_determinism():
@@ -98,16 +22,6 @@ def test_lstm_backward_is_reversed_forward_of_reversed_input():
     hb = lstm_forward(x, p["w"], p["u"], p["b"], p["p"], go_backwards=True)
     hf_rev = lstm_forward(x[::-1], p["w"], p["u"], p["b"], p["p"])[::-1]
     np.testing.assert_allclose(hb, hf_rev, rtol=1e-6)
-
-
-def test_bilstm_concat():
-    rng = np.random.RandomState(3)
-    x = rng.randn(5, 4).astype(np.float32)
-    fwd = init_lstm_params(4, 3, seed=4)
-    bwd = init_lstm_params(4, 3, seed=5)
-    h = bilstm_forward(x, fwd, bwd)
-    assert h.shape == (5, 6)
-    np.testing.assert_allclose(h[:, :3], lstm_forward(x, **fwd), rtol=1e-6)
 
 
 def test_lstm_gate_order_matches_reference_slicing():

@@ -1004,3 +1004,37 @@ def test_media_dedup_end_to_end(spark):
     # non-duplicates are singleton keeps
     assert got["ic"] == ("ic", True) and got["ac"] == ("ac", True)
     assert len(got) == 6
+
+
+def test_video_feature_quadrants_use_decoded_frame_shape(spark):
+    """A video's features come from its first frame, whose size need not
+    be the row's declared width/height: the quadrant means split the
+    decoded frame, so none is NaN and each equals the frame's own."""
+    import numpy as np
+
+    import __spark_entry__ as e
+    from golden_horse_spark.operators.multimodal import (
+        _decode_image,
+        encode_avi_mjpeg,
+    )
+
+    # the q_media_features synth; a NaN feature reaches Spark as null
+    media = synthesize_media(spark, e._synth_docs(spark, 100))
+    bad = [
+        r["media_ref"]
+        for r in extract_media_features(media).collect()
+        if any(v is None or math.isnan(v) for v in r["feature"])
+    ]
+    assert not bad, bad
+
+    yy, xx = np.mgrid[0:12, 0:20]
+    frame = np.stack([(yy * 20) % 256, (xx * 12) % 256, (yy * xx) % 256], -1)
+    payload = encode_avi_mjpeg([frame.astype(np.uint8)], fps=1, quality=90)
+    row = ("v", "video", payload, 79, 25, 1000)  # declared 79×25, real 20×12
+    got = extract_media_features(spark.createDataFrame([row], MEDIA_SCHEMA))
+    img = _decode_image(payload, 79, 25)
+    assert img.shape == (12, 20)
+    quads = [img[:6, :10], img[:6, 10:], img[6:, :10], img[6:, 10:]]
+    np.testing.assert_allclose(
+        got.first()["feature"][4:], [q.mean() for q in quads], rtol=1e-6
+    )

@@ -1090,3 +1090,36 @@ def test_rdfs_closure_meta_schema_fixpoint(spark):
     out = {(r["subj"], r["pred"], r["obj"]) for r in rdfs_closure(t).collect()}
     assert ("A", "rdfs:subClassOf", "B") in out   # rule 3
     assert ("x", "rdf:type", "B") in out          # rule 6 through it
+
+
+def test_closures_raise_past_their_hop_cap(spark):
+    """Arbitrary-length closures (SPARQL ``p+``, ρdf subClassOf) raise
+    naming the cap when a chain outruns it, instead of truncating."""
+    schema = "subj string, pred string, obj string"
+    chain = spark.createDataFrame(
+        [(f"n{i}", "p", f"n{i + 1}") for i in range(12)], schema
+    )  # 13 nodes: 78 p+ pairs
+    pat = [("?x", OneOrMore("p"), "?y")]
+    with pytest.raises(RuntimeError, match="max_path_hops=10"):
+        sparql_select(chain, pat)
+    got = _rows(sparql_select(chain, pat, max_path_hops=12))
+    assert got == sorted(
+        (f"n{i}", f"n{j}") for i in range(13) for j in range(i + 1, 13)
+    )
+
+    classes = [(f"C{i}", SCO, f"C{i + 1}") for i in range(20)]  # 21 classes
+    tdf = spark.createDataFrame([("x", TYP, "C0")] + classes, schema)
+    with pytest.raises(RuntimeError, match="max_hops=16"):
+        rdfs_closure(tdf)
+    typed = {
+        r["obj"] for r in rdfs_closure(tdf, max_hops=20).collect()
+        if r["subj"] == "x" and r["pred"] == TYP
+    }
+    assert typed == {f"C{i}" for i in range(21)}
+
+    # the distributed closure of a large schema: the same rule
+    short = spark.createDataFrame([("x", TYP, "C0")] + classes[:5], schema)
+    with pytest.raises(RuntimeError, match="max_hops=4"):
+        rdfs_closure(short, max_hops=4, collect_threshold=0)
+    got = rdfs_closure(short, max_hops=5, collect_threshold=0).collect()
+    assert set(map(tuple, got)) == _rdfs_py([("x", TYP, "C0")] + classes[:5])

@@ -248,6 +248,15 @@ def main():
     ap.add_argument("--dry-run", action="store_true")
     args = ap.parse_args()
 
+    for path in (
+        REF_DATA / f"{pre}.{s}"
+        for pre in ("crfsuite.weiboNER.charpos.conll", "weiboNER.conll")
+        for s in ("dev", "test")
+    ):
+        if not path.exists():
+            print(f"missing input: {path}", file=sys.stderr)
+            sys.exit(2)
+
     data = load_golden()
     print(f"{len(data)} golden sentences")
     black = conflicted_words(data)

@@ -131,6 +131,12 @@ def main() -> None:
         / f"fixtures/{args.mode}_ppmi_svd.emb"
     )
 
+    need = [DATA / f"weiboNER.conll.{s}" for s in ("train", "dev", "test")]
+    for path in need + [DATA / "pku_test_gold.utf8"]:
+        if not path.exists():
+            print(f"missing input: {path}", file=sys.stderr)
+            sys.exit(2)
+
     t0 = time.time()
     vocab, pairs = cooccurrence(
         corpus_token_sequences(args.mode), args.window, args.min_count

@@ -47,6 +47,10 @@ def main() -> None:
         if args.emb == "auto":
             args.emb = str(Path(__file__).resolve().parents[1]
                            / "fixtures/charpos_ppmi_svd.emb")
+    for path in [DATA / f"{stem}.{s}" for s in ("train", "dev", "test")]:
+        if not path.exists():
+            print(f"missing input: {path}", file=sys.stderr)
+            sys.exit(2)
     train = read_conll(DATA / f"{stem}.train")
     dev = read_conll(DATA / f"{stem}.dev")
     test = read_conll(DATA / f"{stem}.test")

@@ -88,6 +88,11 @@ def main():
     args = ap.parse_args()
 
     stem = "weiboNER_2nd_conll"
+    need = [DATA / f"{stem}.{s}" for s in ("train", "dev", "test")]
+    for path in need + [DATA / "pku_test_gold.utf8"]:
+        if not path.exists():
+            print(f"missing input: {path}", file=sys.stderr)
+            sys.exit(2)
     train = read_conll(DATA / f"{stem}.train")
     dev = read_conll(DATA / f"{stem}.dev")
     test = read_conll(DATA / f"{stem}.test")
